@@ -201,6 +201,24 @@ def test_embedding_neardup_lsh_recall_and_precision(spark, emb):
     assert recall >= 0.7, f"embedding LSH recall {recall:.2f}"
 
 
+def test_multitable_bucket_sketch_needs_no_extra_seed(spark, emb):
+    """``sketch_planes > 0`` with only the default ``seed``: the sketch
+    is the single-table ``sketch_planes``-plane signature of the
+    ``seed + 104729`` hyperplane stream, the one the d11 candidate
+    prune reads."""
+    from traffic_forecast_etl_spark.operators.similarity import (
+        multitable_bucket_entries,
+    )
+
+    entries = multitable_bucket_entries(emb, "vec_id", "embedding", sketch_planes=64)
+    sk = {r["vec_id"]: r["__sk"] for r in entries.filter(F.col("__tab") == 0).collect()}
+    alone = multitable_bucket_entries(
+        emb, "vec_id", "embedding", n_planes=64, n_tables=1, seed=42 + 104729
+    )
+    assert sk == {r["vec_id"]: r["lsh_bucket"] for r in alone.collect()}
+    assert len(sk) == emb.count()
+
+
 def test_auto_lsh_params_scaling_law():
     """auto_lsh_params must grow planes with log2(n) (so expected
     candidate count stays ~n^(1+rho), never quadratic), re-amplify
@@ -767,6 +785,26 @@ def test_ann_index_recall_and_exact_cosines(spark, emb, exact, ann_path):
         e = exact_cos.get((r.vec_id, r.neighbor_id))
         if e is not None:
             assert abs(r.cosine - e) < 1e-6
+
+
+def test_ann_index_search_matches_inline_ivf_pq(spark, emb, ann_path):
+    """The persisted index and the inline ``ivf_pq_topk`` share one
+    routing, ADC and refine path: on a freshly built index at the same
+    settings they return exactly the same rows."""
+    from traffic_forecast_etl_spark.operators import ann_index as AI
+    from traffic_forecast_etl_spark.operators.similarity import ivf_pq_topk
+
+    queries = emb.filter(F.col("vec_id") < 10)
+    inline = ivf_pq_topk(
+        emb, queries, "vec_id", "vec_id", "embedding",
+        k=5, n_centroids=8, nprobe=6, m=8, refine=16,
+    )
+    persisted = AI.ann_index_search(
+        spark, queries, ann_path, k=5, nprobe=6, refine=16
+    )
+    got = sorted(map(tuple, persisted.collect()))
+    assert len(got) == 50
+    assert got == sorted(map(tuple, inline.collect()))
 
 
 def test_ann_index_partition_pruned_lists(spark, emb, ann_path):

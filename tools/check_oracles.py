@@ -85,7 +85,10 @@ def main() -> int:
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            print(
+                f"rows  {name}: {len(srows)} rows (no oracle) "
+                f"hash={value_hash(srows)} [{time.time()-t0:.1f}s]"
+            )
             n_rowsonly += 1
             continue
         try:

@@ -1,10 +1,14 @@
 """Persistent, incrementally-maintained ANN index — IVF-PQ on the
 snapshot table format.
 
-:func:`similarity.ivf_pq_topk` builds its index inline per call; a
-production corpus builds ONCE and serves many query batches while new
-embeddings stream in. This module persists the index as two artifacts
-under one directory:
+:func:`similarity.ivf_pq_topk` and :func:`ann_index_search` share one
+search path: the IVF routing (``_route``), the ADC kernel
+(``_adc_shortlist``) and the exact-cosine refine + top-k tail
+(``_rank_topk``) of :mod:`.similarity`. They differ only in where the
+inverted lists come from: the former builds them inline per call, this
+module builds them ONCE and persists them, so a production corpus
+serves many query batches while new embeddings stream in. The index is
+two artifacts under one directory:
 
 - ``<path>/model.json`` — the frozen quantizers: IVF centroids
   (k × d) + PQ codebooks (m × 2^nbits × d/m), KBs-MBs, written
@@ -52,12 +56,20 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tablefmt as TF
 from ..sinks import acquire_writer_lease, release_writer_lease
-from .similarity import _dot, _norm, pq_encode, pq_train, ivf_assign
+from .similarity import (
+    _adc_shortlist,
+    _doubles,
+    _index_rows,
+    _rank_topk,
+    _route,
+    ivf_assign,
+    pq_train,
+)
 
 try:  # pragma: no cover
     import numpy as np
@@ -98,27 +110,53 @@ def _model_for_version(path: str, codes_version: int) -> dict:
         return json.load(f)
 
 
-def _index_rows(
+def _write_epoch(
     spark: SparkSession,
+    path: str,
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    assigned: DataFrame,
-    books: list,
-) -> DataFrame:
-    """(id, centroid_id, pq_code, vector) rows for the codes table."""
-    codes = pq_encode(df, vec_col, id_col, books).withColumnRenamed(
-        id_col, "__eid"
+    n_centroids: int,
+    m: int,
+    nbits: int,
+    seed: int,
+    sample_rows: int,
+) -> int:
+    """Train quantizers on ``df``, encode it, and commit the result as
+    the next codes version (a full overwrite) with its model. The
+    versioned model lands BEFORE the codes commit (a stray model.v
+    file for a never-committed version is inert), the current-model
+    swap after — search resolves through the versioned file, so every
+    crash window reads consistently. Callers that race other writers
+    hold the index writer lease."""
+    books = pq_train(df, vec_col, m=m, nbits=nbits, sample_rows=sample_rows, seed=seed)
+    assigned, cent = ivf_assign(df, vec_col, id_col, n_centroids, seed=seed)
+    rows = _index_rows(df, id_col, vec_col, assigned, books)
+    os.makedirs(path, exist_ok=True)
+    model = {
+        "m": m,
+        "nbits": nbits,
+        "n_centroids": n_centroids,
+        "dim": int(len(books) * books[0].shape[1]),
+        "seed": seed,
+        "codebooks": [[list(map(float, row)) for row in b] for b in books],
+        "centroids": [
+            [float(x) for x in r["centroid"]]
+            for r in cent.orderBy("centroid_id").collect()
+        ],
+    }
+    cpath = _codes_path(path)
+    cur = TF.current_version(cpath)
+    v_pred = 0 if cur is None else cur + 1
+    TF._atomic_write_json(os.path.join(path, f"model.v{v_pred}.json"), model)
+    v = TF.snapshot_write(
+        spark, rows, cpath,
+        partition_spec=[("identity", "centroid_id")],
+        stats_cols=["id"],
     )
-    return (
-        assigned.join(codes, F.col("__cid") == F.col("__eid"))
-        .select(
-            F.col("__cid").alias("id"),
-            F.col("centroid_id").cast("int").alias("centroid_id"),
-            "pq_code",
-            F.col("__cv").alias("vector"),
-        )
-    )
+    assert v == v_pred, f"codes version raced: {v} != {v_pred}"
+    TF._atomic_write_json(os.path.join(path, _MODEL_NAME), model)
+    return v
 
 
 def ann_index_build(
@@ -136,38 +174,9 @@ def ann_index_build(
     """Train quantizers on ``corpus``, encode it, and persist the
     index. Returns the codes table's version (0). Overwrites any
     existing index at ``path``."""
-    books = pq_train(corpus, vec_col, m=m, nbits=nbits,
-                     sample_rows=sample_rows, seed=seed)
-    assigned, cent = ivf_assign(corpus, vec_col, id_col, n_centroids, seed=seed)
-    rows = _index_rows(spark, corpus, id_col, vec_col, assigned, books)
-    os.makedirs(path, exist_ok=True)
-    model = {
-        "m": m,
-        "nbits": nbits,
-        "n_centroids": n_centroids,
-        "dim": int(len(books) * books[0].shape[1]),
-        "seed": seed,
-        "codebooks": [[list(map(float, row)) for row in b] for b in books],
-        "centroids": [
-            [float(x) for x in r["centroid"]]
-            for r in cent.orderBy("centroid_id").collect()
-        ],
-    }
-    # the versioned model lands BEFORE the codes commit (a stray
-    # model.v file for a never-committed version is inert), the
-    # current-model swap after — search resolves through the
-    # versioned file, so every crash window reads consistently
-    _cur = TF.current_version(_codes_path(path))
-    v_pred = 0 if _cur is None else _cur + 1
-    TF._atomic_write_json(os.path.join(path, f"model.v{v_pred}.json"), model)
-    v = TF.snapshot_write(
-        spark, rows, _codes_path(path),
-        partition_spec=[("identity", "centroid_id")],
-        stats_cols=["id"],
+    return _write_epoch(
+        spark, path, corpus, id_col, vec_col, n_centroids, m, nbits, seed, sample_rows
     )
-    assert v == v_pred, f"codes version raced: {v} != {v_pred}"
-    TF._atomic_write_json(os.path.join(path, _MODEL_NAME), model)
-    return v
 
 
 def _cent_df(spark: SparkSession, model: dict) -> DataFrame:
@@ -180,25 +189,11 @@ def _cent_df(spark: SparkSession, model: dict) -> DataFrame:
 def _assign_frozen(
     df: DataFrame, id_col: str, vec_col: str, cent: DataFrame
 ) -> DataFrame:
-    """Nearest-centroid assignment against the FROZEN model: one
-    broadcast cross-score + per-id top-1 (the query-routing shape) —
-    new vectors never retrain anything."""
-    c = df.select(
-        F.col(id_col).alias("__cid"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__cv"),
-    )
-    scored = c.crossJoin(F.broadcast(cent)).withColumn(
-        "__sim",
-        _dot(F.col("__cv"), F.col("centroid"))
-        / (_norm(F.col("__cv")) * _norm(F.col("centroid"))),
-    )
-    w = Window.partitionBy("__cid").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id").asc()
-    )
-    return (
-        scored.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .select("__cid", "__cv", "centroid_id")
+    """Nearest-centroid assignment against the FROZEN model: the query
+    routing with ``nprobe=1`` — new vectors never retrain anything."""
+    c = df.select(F.col(id_col).alias("__qid"), _doubles(vec_col).alias("__qv"))
+    return _route(c, cent, 1).select(
+        F.col("__qid").alias("__cid"), F.col("__qv").alias("__cv"), "centroid_id"
     )
 
 
@@ -235,7 +230,7 @@ def ann_index_append(
         assigned = _assign_frozen(
             new_df, id_col, vec_col, _cent_df(spark, model)
         )
-        rows = _index_rows(spark, new_df, id_col, vec_col, assigned, books)
+        rows = _index_rows(new_df, id_col, vec_col, assigned, books)
         if mode == "append":
             return TF.snapshot_write(
                 spark, rows, _codes_path(path), mode="append",
@@ -284,39 +279,12 @@ def ann_index_recluster(
         m = m or old["m"]
         nbits = nbits or old["nbits"]
         seed = old["seed"] + 1 if seed is None else seed
-        cpath = _codes_path(path)
-        cur = TF.snapshot_read(spark, cpath).select(
+        cur = TF.snapshot_read(spark, _codes_path(path)).select(
             "id", F.col("vector").alias("embedding")
         )
-        books = pq_train(cur, "embedding", m=m, nbits=nbits,
-                         sample_rows=sample_rows, seed=seed)
-        assigned, cent = ivf_assign(cur, "embedding", "id", n_centroids,
-                                    seed=seed)
-        rows = _index_rows(spark, cur, "id", "embedding", assigned, books)
-        model = {
-            "m": m,
-            "nbits": nbits,
-            "n_centroids": n_centroids,
-            "dim": old["dim"],
-            "seed": seed,
-            "codebooks": [[list(map(float, row)) for row in b] for b in books],
-            "centroids": [
-                [float(x) for x in r["centroid"]]
-                for r in cent.orderBy("centroid_id").collect()
-            ],
-        }
-        v_pred = TF.current_version(cpath) + 1
-        TF._atomic_write_json(
-            os.path.join(path, f"model.v{v_pred}.json"), model
+        return _write_epoch(
+            spark, path, cur, "id", "embedding", n_centroids, m, nbits, seed, sample_rows
         )
-        v = TF.snapshot_write(
-            spark, rows, cpath,
-            partition_spec=[("identity", "centroid_id")],
-            stats_cols=["id"],
-        )
-        assert v == v_pred, f"codes version raced under lease: {v} != {v_pred}"
-        TF._atomic_write_json(os.path.join(path, _MODEL_NAME), model)
-        return v
     finally:
         release_writer_lease(path, holder)
 
@@ -348,27 +316,8 @@ def ann_index_search(
         path, TF.read_manifest(_codes_path(path), version)["version"]
     )
     books = [np.asarray(b, dtype=np.float64) for b in model["codebooks"]]
-    mm = len(books)
-    dsub = books[0].shape[1]
-    flat_books = np.stack(books)
-    cent = _cent_df(spark, model)
-    q = queries.select(
-        F.col(query_id).alias("__qid"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__qv"),
-    )
-    scored = q.crossJoin(F.broadcast(cent)).withColumn(
-        "__sim",
-        _dot(F.col("__qv"), F.col("centroid"))
-        / (_norm(F.col("__qv")) * _norm(F.col("centroid"))),
-    )
-    wq = Window.partitionBy("__qid").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        scored.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select("__qid", "__qv", "centroid_id")
-    )
+    q = queries.select(F.col(query_id).alias("__qid"), _doubles(vec_col).alias("__qv"))
+    probes = _route(q, _cent_df(spark, model), nprobe)
     # the probed set is <= n_centroids ints — driver-side routing is
     # the point: partition pruning plans ONLY these lists' files
     probed = sorted(
@@ -388,58 +337,10 @@ def ann_index_search(
         spark, cpath, m_manifest or TF.read_manifest(cpath, version),
         list(entries.values()),
     )
-    # ADC phase: (id, centroid_id, pq_code) only — parquet column
-    # pruning keeps the vector column out of this scan
-    cand = probes.join(
-        lists.select("id", "centroid_id", "pq_code"), "centroid_id"
-    ).filter(F.col("id") != F.col("__qid"))
-    n_short = int(k * refine)
-    out_schema = "__qid long, __cid long, __adc double"
-
-    def adc_kernel(pdf):
-        import pandas as pd
-
-        qv = np.asarray(pdf["__qv"].iloc[0], dtype=np.float64)
-        qv = qv / max(np.linalg.norm(qv), 1e-300)
-        tables = np.einsum("md,mkd->mk", qv.reshape(mm, dsub), flat_books)
-        codes = np.asarray(
-            [np.asarray(c, dtype=np.int64) for c in pdf["pq_code"]]
-        )
-        scores = tables[np.arange(mm)[None, :], codes].sum(1)
-        order = np.argsort(-scores, kind="stable")[:n_short]
-        return pd.DataFrame(
-            {
-                "__qid": pdf["__qid"].to_numpy()[order],
-                "__cid": pdf["id"].to_numpy()[order],
-                "__adc": scores[order],
-            }
-        )
-
-    shortlist = cand.groupBy("__qid").applyInPandas(adc_kernel, out_schema)
-    # refine: exact cosines from the SAME pruned file set (vector
-    # column read only here, only for shortlisted ids)
-    refined = (
-        shortlist.join(q, "__qid")
-        .join(
-            lists.select(F.col("id").alias("__rcid"), "vector"),
-            F.col("__cid") == F.col("__rcid"),
-        )
-        .withColumn(
-            "cosine",
-            _dot(F.col("__qv"), F.col("vector"))
-            / (_norm(F.col("__qv")) * _norm(F.col("vector"))),
-        )
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("cosine").desc(), F.col("__cid").asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias("neighbor_id"),
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    # ADC phase reads (id, centroid_id, pq_code) only; refine reads
+    # exact cosines from the SAME pruned file set (vector column read
+    # only here, only for shortlisted ids)
+    shortlist = _adc_shortlist(probes, lists, books, int(k * refine))
+    cvecs = lists.select(F.col("id").alias("__rcid"), F.col("vector").alias("__cv"))
+    pairs = shortlist.join(q, "__qid").join(cvecs, F.col("__cid") == F.col("__rcid"))
+    return _rank_topk(pairs, k, query_id)

@@ -50,6 +50,49 @@ def _norm(a: Column) -> Column:
     )
 
 
+def _cosine(a: Column, b: Column) -> Column:
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _doubles(col: str) -> Column:
+    return F.transform(F.col(col), lambda v: v.cast("double"))
+
+
+def _route(q: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
+    """IVF routing: (__qid, __qv, centroid_id) for each query's
+    ``nprobe`` most cosine-similar centroids. The centroid table is
+    tiny (k rows), so it broadcasts and the |q| × k score is a map-side
+    cross join; ties break to the lower centroid id."""
+    w = Window.partitionBy("__qid").orderBy(
+        F.col("__sim").desc(), F.col("centroid_id").asc()
+    )
+    return (
+        q.crossJoin(F.broadcast(cent))
+        .withColumn("__sim", _cosine(F.col("__qv"), F.col("centroid")))
+        .withColumn("__r", F.row_number().over(w))
+        .filter(F.col("__r") <= nprobe)
+        .select("__qid", "__qv", "centroid_id")
+    )
+
+
+def _rank_topk(pairs: DataFrame, k: int, query_id: str) -> DataFrame:
+    """The shared top-k tail: exact cosine of each (__qid/__qv,
+    __cid/__cv) candidate pair, per-query row_number on (cosine desc,
+    id asc), keep ranks 1..k. Returns (query_id, neighbor_id, cosine,
+    rank); ranking happens on the unrounded score, the rounded column
+    is the stable comparison/output form."""
+    w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid").asc())
+    return (
+        pairs.withColumn("cosine", _cosine(F.col("__qv"), F.col("__cv")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("__qid").alias(query_id),
+            F.col("__cid").alias("neighbor_id"),
+            F.round("cosine", 6).alias("cosine"),
+            "rank",
+        )
+    )
 
 
 def cosine_topk(
@@ -74,28 +117,7 @@ def cosine_topk(
         )
     )
     c = corpus.select(F.col(corpus_id).alias("__cid"), F.col(vec_col).alias("__cv"))
-    scored = (
-        c.crossJoin(q)
-        .filter(F.col("__cid") != F.col("__qid"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("__qv"), F.col("__cv"))
-            / (_norm(F.col("__qv")) * _norm(F.col("__cv"))),
-        )
-    )
-    w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias("neighbor_id"),
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
-    # ranking happens on the unrounded score; the rounded column is the
-    # stable comparison/output form
+    return _rank_topk(c.crossJoin(q).filter(F.col("__cid") != F.col("__qid")), k, query_id)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -150,7 +172,6 @@ def multitable_bucket_entries(
     n_tables: int = 8,
     seed: int = 42,
     sketch_planes: int = 0,
-    sketch_seed: int | None = None,
 ) -> DataFrame:
     """(id, __tab, lsh_bucket[, __sk]) bucket entries for MULTI-TABLE
     hyperplane LSH — the shared indexing step of lsh_topk (query vs
@@ -164,7 +185,7 @@ def multitable_bucket_entries(
 
     ``sketch_planes > 0`` additionally emits ``__sk`` — the
     ``sketch_planes``-bit single-table hyperplane sketch (seeded by
-    ``sketch_seed``) computed in the SAME matmul and replicated down
+    ``seed + 104729``) computed in the SAME matmul and replicated down
     the exploded entries. embedding_neardup_pairs' candidate prune
     reads it off the self-joined rows inline (the d2
     carry-the-sketch-through-the-band-join shape) instead of paying a
@@ -177,7 +198,7 @@ def multitable_bucket_entries(
         dtype=np.float64,
     )
     sk_planes = (
-        np.array(_hyperplanes(dim, sketch_planes, sketch_seed), dtype=np.float64)
+        np.array(_hyperplanes(dim, sketch_planes, seed + 104729), dtype=np.float64)
         if sketch_planes
         else None
     )
@@ -339,7 +360,7 @@ def embedding_neardup_pairs(
     # holds one pair's vectors.
     e = multitable_bucket_entries(
         vecs, "__id", "__v", dim=dim, n_planes=n_planes, n_tables=n_tables,
-        seed=seed, sketch_planes=64, sketch_seed=seed + 104729,
+        seed=seed, sketch_planes=64,
     )
     margin = 2.5 * math.pi * (0.25 / 64) ** 0.5
     # the popcount is an INTEGER in 0..64, so the prune predicate
@@ -436,27 +457,8 @@ def lsh_topk(
         .select("__cid", "__qid")
         .distinct()
     )
-    scored = (
-        cand.filter(F.col("__cid") != F.col("__qid"))
-        .join(c, "__cid")
-        .join(q, "__qid")
-        .withColumn(
-            "cosine",
-            _dot(F.col("__qv"), F.col("__cv"))
-            / (_norm(F.col("__qv")) * _norm(F.col("__cv"))),
-        )
-    )
-    w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias("neighbor_id"),
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    pairs = cand.filter(F.col("__cid") != F.col("__qid")).join(c, "__cid").join(q, "__qid")
+    return _rank_topk(pairs, k, query_id)
 
 
 #: blocked_allpairs_cosine refuses corpora above this row count —
@@ -615,10 +617,7 @@ def ivf_assign(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    c = corpus.select(
-        F.col(corpus_id).alias("__cid"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__cv"),
-    )
+    c = corpus.select(F.col(corpus_id).alias("__cid"), _doubles(vec_col).alias("__cv"))
     spark = corpus.sparkSession
     if n_centroids == 1:
         # degenerate single-cell case (semantic_dedup's exact-pin
@@ -688,37 +687,9 @@ def ivf_topk(
     as cosine_topk.
     """
     assigned, cent = ivf_assign(corpus, vec_col, corpus_id, n_centroids, seed=seed)
-    q = queries.select(
-        F.col(query_id).alias("__qid"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__qv"),
-    )
-    # centroid shortlist per query: tiny cross join (|q| × n_centroids)
-    scored_cent = q.crossJoin(F.broadcast(cent)).withColumn(
-        "__cdist", _dot(F.col("__qv"), F.col("centroid"))
-        / (_norm(F.col("__qv")) * _norm(F.col("centroid"))),
-    )
-    wq = Window.partitionBy("__qid").orderBy(F.col("__cdist").desc(), F.col("centroid_id").asc())
-    probes = (
-        scored_cent.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select("__qid", "__qv", "centroid_id")
-    )
-    cand = probes.join(assigned, "centroid_id").filter(F.col("__cid") != F.col("__qid"))
-    scored = cand.withColumn(
-        "cosine",
-        _dot(F.col("__qv"), F.col("__cv")) / (_norm(F.col("__qv")) * _norm(F.col("__cv"))),
-    )
-    w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias("neighbor_id"),
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    q = queries.select(F.col(query_id).alias("__qid"), _doubles(vec_col).alias("__qv"))
+    cand = _route(q, cent, nprobe).join(assigned, "centroid_id")
+    return _rank_topk(cand.filter(F.col("__cid") != F.col("__qid")), k, query_id)
 
 
 def label_centroids(
@@ -762,7 +733,7 @@ def quantize_embeddings(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     acceptable HOF case — cf. SCALE.md codegen-vs-lambda rule: what
     loses is a lambda per pair/element-row, not one fold per row).
     Returns (id, q_embedding array<int>, norm)."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = _doubles(vec_col)
     norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
     return df.select(
         F.col(id_col),
@@ -789,13 +760,7 @@ def label_cohesion(df: DataFrame, vec_col: str, label_col: str) -> DataFrame:
     cents = label_centroids(df, vec_col, label_col).select(
         label_col, "centroid"
     )
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(v, F.col("centroid"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (_norm(v) * _norm(F.col("centroid")))
+    cos = _cosine(_doubles(vec_col), F.col("centroid"))
     return (
         df.join(F.broadcast(cents), label_col)
         .select(F.col(label_col), cos.alias("__cos"))
@@ -1083,11 +1048,7 @@ def semantic_dedup(
         # centroid (broadcast join + native fold — one pass, map-only)
         assigned = (
             flat.join(F.broadcast(cent), "centroid_id")
-            .withColumn(
-                "__ccos",
-                _dot(F.col("__cv"), F.col("centroid"))
-                / (_norm(F.col("__cv")) * _norm(F.col("centroid"))),
-            )
+            .withColumn("__ccos", _cosine(F.col("__cv"), F.col("centroid")))
             .drop("centroid")
         )
     assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1171,18 +1132,10 @@ def embedding_decontaminate(
     # split (a single-row-group parquet file — measured 2.8× the
     # spread time at sf0.1); no-op at production split counts.
     c = spread_small_scan(
-        corpus.select(
-            F.col(id_col).alias("__hid"),
-            F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__hv"),
-        )
+        corpus.select(F.col(id_col).alias("__hid"), _doubles(vec_col).alias("__hv"))
     )
-    e = eval_df.select(
-        F.col(eval_id_col).alias("__eid"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__ev"),
-    )
-    cos = _dot(F.col("__hv"), F.col("__ev")) / (
-        _norm(F.col("__hv")) * _norm(F.col("__ev"))
-    )
+    e = eval_df.select(F.col(eval_id_col).alias("__eid"), _doubles(vec_col).alias("__ev"))
+    cos = _cosine(F.col("__hv"), F.col("__ev"))
     not_self = (
         (F.col("__hid") != F.col("__eid")) if exclude_self_ids else F.lit(True)
     )
@@ -1320,13 +1273,7 @@ def pq_train(
     if m < 1 or nbits < 1 or nbits > 16:
         raise ValueError(f"bad PQ shape: m={m}, nbits={nbits}")
     ksub = 1 << nbits
-    rows = (
-        corpus.select(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v")
-        )
-        .limit(int(sample_rows))
-        .collect()
-    )
+    rows = corpus.select(_doubles(vec_col).alias("__v")).limit(int(sample_rows)).collect()
     M = np.asarray([r["__v"] for r in rows], dtype=np.float64)
     if M.ndim != 2 or len(M) == 0:
         raise ValueError("empty or ragged training sample")
@@ -1378,6 +1325,63 @@ def pq_encode(
     )
 
 
+def _index_rows(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    assigned: DataFrame,
+    books: list["np.ndarray"],
+) -> DataFrame:
+    """IVF-PQ inverted-list rows (id, centroid_id, pq_code, vector):
+    ``assigned`` (ivf_assign's __cid/__cv/centroid_id) joined by id
+    with the PQ codes of ``df``."""
+    codes = pq_encode(df, vec_col, id_col, books).withColumnRenamed(id_col, "__eid")
+    return assigned.join(codes, F.col("__cid") == F.col("__eid")).select(
+        F.col("__cid").alias("id"),
+        F.col("centroid_id").cast("int").alias("centroid_id"),
+        "pq_code",
+        F.col("__cv").alias("vector"),
+    )
+
+
+def _adc_shortlist(
+    probes: DataFrame, lists: DataFrame, books: list["np.ndarray"], n_short: int
+) -> DataFrame:
+    """The ADC (asymmetric distance computation) kernel: join the
+    routed queries (_route) to the probed inverted lists' ``(id,
+    centroid_id, pq_code)`` columns — never ``vector``, so a parquet
+    scan prunes it — and keep each query's ``n_short`` best candidates
+    by PQ-code inner product. One Arrow batch per query: ONE (m ×
+    2^nbits) table against the codebooks, then m lookups per
+    candidate via numpy fancy indexing. Returns (__qid, __cid, __adc)."""
+    mm = len(books)
+    dsub = books[0].shape[1]
+    flat_books = np.stack([np.asarray(b, dtype=np.float64) for b in books])
+    cand = probes.join(lists.select("id", "centroid_id", "pq_code"), "centroid_id").filter(
+        F.col("id") != F.col("__qid")
+    )
+
+    def adc_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        qv = np.asarray(pdf["__qv"].iloc[0], dtype=np.float64)
+        qv = qv / max(np.linalg.norm(qv), 1e-300)
+        # per-subspace inner-product tables: (m, ksub)
+        tables = np.einsum("md,mkd->mk", qv.reshape(mm, dsub), flat_books)
+        codes = np.asarray([np.asarray(c, dtype=np.int64) for c in pdf["pq_code"]])
+        scores = tables[np.arange(mm)[None, :], codes].sum(1)
+        order = np.argsort(-scores, kind="stable")[:n_short]
+        return pd.DataFrame(
+            {
+                "__qid": pdf["__qid"].to_numpy()[order],
+                "__cid": pdf["id"].to_numpy()[order],
+                "__adc": scores[order],
+            }
+        )
+
+    return cand.groupBy("__qid").applyInPandas(
+        adc_kernel, "__qid long, __cid long, __adc double"
+    )
+
+
 def ivf_pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1410,89 +1414,16 @@ def ivf_pq_topk(
     join), never shuffled wholesale. The ADC kernel is an Arrow
     batch per (query, probed lists) group: table build m·2^nbits·dsub
     FLOPs, scoring |candidates|·m lookups via numpy fancy indexing.
+    The index is built inline per call; ``ann_index`` persists the
+    same lists and searches them through the same routing, ADC and
+    refine helpers.
     """
     books = pq_train(corpus, vec_col, m=m, nbits=nbits, seed=seed)
-    assigned, cent = ivf_assign(
-        corpus, vec_col, corpus_id, n_centroids, seed=seed
-    )
-    codes = pq_encode(corpus, vec_col, corpus_id, books).withColumnRenamed(
-        corpus_id, "__cid2"
-    )
-    index = assigned.select("__cid", "centroid_id").join(
-        codes, F.col("__cid") == F.col("__cid2")
-    ).select("__cid", "centroid_id", "pq_code")
-    q = queries.select(
-        F.col(query_id).alias("__qid"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__qv"),
-    )
-    scored_cent = q.crossJoin(F.broadcast(cent)).withColumn(
-        "__cdist",
-        _dot(F.col("__qv"), F.col("centroid"))
-        / (_norm(F.col("__qv")) * _norm(F.col("centroid"))),
-    )
-    wq = Window.partitionBy("__qid").orderBy(
-        F.col("__cdist").desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        scored_cent.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select("__qid", "__qv", "centroid_id")
-    )
-    cand = probes.join(index, "centroid_id").filter(
-        F.col("__cid") != F.col("__qid")
-    )
-    n_short = int(k * refine)
-    mm = len(books)
-    dsub = books[0].shape[1]
-    flat_books = np.stack([np.asarray(b, dtype=np.float64) for b in books])
-
-    out_schema = "__qid long, __cid long, __adc double"
-
-    def adc_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        qv = np.asarray(pdf["__qv"].iloc[0], dtype=np.float64)
-        qv = qv / max(np.linalg.norm(qv), 1e-300)
-        # per-subspace inner-product tables: (m, ksub)
-        tables = np.einsum(
-            "md,mkd->mk", qv.reshape(mm, dsub), flat_books
-        )
-        codes = np.asarray(
-            [np.asarray(c, dtype=np.int64) for c in pdf["pq_code"]]
-        )
-        scores = tables[np.arange(mm)[None, :], codes].sum(1)
-        order = np.argsort(-scores, kind="stable")[:n_short]
-        return pd.DataFrame(
-            {
-                "__qid": pdf["__qid"].to_numpy()[order],
-                "__cid": pdf["__cid"].to_numpy()[order],
-                "__adc": scores[order],
-            }
-        )
-
-    shortlist = cand.groupBy("__qid").applyInPandas(adc_kernel, out_schema)
+    assigned, cent = ivf_assign(corpus, vec_col, corpus_id, n_centroids, seed=seed)
+    lists = _index_rows(corpus, corpus_id, vec_col, assigned, books)
+    q = queries.select(F.col(query_id).alias("__qid"), _doubles(vec_col).alias("__qv"))
+    shortlist = _adc_shortlist(_route(q, cent, nprobe), lists, books, int(k * refine))
     # refine: exact cosine for the ADC winners only
-    cvecs = corpus.select(
-        F.col(corpus_id).alias("__rcid"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__rv"),
-    )
-    refined = (
-        shortlist.join(q, "__qid")
-        .join(cvecs, F.col("__cid") == F.col("__rcid"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("__qv"), F.col("__rv"))
-            / (_norm(F.col("__qv")) * _norm(F.col("__rv"))),
-        )
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("cosine").desc(), F.col("__cid").asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias("neighbor_id"),
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    cvecs = corpus.select(F.col(corpus_id).alias("__rcid"), _doubles(vec_col).alias("__cv"))
+    pairs = shortlist.join(q, "__qid").join(cvecs, F.col("__cid") == F.col("__rcid"))
+    return _rank_topk(pairs, k, query_id)

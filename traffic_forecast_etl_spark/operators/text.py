@@ -119,6 +119,16 @@ def lang_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(F.col(id_col), pred.alias("lang_pred"))
 
 
+def with_quality(df: DataFrame, text_col: str) -> DataFrame:
+    """``df`` with the quality gate's two columns attached: ``n_tokens``
+    (whitespace tokens) and the composite ``quality`` score. Map-only
+    column expressions, so the scoring fuses into the scan; callers
+    filter on their own bounds."""
+    return df.withColumn("n_tokens", F.size(tokens(text_col))).withColumn(
+        "quality", quality_columns(text_col)["quality"]
+    )
+
+
 def curate_corpus(
     df: DataFrame,
     text_col: str,
@@ -135,21 +145,17 @@ def curate_corpus(
     and ``quality`` attached.
 
     Plan shape: the token/quality stages are map-only COLUMN
-    expressions computed inline (quality_columns), so the whole
+    expressions computed inline (with_quality), so the whole
     filter fuses into the parquet scan — zero joins, zero shuffles,
     one pass over the text. Dedup then adds the LSH pipeline on the
     (already reduced) survivor set — filter-then-dedup ordering is
     deliberate: quality filtering is O(corpus) cheap and shrinks the
     dedup input.
     """
-    out = (
-        df.withColumn("n_tokens", F.size(tokens(text_col)))
-        .withColumn("quality", quality_columns(text_col)["quality"])
-        .filter(
-            (F.col("n_tokens") >= min_tokens)
-            & (F.col("n_tokens") <= max_tokens)
-            & (F.col("quality") >= min_quality)
-        )
+    out = with_quality(df, text_col).filter(
+        (F.col("n_tokens") >= min_tokens)
+        & (F.col("n_tokens") <= max_tokens)
+        & (F.col("quality") >= min_quality)
     )
     if near_dedup:
         from .dedup import near_dedup_filter

@@ -82,14 +82,10 @@ def build_training_corpus(
 
     # 1. quality gate (token bounds + composite score) — inline
     # column expressions, so scoring fuses into the scan with zero
-    # joins/shuffles (see quality_columns). Scoring BEFORE the input
+    # joins/shuffles (see TX.with_quality). Scoring BEFORE the input
     # count lets one cached pass serve n_input, the gate filter, and
     # every downstream stage.
-    scored = (
-        corpus.withColumn("n_tokens", F.size(TX.tokens("text")))
-        .withColumn("quality", TX.quality_columns("text")["quality"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    scored = TX.with_quality(corpus, "text").persist(StorageLevel.MEMORY_AND_DISK)
     n_input = scored.count()
     gated = scored.filter(
         (F.col("n_tokens") >= min_tokens) & (F.col("quality") >= min_quality)
