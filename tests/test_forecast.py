@@ -12,7 +12,7 @@ from traffic_forecast_etl_spark.plans.forecast import (
     normalize_forecast,
     run_forecast_plane,
 )
-from traffic_forecast_etl_spark.plans.training import build_training_table
+from traffic_forecast_etl_spark.sinks import insert_if_absent
 from traffic_forecast_etl_spark.sources.json_payload import (
     first_matching_location,
     read_json_payload,
@@ -43,6 +43,13 @@ def test_unit_branches(spark):
     }
     # 13:00+02:00 == 11:00 UTC
     assert out == {11: 21, 12: 22}
+
+
+def test_unparsable_datetime_is_rejected_not_raised(spark):
+    """An unparsable DateTime reads as NULL and takes the null-datetime
+    filter; under ANSI a bare to_timestamp would fail the cycle."""
+    bad = {**PAYLOAD[0], "DateTime": "not-a-date"}
+    assert normalize_forecast(read_json_payload(spark, PAYLOAD + [bad])).count() == 2
 
 
 def test_payload_flatten_schema(spark):
@@ -81,20 +88,39 @@ def test_intensity_rounds_like_postgres(spark):
     assert [r.i for r in out] == [5, 4, 1]
 
 
+def _plumbing_model(spark):
+    """A small dt fitted on an in-test training frame: the plane tests
+    exercise plumbing, not model quality."""
+    rows = [
+        (m, d, h, d % 7, d == 1, 10.0 + h, 5.0 + m, h % 3 == 0, h / 21)
+        for m in (1, 6)
+        for d in (1, 2, 3)
+        for h in range(0, 24, 3)
+    ]
+    schema = (
+        "Month int, Day int, Hour int, DayofWeek int, isHoliday boolean, "
+        "`Wind Speed` double, Temperature double, Precipitation boolean, Count double"
+    )
+    train = spark.createDataFrame(rows, schema)
+    assert train.columns == ml.FEATURE_COLS + [ml.LABEL_COL]
+    return ml.fit(train, "dt")
+
+
 @pytest.mark.slow
 def test_forecast_plane_idempotent(spark, tmp_path):
     """Run the full plane twice with the same payload: second run
-    appends 0 rows to both sinks; intensities are 0-10 scaled ints."""
-    train = build_training_table(
-        spark,
-        "/root/reference/data/weatherdata2015.csv",
-        "/root/reference/data/TrafficCounts2015.csv",
-    )
-    model = ml.fit(train.limit(2000), "dt")  # small/fast model — plumbing test
+    appends 0 rows to both sinks; intensities are 0-10 scaled ints.
+    The weather sink already holds the payload's first hour, so the
+    FK must also name a weather row this cycle did not append."""
+    model = _plumbing_model(spark)
     wpath, tpath = str(tmp_path / "weather"), str(tmp_path / "traffic")
+    seeded = normalize_forecast(read_json_payload(spark, PAYLOAD[:1])).select(
+        "datetime", F.col("wind_speed").alias("windspeed"), "temperature", "precipitation"
+    )
+    assert insert_if_absent(spark, seeded, wpath, keys=["datetime"]) == 1
 
     n_w1, n_t1 = run_forecast_plane(spark, PAYLOAD, model, wpath, tpath)
-    assert (n_w1, n_t1) == (2, 2)
+    assert (n_w1, n_t1) == (1, 2)
     n_w2, n_t2 = run_forecast_plane(spark, PAYLOAD, model, wpath, tpath)
     assert (n_w2, n_t2) == (0, 0)
 
@@ -103,6 +129,8 @@ def test_forecast_plane_idempotent(spark, tmp_path):
     assert weather.count() == 2 and traffic.count() == 2
     # FK resolution: every traffic row carries a weather date_id
     assert traffic.filter(F.col("date_id").isNull()).count() == 0
+    weather_ids = weather.select(F.xxhash64("datetime").alias("date_id"))
+    assert traffic.join(weather_ids, "date_id", "left_anti").count() == 0
     vals = [r.intensity for r in traffic.collect()]
     assert all(0 <= v <= 10 for v in vals)
 
@@ -207,12 +235,7 @@ def test_forecast_plane_end_to_end_from_fake_transport(spark, tmp_path):
                     forecast_url="https://api/forecasts/v1/hourly/12hour/")
     payload = fetch_forecast(cfg, "Utrecht", transport=_fake_api([]))
 
-    train = build_training_table(
-        spark,
-        "/root/reference/data/weatherdata2015.csv",
-        "/root/reference/data/TrafficCounts2015.csv",
-    )
-    model = ml.fit(train.limit(2000), "dt")
+    model = _plumbing_model(spark)
     wpath, tpath = str(tmp_path / "weather"), str(tmp_path / "traffic")
     n_w1, n_t1 = run_forecast_plane(spark, payload, model, wpath, tpath)
     assert (n_w1, n_t1) == (2, 2)

@@ -75,17 +75,6 @@ def anti_join(left: DataFrame, right: DataFrame, keys: Sequence[str]) -> DataFra
     return left.join(right, on=list(keys), how="left_anti")
 
 
-def flag_membership(
-    df: DataFrame, key: str, members: DataFrame, member_key: str, flag: str
-) -> DataFrame:
-    """J3 variant that keeps all rows and adds a boolean flag (the
-    isHoliday feature): broadcast left join + NULL test."""
-    m = F.broadcast(
-        members.select(F.col(member_key).alias(key)).distinct().withColumn("__hit", F.lit(1))
-    )
-    return df.join(m, on=key, how="left").withColumn(flag, F.col("__hit").isNotNull()).drop("__hit")
-
-
 def range_join(
     left: DataFrame,
     right: DataFrame,

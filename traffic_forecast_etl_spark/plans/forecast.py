@@ -8,10 +8,11 @@ INSERT into Traffic with a correlated scalar-subquery FK lookup.
 
 Engine shape: the payload is ingested ONCE (S4-S5) → cleaned/
 unit-normalized forecast frame (cached) → branch 1: idempotent
-insert into the weather sink; branch 2: model inference →
-decorrelated FK-resolving join (J2) → idempotent insert into the
-traffic sink. Writes are set-based; re-running the whole plane is a
-no-op on both sinks (the ON CONFLICT contract, tested in
+insert into the weather sink; branch 2: model inference → FK as the
+weather key expression ``xxhash64(datetime)`` (J2 needs no join
+here, see run_forecast_plane) → idempotent insert into the traffic
+sink. Writes are set-based; re-running the whole plane is a no-op on
+both sinks (the ON CONFLICT contract, tested in
 tests/test_forecast.py).
 """
 
@@ -23,9 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dates import calendar_features
-from ..functions.holidays_nl import holiday_dim
+from ..functions.holidays_nl import is_nl_holiday
 from ..functions.units import fahrenheit_to_celsius, rescale_intensity
-from ..operators.joins import flag_membership
 from ..sinks import insert_if_absent
 from ..sources.json_payload import read_json_payload
 
@@ -33,9 +33,10 @@ from ..sources.json_payload import read_json_payload
 def normalize_forecast(payload_df: DataFrame) -> DataFrame:
     """Unit normalization (F5, F6): ISO timestamp parse; temperature
     F→C (truncating) only where Unit == 'F' (dags/utils.py:185-189);
-    wind and precipitation passed through typed."""
+    wind and precipitation passed through typed. An unparsable
+    timestamp reads as NULL and is rejected with the missing ones."""
     out = payload_df.select(
-        F.to_timestamp("datetime_raw").alias("datetime"),
+        F.try_to_timestamp("datetime_raw").alias("datetime"),
         fahrenheit_to_celsius("temperature_value", "temperature_unit").alias("temperature"),
         F.col("wind_speed").cast("int").alias("wind_speed"),
         F.col("has_precipitation").cast("boolean").alias("precipitation"),
@@ -45,7 +46,7 @@ def normalize_forecast(payload_df: DataFrame) -> DataFrame:
     return out.filter(F.col("datetime").isNotNull())
 
 
-def forecast_features(forecast: DataFrame, spark: SparkSession) -> DataFrame:
+def forecast_features(forecast: DataFrame) -> DataFrame:
     """The 8-feature frame the model expects, from a forecast frame —
     mirrors training-side feature engineering exactly (train/serve
     skew is the reference's documented risk, SURVEY §2.11)."""
@@ -56,10 +57,7 @@ def forecast_features(forecast: DataFrame, spark: SparkSession) -> DataFrame:
         .withColumn("Day", cal["Day"])
         .withColumn("Hour", F.hour("datetime"))
         .withColumn("DayofWeek", cal["DayofWeek"])
-    )
-    years = df.select(F.min(F.year("Date")).alias("lo"), F.max(F.year("Date")).alias("hi")).first()
-    df = flag_membership(
-        df, "Date", holiday_dim(spark, range(years.lo, years.hi + 1)), "holiday_date", "isHoliday"
+        .withColumn("isHoliday", is_nl_holiday("Date"))
     )
     out = df.select(
         "datetime",
@@ -101,16 +99,16 @@ def run_forecast_plane(
         keys=["datetime"],
     )
 
-    feats = forecast_features(forecast, spark)
-    pred = model.transform(feats)
-    # J2: decorrelated FK lookup — resolve weather ids by timestamp
-    # with one broadcast left join (the reference issued one
-    # correlated scalar subquery per inserted row).
-    weather = spark.read.parquet(weather_path).select(
-        F.col("datetime"), F.xxhash64("datetime").alias("date_id")
-    )
-    traffic = pred.join(F.broadcast(weather), on="datetime", how="left").select(
-        "date_id",
+    pred = model.transform(forecast_features(forecast))
+    # J2: the FK is the weather key expression, no lookup. A weather
+    # row's id is xxhash64(datetime) (the sink stores no id column),
+    # and the insert-if-absent above leaves every forecast datetime in
+    # the weather sink, appended now or already there. Traffic rows
+    # are a subset of the forecast rows, so each date_id names an
+    # existing weather row — the row the reference's per-row scalar
+    # subquery (dags/utils.py:269-273) would have found.
+    traffic = pred.select(
+        F.xxhash64("datetime").alias("date_id"),
         F.col("datetime"),
         # round before the int cast: the reference inserts the scaled
         # prediction as a numeric literal into a Postgres INTEGER

@@ -20,9 +20,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.dates import calendar_features, date_from_yyyymmdd, fold_hour_24
-from ..functions.holidays_nl import holiday_dim
+from ..functions.holidays_nl import is_nl_holiday
 from ..functions.units import decicelsius_to_celsius, minmax_normalize_expr
-from ..operators.joins import flag_membership, join_on_keys
+from ..ml import FEATURE_COLS
+from ..operators.joins import join_on_keys
 from ..sources.csv import read_csv_auto
 
 WEATHER_SCHEMA = T.StructType(
@@ -47,17 +48,6 @@ TRAFFIC_SCHEMA = T.StructType(
         T.StructField("latitude", T.DoubleType()),
     ]
 )
-
-FEATURE_COLS = [
-    "Month",
-    "Day",
-    "Hour",
-    "DayofWeek",
-    "isHoliday",
-    "Wind Speed",
-    "Temperature",
-    "Precipitation",
-]
 
 
 def clean_weather(raw: DataFrame, *, strict_midnight: bool = False) -> DataFrame:
@@ -102,7 +92,6 @@ def build_training_table(
     weather_csv: str,
     traffic_csv: str,
     *,
-    years: range | list[int] = range(2014, 2026),
     normalize: bool = True,
 ) -> DataFrame:
     """The full E1 plan: clean → inner join (Date, Hour) → calendar +
@@ -124,11 +113,9 @@ def build_training_table(
         joined.withColumn("Month", cal["Month"])
         .withColumn("Day", cal["Day"])
         .withColumn("DayofWeek", cal["DayofWeek"])
+        .withColumn("isHoliday", is_nl_holiday("Date"))
+        .withColumn("Precipitation", F.col("Precipitation").cast("boolean"))
     )
-    joined = flag_membership(
-        joined, "Date", holiday_dim(spark, years), "holiday_date", "isHoliday"
-    )
-    joined = joined.withColumn("Precipitation", F.col("Precipitation").cast("boolean"))
     if normalize:
         joined = minmax_normalize_expr(joined, "Count", "Count_norm").drop("Count")
         joined = joined.withColumnRenamed("Count_norm", "Count")
