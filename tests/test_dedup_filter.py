@@ -514,10 +514,7 @@ def test_exact_first_collapses_bucket_flood(spark):
     the band join only the distinct representatives, so candidate
     volume stays O(distinct²), not O(10k²) — and the survivor set is
     the min id per cluster, identical to the unguarded semantics."""
-    from traffic_forecast_etl_spark.operators.dedup import (
-        exact_dup_edges,
-        minhash_lsh_pairs,
-    )
+    from traffic_forecast_etl_spark.operators.dedup import minhash_lsh_pairs
 
     flood = "repeated boilerplate navigation header licensed under creative commons"
     distinct = [
@@ -528,17 +525,15 @@ def test_exact_first_collapses_bucket_flood(spark):
     rows = [(i, flood) for i in range(10_000)] + distinct + near
     df = spark.createDataFrame(rows, "doc_id long, text string").repartition(8)
 
-    rep_ids, edges = exact_dup_edges(df, "text", "doc_id")
-    assert rep_ids.count() == 52  # 1 flood rep + 50 distinct + 1 near-dup
+    pairs = minhash_lsh_pairs(df, "text", "doc_id", jaccard_threshold=0.5)
+    # one (rep, member) edge per flood copy but the min-id rep
+    edges = pairs.filter("exact_member")
     assert edges.count() == 9_999
     assert edges.agg(F.min("id1"), F.max("id1")).collect()[0] == (0, 0)
-
-    # the band join's input is the restricted signature set: candidate
-    # pairs are bounded by 52², three orders below 10k²/2
-    pairs = minhash_lsh_pairs(
-        df, "text", "doc_id", jaccard_threshold=0.5, restrict_ids=rep_ids
-    )
-    assert pairs.count() <= 52 * 51 // 2
+    # the band join's input is the 52 representatives (1 flood rep +
+    # 50 distinct + 1 near-dup): LSH pairs are bounded by 52², three
+    # orders below 10k²/2
+    assert pairs.filter(~F.col("exact_member")).count() <= 52 * 51 // 2
 
     kept = {r.doc_id for r in near_dedup_filter(df, "text", "doc_id").collect()}
     expected = {0} | {i for i, _ in distinct}  # 200000 loses to 100000's cluster
@@ -958,3 +953,53 @@ def test_collapse_exact_parity_on_empty_and_subk_docs(spark):
     slow = {r.doc_id for r in near_dedup_filter(df, "text", "doc_id", exact_first=False, **kw).collect()}
     assert fast == slow
     assert {1, 4, 7, 8} <= fast and not {2, 3, 5, 6} & fast
+
+
+def test_scan_gate_accepts_v2_parquet_relation(spark, tmp_path):
+    """With the V1 source list emptied, a parquet read analyses to
+    Filter/Project over DataSourceV2Relation; the spread gate must
+    still treat it as a scan."""
+    from traffic_forecast_etl_spark.operators.dedup import _is_scan_like
+
+    path = str(tmp_path / "docs")
+    spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string").write.parquet(path)
+    key = "spark.sql.sources.useV1SourceList"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "")
+    try:
+        df = spark.read.parquet(path).filter("doc_id > 0").select("doc_id", "text")
+        leaf = df._jdf.queryExecution().analyzed()
+        while leaf.children().size():
+            leaf = leaf.children().apply(0)
+        assert leaf.nodeName() == "DataSourceV2Relation"
+        assert _is_scan_like(df)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_packed_signatures_pack_low_bytes_of_minhash_signatures(spark):
+    """Both signature forms read one min-hash aggregate: byte i of the
+    packed words is element i of the store array, masked to its low
+    byte."""
+    from traffic_forecast_etl_spark.operators.dedup import (
+        minhash_signatures,
+        packed_signatures,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumped over a lazy dog"),
+            (3, "tiny"),
+            (4, "an entirely different document about spark plans"),
+        ],
+        "doc_id long, text string",
+    )
+    n = 24
+    arrays = {r.doc_id: r.minhash_sig for r in minhash_signatures(df, "text", "doc_id", n).collect()}
+    packed = {r["__id"]: r for r in packed_signatures(df, "text", "doc_id", n).collect()}
+    assert arrays.keys() == packed.keys() == {1, 2, 3, 4}
+    for doc_id, sig in arrays.items():
+        words = packed[doc_id]
+        for i in range(n):
+            assert (words[f"__w{i // 8}"] >> (8 * (i % 8))) & 255 == sig[i] & 255

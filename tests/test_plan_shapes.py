@@ -306,22 +306,22 @@ def test_no_unjustified_cartesian_products(spark, sf_dir):
     assert not offenders, f"unjustified cartesian/nested-loop in: {offenders}"
 
 
-def test_exact_dup_edges_text_never_shuffles(spark, sf_dir):
+def test_exact_first_text_never_shuffles(spark, sf_dir):
     """The near-dedup exact-first pre-pass inherits d1's scale
-    contract: both its shuffles (fingerprint groupBy, rep join) carry
-    the 8-byte fingerprint / ids — the document text collapses to
-    xxhash64 below every exchange."""
+    contract: its fp-keyed window shuffles the 8-byte fingerprint and
+    the id — the document text collapses to xxhash64 below every
+    exchange."""
     import re
 
-    from traffic_forecast_etl_spark.operators.dedup import exact_dup_edges
+    from traffic_forecast_etl_spark.operators.dedup import minhash_lsh_pairs
     from traffic_forecast_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, "documents", sf_dir)
-    _, edges = exact_dup_edges(docs, "text", "doc_id")
+    edges = minhash_lsh_pairs(docs, "text", "doc_id").filter("exact_member")
     plan = edges._jdf.queryExecution().executedPlan().toString()
     for ex in re.findall(r"Exchange hashpartitioning\(([^)]*)", plan):
         assert "text" not in ex, ex
-    assert "partial_min" in plan  # map-side combine on the fingerprint agg
+    assert "Exchange hashpartitioning(__fp" in plan  # the rep window's key
 
 
 # Broadcast hints allowed in plans/catalog.py — ONLY sides whose size

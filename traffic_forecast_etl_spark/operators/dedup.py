@@ -72,6 +72,8 @@ _SCAN_LIKE_NODES = frozenset(
         "SubqueryAlias",
         "ResolvedHint",
         "Sample",
+        # a parquet read under spark.sql.sources.useV1SourceList=""
+        "DataSourceV2Relation",
     }
 )
 
@@ -133,15 +135,8 @@ def exploded_char_shingles(
     k: int = 5,
     distinct: bool = True,
     spread: bool = True,
-    with_fp: bool = False,
 ) -> DataFrame:
     """(__id, __s) rows: one per DISTINCT character k-gram per doc.
-    ``with_fp`` adds a ``__fp`` column — xxhash64 of the WHOLE
-    normalized text, computed once per doc in the same pre-Generate
-    projection as the normalization (i.e. for free within this scan)
-    and replicated down the exploded rows; the exact-dedup pre-pass
-    reads it out of the signature aggregate instead of paying a
-    second corpus scan.
 
     Explode-based on purpose: the normalized text materializes once
     per document in the projection below the Generate node, so the
@@ -159,21 +154,18 @@ def exploded_char_shingles(
     time. Derived callers (the LSH verify path) pass False.
     """
     base = spread_small_scan(df) if spread else df
-    fp_cols = [F.xxhash64(F.col("__n")).alias("__fp")] if with_fp else []
     norm = base.select(
         F.col(id_col).alias("__id"), normalize_text(text_col).alias("__n")
-    ).select("__id", "__n", *fp_cols)
-    keep = ["__fp"] if with_fp else []
+    )
     pos = norm.select(
         "__id",
         "__n",
-        *keep,
         F.explode(
             F.sequence(F.lit(1), F.greatest(F.length("__n") - (k - 1), F.lit(1)))
         ).alias("__i"),
     )
     out = pos.select(
-        "__id", *keep, F.col("__n").substr(F.col("__i"), F.lit(k)).alias("__s")
+        "__id", F.col("__n").substr(F.col("__i"), F.lit(k)).alias("__s")
     )
     # distinct is a full shuffle of the shingle stream — callers that
     # only need per-doc minima (minhash signatures) skip it
@@ -256,26 +248,6 @@ def incremental_exact_dedup(
     )
 
 
-def _minhash_signature(base_hashes: Column, num_hashes: int, seed: int = 42) -> list[Column]:
-    """num_hashes minhash values over a pre-hashed shingle array
-    (``base_hashes`` = xxhash64(shingle) mod p, materialized ONCE as a
-    column by the caller — inlining it here would re-hash every
-    shingle num_hashes times). The family is (a*h+b) mod p with
-    deterministic per-index coefficients derived from ``seed`` so
-    signatures are reproducible across runs/clusters."""
-    sig = []
-    rnd = _coeffs(num_hashes, seed)
-    for a, b in rnd:
-        sig.append(
-            F.array_min(
-                F.transform(
-                    base_hashes, lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE_P))
-                )
-            )
-        )
-    return sig
-
-
 def _coeffs(n: int, seed: int) -> list[tuple[int, int]]:
     """Deterministic odd multipliers/offsets via splitmix64 — plain
     Python ints evaluated at plan-build time (no runtime cost)."""
@@ -295,6 +267,37 @@ def _coeffs(n: int, seed: int) -> list[tuple[int, int]]:
     return out
 
 
+def _min_hashes(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    shingle_k: int,
+    seed: int,
+) -> DataFrame:
+    """(__id, __m0..__m{num_hashes-1}): the min-hash aggregate both
+    signature forms share, ONE text scan, map-only up to a single
+    id-keyed partial aggregate.
+
+    No distinct on the shingle stream — min over a multiset equals
+    min over its set, so the raw exploded shingles feed the aggregate
+    directly (saves a full shuffle of every shingle). Each shingle is
+    hashed once (xxhash64 mod p); the family (a*h+b) mod p has
+    deterministic per-index coefficients derived from ``seed``, so
+    signatures are reproducible across runs/clusters."""
+    raw_sh = exploded_char_shingles(df, text_col, id_col, shingle_k, distinct=False)
+    hashed = raw_sh.withColumn("__h", F.pmod(F.xxhash64("__s"), F.lit(_MERSENNE_P)))
+    # F.expr strings, not Column algebra: one py4j round trip per
+    # aggregate instead of ~6 (the 64-expression build was measurable
+    # driver time; the parsed plans are identical)
+    return hashed.groupBy("__id").agg(
+        *[
+            F.expr(f"min(pmod(__h * {a}L + {b}L, {_MERSENNE_P}L)) AS __m{i}")
+            for i, (a, b) in enumerate(_coeffs(num_hashes, seed))
+        ]
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str,
@@ -309,17 +312,7 @@ def minhash_signatures(
     ingest batch LSH-joins against the store instead of re-shingling
     corpus text. Deterministic in ``seed``, so signatures computed in
     different runs/clusters are comparable."""
-    raw_sh = exploded_char_shingles(df, text_col, id_col, shingle_k, distinct=False)
-    hashed = raw_sh.withColumn(
-        "__h", F.pmod(F.xxhash64("__s"), F.lit(_MERSENNE_P))
-    )
-    coeffs = _coeffs(num_hashes, seed)
-    sig_rows = hashed.groupBy("__id").agg(
-        *[
-            F.expr(f"min(pmod(__h * {a}L + {b}L, {_MERSENNE_P}L)) AS __m{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-    )
+    sig_rows = _min_hashes(df, text_col, id_col, num_hashes, shingle_k, seed)
     return sig_rows.select(
         F.col("__id").alias(id_col),
         F.array(*[f"__m{i}" for i in range(num_hashes)]).alias("minhash_sig"),
@@ -510,46 +503,18 @@ def packed_signatures(
     num_hashes: int = 64,
     shingle_k: int = 5,
     seed: int = 42,
-    with_fp: bool = False,
 ) -> DataFrame:
-    """(__id, __w0..__w{num_hashes/8-1}[, __fp]): the packed byte-min
-    sketch stage of the LSH pipeline, ONE text scan, map-only up to a
-    single id-keyed partial aggregate.
-
-    The signature path takes NO distinct — min over a multiset equals
-    min over its set, so the raw exploded shingle stream feeds the
-    aggregate directly (saves a full shuffle of every shingle). Each
-    shingle is hashed once; the per-hash permutations are flat scalar
-    expressions (small codegen); the low byte of each min packs
-    8-per-long so the whole sketch is num_hashes/8 longs — 8× smaller
-    than the full-value array, with byte agreement computable by
-    word-parallel bitwise ops instead of per-element set probes.
-
-    ``with_fp=True`` rides the whole-text xxhash64 fingerprint through
-    the same scan (computed once per doc below the Generate node,
-    collapsed out of the aggregate with min()) — the exact-dedup
-    pre-pass reads group structure from the signature table instead
-    of paying a second corpus scan.
+    """(__id, __w0..__w{num_hashes/8-1}): the packed byte-min sketch
+    stage of the LSH pipeline — the ``_min_hashes`` aggregate with the
+    low byte of each min packed 8-per-long, so the whole sketch is
+    num_hashes/8 longs: 8× smaller than the full-value array, with
+    byte agreement computable by word-parallel bitwise ops instead of
+    per-element set probes. Byte ``i`` of the words is
+    ``minhash_signatures(...)[i] & 255`` for the same parameters.
     """
     if num_hashes % 8:
         raise ValueError("num_hashes must be a multiple of 8")
-    raw_sh = exploded_char_shingles(
-        df, text_col, id_col, shingle_k, distinct=False, with_fp=with_fp
-    )
-    hashed = raw_sh.withColumn("__h", F.pmod(F.xxhash64("__s"), F.lit(_MERSENNE_P)))
-    coeffs = _coeffs(num_hashes, seed)
-    # F.expr strings, not Column algebra: one py4j round trip per
-    # aggregate instead of ~6 (the 64-expression build was measurable
-    # driver time; the parsed plans are identical)
-    fp_aggs = [F.expr("min(__fp) AS __fp")] if with_fp else []  # constant per doc
-    sig_rows = hashed.groupBy("__id").agg(
-        *[
-            F.expr(f"min(pmod(__h * {a}L + {b}L, {_MERSENNE_P}L)) AS __m{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ],
-        *fp_aggs,
-    )
-    n_words = num_hashes // 8
+    sig_rows = _min_hashes(df, text_col, id_col, num_hashes, shingle_k, seed)
     return sig_rows.select(
         "__id",
         *[
@@ -558,9 +523,8 @@ def packed_signatures(
                     f"(shiftleft(__m{8 * w + j} & 255L, {8 * j}))" for j in range(8)
                 )
             ).alias(f"__w{w}")
-            for w in range(n_words)
+            for w in range(num_hashes // 8)
         ],
-        *(["__fp"] if with_fp else []),
     )
 
 
@@ -573,9 +537,7 @@ def minhash_lsh_pairs(
     shingle_k: int = 5,
     jaccard_threshold: float = 0.5,
     seed: int = 42,
-    persist_tracker: list | None = None,
     est_hashes: int | None = None,
-    restrict_ids: DataFrame | None = None,
     max_band_width: int | None = None,
     collapse_exact: bool = True,
 ) -> DataFrame:
@@ -618,16 +580,6 @@ def minhash_lsh_pairs(
     shingle arrays by id, so memory per task is O(one doc), never
     O(corpus).
 
-    ``restrict_ids``: optional single-column frame of document ids;
-    when given, only those documents enter banding and candidate
-    generation. Signatures are still computed for EVERY input doc —
-    that is map-side CPU, and restricting afterwards via a semi-join
-    on the (slim, 8·est_hashes/8-byte) signature rows is what keeps
-    document TEXT out of every shuffle; restricting ``df`` itself
-    before the call would shuffle the text. This is the hook
-    near_dedup_filter's exact-duplicate pre-pass uses to keep
-    byte-identical documents out of the band self-join.
-
     ``max_band_width``: optional cap on band-bucket width (the d4
     ``max_postings`` pattern). A bucket with more than this many
     entries is dropped from candidate generation ENTIRELY: without a
@@ -636,10 +588,9 @@ def minhash_lsh_pairs(
     cannot kill them (estimate ≈ 1) — the LSH bucket-flood failure
     mode on duplicate-heavy corpora. Recall loss is confined to pairs
     carried ONLY by flooded buckets, i.e. the highest-duplication
-    content — which the exact-first pre-pass (near_dedup_filter)
-    should have collapsed before this operator runs; the cap is the
-    backstop for skewed non-identical floods (template spam). Default
-    None = exact banding.
+    content — which ``collapse_exact`` collapses before banding; the
+    cap is the backstop for skewed non-identical floods (template
+    spam). Default None = exact banding.
 
     ``collapse_exact`` (default True): the standalone-operator form of
     the duplicate-flood guard ``near_dedup_filter`` already applies
@@ -659,22 +610,14 @@ def minhash_lsh_pairs(
     being identical because member text equals rep text) and is
     pinned equivalent to ``collapse_exact=False`` output in tests.
     The group structure comes from a LIGHT normalize+fingerprint scan
-    (no shingle explode) — one map pass plus one fp-keyed window; the
-    r10 optimization round measured that riding the fingerprint
-    through the signature aggregate instead made Catalyst column-prune
-    the member-edge arm into a SECOND full copy of the corpus explode
-    (a Generate cannot be pruned away). Set False for the literal
-    all-pairs contract (the pre-guard baseline; the ``exact_member``
+    (no shingle explode) — one map pass plus one fp-keyed window;
+    riding the fingerprint through the signature aggregate instead
+    makes Catalyst column-prune the member-edge arm into a SECOND full
+    copy of the corpus explode (a Generate cannot be pruned away).
+    This is the one exact-first pre-pass: ``near_dedup_filter`` takes
+    its edges from here. Set False for the literal all-pairs contract
+    (the pre-guard baseline; the ``exact_member``
     column is still present, all-false, for schema stability).
-
-    ``persist_tracker``: retained for API stability; the LSH
-    intermediates flow through plain exchanges and an eager
-    localCheckpoint, so nothing is appended to it anymore. The r10
-    optimization round measured AQE stage reuse strictly faster than
-    block-manager caching of the shared slim frames (concurrent
-    consumers raced the cache fill and recomputed the corpus scan
-    2-3×; an eager count() barrier on them serialized the DAG), and
-    r11 removed the losing persist branch outright.
     """
     if est_hashes is None:
         est_hashes = num_hashes
@@ -685,39 +628,19 @@ def minhash_lsh_pairs(
     with_sig = packed_signatures(
         df, text_col, id_col, est_hashes, shingle_k, seed
     )
-    keep = None
-    if restrict_ids is not None:
-        keep = restrict_ids.select(
-            F.col(restrict_ids.columns[0]).alias("__id")
-        )
-        with_sig = with_sig.join(keep, "__id", "left_semi")
     member_edges = None
     if collapse_exact:
         # Exact-group structure from a LIGHT fingerprint scan — one
         # normalize+xxhash64 per doc, NO shingle explode — plus one
         # fp-keyed window marking each row's min-id representative.
-        # The r9 form rode the fingerprint through the signature
-        # aggregate (with_fp=True) and filtered the windowed sig
-        # table twice; Catalyst then column-pruned the member-edge
-        # arm into a SECOND copy of the whole corpus explode + agg —
-        # pruning cannot remove the Generate, so that arm cost the
-        # full shingle pass (profiled ~18 CPU-s at sf0.1) to produce
-        # two slim columns a plain scan yields in <1. With the group
-        # structure computed off the light scan, the heavy signature
-        # aggregate has exactly ONE plan instance, reused by both
-        # band-join sides through its own exchange.
+        # Computing it off the signature aggregate instead would give
+        # that heavy aggregate a second plan instance (see docstring);
+        # this way it has exactly ONE, reused by both band-join sides
+        # through its own exchange.
         fps = df.select(
             F.col(id_col).alias("__id"),
             F.xxhash64(normalize_text(text_col)).alias("__fp"),
-        )
-        if keep is not None:
-            # restrict_ids narrows the collapse structure too (the
-            # r9 contract: the restriction applied BEFORE the rep
-            # window, so groups form within the restricted set)
-            fps = fps.join(keep, "__id", "left_semi")
-        fps = fps.withColumn(
-            "__rep", F.min("__id").over(Window.partitionBy("__fp"))
-        )
+        ).withColumn("__rep", F.min("__id").over(Window.partitionBy("__fp")))
         member_edges = fps.filter(F.col("__id") != F.col("__rep")).select(
             F.col("__rep").alias("id1"),
             F.col("__id").alias("id2"),
@@ -739,7 +662,6 @@ def minhash_lsh_pairs(
         shingle_k,
         jaccard_threshold,
         est_hashes,
-        persist_tracker,
         max_band_width,
     ).withColumn("exact_member", F.lit(False))
     return lsh if member_edges is None else lsh.unionByName(member_edges)
@@ -755,14 +677,13 @@ def _pairs_from_packed(
     shingle_k: int,
     jaccard_threshold: float,
     est_hashes: int,
-    persist_tracker: list | None,
     max_band_width: int | None,
 ) -> DataFrame:
-    """Banding → inline estimate filter → exact verify, from an
-    already-persisted packed-signature table (``packed_signatures``
-    output restricted to the docs that should enter candidate
-    generation). ``df`` is only touched again for the verify stage's
-    candidate-restricted re-shingle."""
+    """Banding → inline estimate filter → exact verify, from a packed
+    signature table (``packed_signatures`` output restricted to the
+    docs that should enter candidate generation). ``df`` is only
+    touched again for the verify stage's candidate-restricted
+    re-shingle."""
     r = num_hashes // bands
     n_words = est_hashes // 8
 
@@ -825,19 +746,19 @@ def _pairs_from_packed(
     # the broadcast-build subtree and the verify chain each re-execute
     # the band self-join + estimate filter (AQE stage reuse dedups the
     # exchange BELOW the join, not the join itself) — measured 4× the
-    # sf1 wall on d6 (201 s vs ~50 s) when this ran cache-less during
-    # the r10 optimization round. localCheckpoint instead of
-    # persist+count (r11): est's lineage — the band self-join over the
-    # 64-expression signature aggregate — otherwise reappears in the
-    # final plan once per consumer, and Catalyst re-analysis +
+    # sf1 wall on d6 (201 s vs ~50 s). localCheckpoint rather than
+    # persist+count: est's lineage — the band self-join over the
+    # 64-expression signature aggregate — would otherwise reappear in
+    # the final plan once per consumer, and Catalyst re-analysis +
     # CacheManager canonical matching of that tree was profiled at
-    # ~3 s of driver time per d2 execution (the gap between the est
-    # job and the first verify job); the checkpoint truncates the
-    # downstream plan to an RDD leaf, and its blocks release with the
-    # DataFrame (no cache entry for a caller to leak). The slim
-    # signature/frequency tables above stay cache-less (their
-    # duplicated post-exchange work is cheap and the cache-fill race
-    # cost more — see module flag).
+    # ~3 s of driver time per d2 execution; the checkpoint truncates
+    # the downstream plan to an RDD leaf, and its blocks release with
+    # the DataFrame (no cache entry for a caller to leak).
+    # Trade-off: the checkpoint blocks are neither replicated nor
+    # recomputable, so losing an executor that holds one fails the
+    # query instead of recomputing the partition from lineage (which
+    # persist+count would do) — the same exposure as every other
+    # localCheckpoint in the engine.
     est = est.localCheckpoint(eager=True)
     # exact verification touches only docs that survive the estimate
     # filter: collapse their shingle streams to per-doc hash SETS
@@ -1217,31 +1138,6 @@ def expand_collapsed_pairs(pairs: DataFrame) -> DataFrame:
     return within.unionByName(cross)
 
 
-def exact_dup_edges(
-    df: DataFrame, text_col: str, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate group structure for the near-dedup pre-pass:
-    returns (rep_ids, edges) where ``rep_ids`` is the single-column
-    frame of minimum-id representatives (one per distinct normalized
-    text) and ``edges`` is (id1=rep, id2=member) for every non-rep
-    member.
-
-    Everything is keyed by the 64-bit text fingerprint (the d1
-    convention): the groupBy and the fp join shuffle 16-byte rows;
-    document text never moves."""
-    fps = df.select(
-        F.col(id_col).alias("__id"),
-        F.xxhash64(normalize_text(text_col)).alias("__fp"),
-    )
-    reps = fps.groupBy("__fp").agg(F.min("__id").alias("__rep"))
-    edges = (
-        fps.join(reps, "__fp")
-        .filter(F.col("__id") != F.col("__rep"))
-        .select(F.col("__rep").alias("id1"), F.col("__id").alias("id2"))
-    )
-    return reps.select(F.col("__rep").alias("__id")), edges
-
-
 def near_dedup_filter(
     df: DataFrame,
     text_col: str,
@@ -1251,7 +1147,6 @@ def near_dedup_filter(
     shingle_k: int = 5,
     jaccard_threshold: float = 0.5,
     seed: int = 42,
-    release_cache: bool = True,
     exact_first: bool = True,
 ) -> DataFrame:
     """End-to-end near-duplicate REMOVAL: exact-duplicate collapse →
@@ -1271,36 +1166,19 @@ def near_dedup_filter(
     cannot kill (estimate = 1, they ARE duplicates). Collapsing
     exact-duplicate groups to their min-id representative first keeps
     the band join O(distinct²_bucket); the (rep, member) fingerprint
-    edges are unioned into the component edge list afterwards, so the
-    cluster structure — and therefore the survivor set (min id per
-    component; a member's Jaccard to any third doc equals its rep's,
-    its text being identical, so no cross-group edge is lost) — is
-    IDENTICAL to running LSH over the full corpus. The fingerprint
-    RIDES the signature scan (``packed_signatures(with_fp=True)``):
-    group structure, member edges, and the rep restriction are all
-    read off the slim persisted signature table, so the pre-pass
-    costs zero extra corpus scans and text stays out of every
-    shuffle; the only text-carrying operation remains the final
-    anti-join, same as before. (``exact_dup_edges`` is the standalone
-    form of the same pre-pass for callers outside this pipeline.)
-
-    ``release_cache``: retained for API stability; since the r10/r11
-    optimization rounds the LSH intermediates flow through AQE
-    exchange reuse and an eager localCheckpoint (released with the
-    frame), so the tracker stays empty and this flag is a no-op.
+    edges join the component edge list, so the cluster structure —
+    and therefore the survivor set (min id per component; a member's
+    Jaccard to any third doc equals its rep's, its text being
+    identical, so no cross-group edge is lost) — is IDENTICAL to
+    running LSH over the full corpus. The pre-pass is
+    ``minhash_lsh_pairs(collapse_exact=True)``: a light
+    normalize+fingerprint scan (no shingle explode) plus one fp-keyed
+    window, whose output is exactly this pipeline's edge set — (rep,
+    member) edges plus rep-level LSH pairs. Text stays out of every
+    shuffle; the only text-carrying operation is the final anti-join.
+    ``exact_first=False`` is the LSH-over-everything baseline the
+    parity tests compare against.
     """
-    tracker: list = []
-    # exact_first rides minhash_lsh_pairs' collapse_exact guard: its
-    # output is EXACTLY the edge set this pipeline needs — (rep,
-    # member) fingerprint edges for every exact-duplicate group plus
-    # rep-level LSH pairs (the documented collapse equivalence). The
-    # r9 formulation derived the same reps/edges/restriction here via
-    # a groupBy + fp-join + semi-join over a separate signature table
-    # — two more exchanges, one more join, and a THIRD consumer
-    # arm racing the signature cache (profiled: the signature
-    # partial-agg stage ran 3× per d6 run at sf0.1). The window form
-    # inside minhash_lsh_pairs computes rep/member/restriction as
-    # three cache-reading filters over one fp-keyed window.
     pairs = minhash_lsh_pairs(
         df,
         text_col,
@@ -1310,20 +1188,9 @@ def near_dedup_filter(
         shingle_k,
         jaccard_threshold,
         seed,
-        persist_tracker=tracker,
-        # exact_first=False is the LSH-over-everything baseline the
-        # parity pin compares against — literally over everything
         collapse_exact=exact_first,
     )
-    edge_list = pairs.select("id1", "id2")
-    comp = connected_components(edge_list)
-    # connected_components materializes the pair list eagerly (driver
-    # union-find collect, or checkpointed propagation rounds) — the LSH
-    # pipeline's cached intermediates are dead weight from here on;
-    # release them instead of waiting on the JVM context cleaner.
-    if release_cache:
-        for cached in tracker:
-            cached.unpersist()
+    comp = connected_components(pairs.select("id1", "id2"))
     losers = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )

@@ -984,7 +984,6 @@ def semantic_dedup(
     n_centroids: int | None = None,
     target_cluster_size: int = 1024,
     seed: int = 42,
-    release_cache: bool = True,
     flat_max_centroids: int = 256,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -1064,13 +1063,12 @@ def semantic_dedup(
         .filter(F.col("__r") > 1)
         .select(F.col("node").alias(id_col))
     )
-    if release_cache:
-        # the keep-rule join reads the cached assignment, so the cache
-        # must survive until the loser list exists. Losers are tiny
-        # (a fraction of the duplicate set): materialize them now,
-        # then drop the cache before handing the plan back.
-        losers = losers.localCheckpoint(eager=True)
-        assigned.unpersist()
+    # the keep-rule join reads the cached assignment, so the cache
+    # must survive until the loser list exists. Losers are tiny (a
+    # fraction of the duplicate set): materialize them now, then drop
+    # the cache before handing the plan back.
+    losers = losers.localCheckpoint(eager=True)
+    assigned.unpersist()
     return df.join(losers, on=id_col, how="left_anti")
 
 

@@ -1061,7 +1061,6 @@ def unigram_logprob(
     text_col: str,
     id_col: str,
     vocab_size: int = 50_000,
-    persist_tracker: list | None = None,
 ) -> DataFrame:
     """Language-model quality proxy: mean per-token unigram log
     probability (and its bits-per-token form) under a Laplace-
@@ -1093,15 +1092,6 @@ def unigram_logprob(
     Docs with zero tokens have no token rows and drop out (same
     contract as the DuckDB oracle's GROUP BY over the token stream).
     Returns (id, n_tokens, mean_logprob, bits_per_token).
-
-    ``persist_tracker``: retained for API stability; the
-    vocabulary-sized freq table feeds the top-V cut AND the totals
-    broadcast through a plain exchange — AQE stage reuse materializes
-    the token aggregate once and both consumers await it, which the
-    r10 optimization round measured faster than block-manager caching
-    (concurrent consumers raced the cache fill and re-ran the corpus
-    token scan); r11 removed the losing persist branch outright, so
-    nothing is appended to the tracker anymore.
     """
     tok = df.select(
         F.col(id_col),
@@ -1147,7 +1137,6 @@ def bigram_logprob(
     vocab_size: int = 50_000,
     bigram_size: int = 200_000,
     backoff: float = 0.4,
-    persist_tracker: list | None = None,
 ) -> DataFrame:
     """Order-1 extension of ``unigram_logprob``: mean per-bigram log
     probability under a STUPID-BACKOFF bigram model fit on the corpus
@@ -1178,9 +1167,11 @@ def bigram_logprob(
          index sequence — no self-join, no shuffle of positions) and
          partial-agg'd into the bigram frequency table, which is
          DISTINCT-BIGRAM-sized (≤ total tokens, orders below corpus
-         text) and persisted; the context marginal, continuation
-         counts, vocabulary cut, and totals are all derived from that
-         cached table without touching the corpus again. The context
+         text); the context marginal, continuation counts,
+         vocabulary cut, and totals are all derived from that table
+         through one reused exchange (AQE stage reuse — block-manager
+         caching was profiled at 4× recompute, its consumers racing
+         the cache fill) without touching the corpus again. The context
          ratio is pre-joined INTO the top-M table at build time, so
          scoring needs no per-token context lookup.
       2. scoring: the bigram stream again (same map-only shape), one
@@ -1193,11 +1184,6 @@ def bigram_logprob(
     Docs with fewer than 2 tokens have no bigram rows and drop out
     (the unigram operator's GROUP BY contract). Returns
     (id, n_bigrams, mean_logprob, bits_per_token).
-
-    ``persist_tracker``: same contract as ``unigram_logprob`` — the
-    shared frame here is the distinct-bigram-sized frequency table
-    (it feeds four derived aggregates, deduped through one reused
-    exchange by default; profiled 4× recompute under the cache form).
     """
     toks_arr = df.select(
         F.col(id_col),
