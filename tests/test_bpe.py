@@ -109,36 +109,6 @@ def test_train_stops_below_min_pair_freq(spark):
 # encoder pins
 # ---------------------------------------------------------------------------
 
-def test_apply_bpe_rebuilds_text_and_respects_ranks(spark):
-    texts = ["low lower lowest"] * 4 + ["newest widest"] * 4
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    merges = B.train_bpe(df, "text", num_merges=12)
-    out = B.apply_bpe(df, "text", "doc_id", merges).collect()
-    for r in out:
-        original = texts[r.doc_id]
-        # stripping markers and concatenating rebuilds the exact text
-        rebuilt = "".join(r.bpe_tokens).replace(B.END_OF_WORD, " ").strip()
-        assert rebuilt == original
-        assert r.n_bpe_tokens == len(r.bpe_tokens)
-    # with zero merges every token is a single char or the marker
-    chars = B.apply_bpe(df, "text", "doc_id", []).collect()
-    assert all(len(t) == 1 for r in chars for t in r.bpe_tokens)
-
-
-def test_apply_bpe_fewer_tokens_with_more_merges(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
-    merges = B.train_bpe(docs, "text", num_merges=40, checkpoint_every=10)
-    n0 = B.apply_bpe(docs, "text", "doc_id", []).agg(
-        F.sum("n_bpe_tokens")
-    ).first()[0]
-    n40 = B.apply_bpe(docs, "text", "doc_id", merges).agg(
-        F.sum("n_bpe_tokens")
-    ).first()[0]
-    assert n40 < n0  # merges compress
-
-
 def test_merges_df_roundtrip(spark):
     merges = [("a", "b"), ("ab", "c")]
     mdf = B.merges_df(spark, merges)
@@ -304,28 +274,6 @@ def test_hybrid_paths_agree_on_real_documents(spark, sf_dir):
     assert drv == _ref_train(texts, 25)
 
 
-def test_apply_bpe_model_artifact_roundtrip(spark, tmp_path):
-    """Deployment path: train -> persist merges_df -> reload -> encode
-    must equal encoding from the in-session merge list."""
-    texts = ["low lower lowest"] * 4 + ["newest widest"] * 4
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    merges = B.train_bpe(df, "text", num_merges=10)
-    path = str(tmp_path / "bpe_model")
-    B.merges_df(spark, merges).write.parquet(path)
-    model = spark.read.parquet(path)
-    got = sorted(
-        (r.doc_id, tuple(r.bpe_tokens))
-        for r in B.apply_bpe_model(df, "text", "doc_id", model).collect()
-    )
-    want = sorted(
-        (r.doc_id, tuple(r.bpe_tokens))
-        for r in B.apply_bpe(df, "text", "doc_id", merges).collect()
-    )
-    assert got == want
-
-
 def test_driver_trainer_parity_deep_merges(spark, sf_dir):
     """Driver-path parity at depth: 100 merges on real documents must
     reproduce the naive-recount reference exactly (the incremental
@@ -357,30 +305,3 @@ def test_byte_budget_routes_long_word_corpus_to_distributed(spark):
     want = B.train_bpe(df, "text", num_merges=6, stats=st_driver)
     assert st_driver["path"] == "driver"
     assert got == want
-
-
-def test_apply_bpe_model_rejects_corrupt_rank_table(spark):
-    """ADVICE r6: duplicate, gapped, or NULL ranks in a persisted
-    model table must raise, not silently encode with a wrong merge
-    order."""
-    df = spark.createDataFrame([("1", "low low")], "doc_id string, text string")
-    dup = spark.createDataFrame(
-        [(0, "l", "o"), (0, "o", "w")], "rank int, a string, b string"
-    )
-    with pytest.raises(ValueError, match="duplicates or gaps"):
-        B.apply_bpe_model(df, "text", "doc_id", dup)
-    gap = spark.createDataFrame(
-        [(0, "l", "o"), (2, "o", "w")], "rank int, a string, b string"
-    )
-    with pytest.raises(ValueError, match="duplicates or gaps"):
-        B.apply_bpe_model(df, "text", "doc_id", gap)
-    nul = spark.createDataFrame(
-        [(None, "l", "o"), (1, "o", "w")], "rank int, a string, b string"
-    )
-    with pytest.raises(ValueError, match="NULL rank"):
-        B.apply_bpe_model(df, "text", "doc_id", nul)
-    ok = spark.createDataFrame(
-        [(1, "o", "w"), (0, "l", "o")], "rank int, a string, b string"
-    )
-    out = B.apply_bpe_model(df, "text", "doc_id", ok).collect()
-    assert out[0]["bpe_tokens"][0] == "lo"

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from traffic_forecast_etl_spark import ml
 from traffic_forecast_etl_spark.plans.forecast import (
+    forecast_features,
     normalize_forecast,
     run_forecast_plane,
 )
@@ -50,6 +51,19 @@ def test_unparsable_datetime_is_rejected_not_raised(spark):
     filter; under ANSI a bare to_timestamp would fail the cycle."""
     bad = {**PAYLOAD[0], "DateTime": "not-a-date"}
     assert normalize_forecast(read_json_payload(spark, PAYLOAD + [bad])).count() == 2
+
+
+def test_out_of_range_number_reads_as_null_not_raised(spark):
+    """A wind speed or temperature beyond the INT range reads as NULL,
+    like a missing field: the weather row keeps the null and the feature
+    frame drops the row. Under ANSI a bare int cast would fail the cycle."""
+    wind = {**PAYLOAD[0], "DateTime": "2015-06-01T15:00:00+02:00", "Wind": {"Speed": {"Value": 1e12}}}
+    temp_f = {**PAYLOAD[0], "DateTime": "2015-06-01T16:00:00+02:00", "Temperature": {"Value": 1e12, "Unit": "F"}}
+    temp_c = {**PAYLOAD[1], "DateTime": "2015-06-01T17:00:00+02:00", "Temperature": {"Value": 1e12, "Unit": "C"}}
+    weather = normalize_forecast(read_json_payload(spark, PAYLOAD + [wind, temp_f, temp_c]))
+    rows = {r.datetime.hour: (r.temperature, r.wind_speed) for r in weather.collect()}
+    assert rows == {11: (21, 12), 12: (22, 8), 13: (21, None), 14: (None, 12), 15: (None, 8)}
+    assert forecast_features(weather).count() == 2
 
 
 def test_payload_flatten_schema(spark):

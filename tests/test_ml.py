@@ -43,13 +43,6 @@ def test_rf_quality(split, rf_model):
     assert res.pearson_r >= 0.90, f"RF Pearson {res.pearson_r:.4f} (reference 0.9284)"
 
 
-def test_rf_feature_importances(rf_model):
-    imp = ml.feature_importances(rf_model)
-    top = max(imp, key=imp.get)
-    assert top == "Hour", imp  # reference: Hour 78.65%
-    assert imp["Hour"] >= 0.5
-
-
 def test_dt_quality(split):
     train, test = split
     model = ml.fit(train, "dt")
@@ -108,32 +101,3 @@ def test_model_save_load_roundtrip(split, rf_model, tmp_path):
     a = ml.evaluate(rf_model, test).mae
     b = ml.evaluate(loaded, test).mae
     assert abs(a - b) < 1e-12
-
-
-def test_fit_per_group_matches_moment_aggregates(spark):
-    """The applyInPandas grouped-map fit and the pure-aggregate
-    linear_trend must produce the same line per group — the grouped
-    map is the swap-in point for arbitrary sklearn models, the
-    aggregate twin is the no-data-movement form."""
-    from pyspark.sql import functions as F
-
-    from traffic_forecast_etl_spark.ml import fit_per_group_linear
-    from traffic_forecast_etl_spark.operators.aggregates import linear_trend
-    from traffic_forecast_etl_spark.sources.tables import load_table
-
-    ev = load_table(spark, "events", "/root/testdata/sf0.001").withColumn(
-        "x", F.unix_timestamp("ts") / F.lit(3600.0)
-    )
-    agg = {
-        r.event_type: (r.n, r.slope, r.intercept)
-        for r in linear_trend(ev, ["event_type"], "x", "value").collect()
-    }
-    gm = {
-        r.event_type: (r.n, r.slope, r.intercept)
-        for r in fit_per_group_linear(ev, ["event_type"], "x", "value").collect()
-    }
-    assert set(agg) == set(gm) and len(agg) >= 3
-    for k, (n, s, i) in agg.items():
-        n2, s2, i2 = gm[k]
-        assert n2 == n
-        assert abs(s2 - s) < 1e-6 and abs(i2 - i) < 1e-4, (k, (s, i), (s2, i2))

@@ -5,7 +5,6 @@ same-input determinism; save/load parity; map-only JVM scoring plan.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from traffic_forecast_etl_spark import quality_model as QM
@@ -75,21 +74,3 @@ def test_scoring_plan_is_jvm_map_only(spark, sf_dir):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:1500]
     assert "EvalPython" not in plan, plan[:1500]
-
-
-def test_quality_filter_threshold(spark):
-    docs = _planted(spark)
-    model = QM.train_quality_classifier(docs, "text", "label")
-    kept = QM.quality_filter(model, docs, "text", "doc_id", threshold=0.5)
-    assert set(kept.columns) == {"doc_id", "text", "label"}
-    ids = {r.doc_id for r in kept.collect()}
-    assert ids == {i for i in range(120) if i % 2 == 0}
-
-
-def test_quality_filter_bad_threshold_keeps_nothing_silently_is_avoided(spark):
-    """threshold outside [0,1] is a caller bug worth failing loudly
-    at plan time rather than returning an empty corpus."""
-    docs = _planted(spark)
-    model = QM.train_quality_classifier(docs, "text", "label")
-    with pytest.raises(ValueError):
-        QM.quality_filter(model, docs, "text", "doc_id", threshold=1.5)

@@ -888,52 +888,6 @@ def test_ann_index_model_roundtrip_and_time_travel(spark, emb, ann_path):
     assert all(r.neighbor_id != 77777 for r in got_old)
 
 
-def test_streaming_ann_index_ingestion_exactly_once(spark, emb, ann_path, tmp_path):
-    """Live embedding ingestion: a stream of new vectors lands in the
-    index via frozen-quantizer appends, is immediately searchable,
-    and an at-least-once redelivery (fresh checkpoint, same txn_app,
-    epoch ids restarting at 0) commits NOTHING twice — the storage
-    layer's txn map gates it, pinned in mode='append' where a real
-    replay would visibly duplicate rows."""
-    from traffic_forecast_etl_spark import tablefmt as TF
-    from traffic_forecast_etl_spark.operators import ann_index as AI
-    from traffic_forecast_etl_spark.streaming.micro_batch import (
-        streaming_ann_index_sink,
-    )
-
-    src = str(tmp_path / "src")
-    (
-        emb.filter(F.col("vec_id") < 20)
-        .withColumn("vec_id", (F.col("vec_id") + 500_000).cast("long"))
-        .select("vec_id", "embedding")
-        .write.parquet(src)
-    )
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>"
-    ).parquet(src)
-    q = streaming_ann_index_sink(
-        stream, ann_path, mode="append",
-        checkpoint=str(tmp_path / "ck1"),
-    )
-    q.awaitTermination()
-    got = AI.ann_index_search(
-        spark, emb.filter(F.col("vec_id") == 5), ann_path, k=3, nprobe=6
-    ).collect()
-    top = sorted(got, key=lambda r: r.rank)[0]
-    assert top.neighbor_id == 500_005 and abs(top.cosine - 1.0) < 1e-6
-    n1 = TF.snapshot_read(spark, ann_path + "/codes").count()
-    # redelivery: fresh checkpoint restarts epochs at 0; same txn_app
-    stream2 = spark.readStream.schema(
-        "vec_id long, embedding array<float>"
-    ).parquet(src)
-    q2 = streaming_ann_index_sink(
-        stream2, ann_path, mode="append",
-        checkpoint=str(tmp_path / "ck2"),
-    )
-    q2.awaitTermination()
-    assert TF.snapshot_read(spark, ann_path + "/codes").count() == n1
-
-
 def test_ann_index_recall_over_incremental_appends(spark, emb, exact, tmp_path):
     """VERDICT r7 #5 (PQ drift): quantizers are FROZEN at build, so an
     index grown by many appends serves vectors the codebooks never

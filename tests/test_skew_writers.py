@@ -6,10 +6,6 @@ from pyspark.sql import functions as F
 
 from traffic_forecast_etl_spark.operators.skew import salted_aggregate, salted_join
 from traffic_forecast_etl_spark.sources.tables import load_table
-from traffic_forecast_etl_spark.sources.writers import (
-    read_partitioned,
-    write_date_partitioned,
-)
 
 
 def test_salted_aggregate_matches_plain(spark, sf_dir):
@@ -54,73 +50,6 @@ def test_salted_join_matches_plain(spark, sf_dir):
         F.count(F.lit(1)).alias("n"), F.round(F.sum("o_totalprice"), 2).alias("s")
     ).collect()[0]
     assert (plain.n, plain.s) == (salted.n, salted.s)
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    ev = load_table(spark, "events", sf_dir)
-    path = str(tmp_path / "events_by_day")
-    write_date_partitioned(ev, path, "ts")
-    back = read_partitioned(spark, path)
-    assert back.count() == ev.count()
-    pruned = back.filter(F.col("dt") == "2024-01-05")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # partition filter must reach the scan (directory-level pruning)
-    assert "PartitionFilters: [isnotnull(dt" in plan, plan[:500]
-    n_all_days = ev.select(F.col("ts").cast("date")).distinct().count()
-    assert pruned.count() == ev.filter(F.col("ts").cast("date") == "2024-01-05").count()
-    assert n_all_days > 1
-
-
-def test_dynamic_partition_overwrite_touches_only_written_days(spark, sf_dir, tmp_path):
-    ev = load_table(spark, "events", sf_dir)
-    path = str(tmp_path / "dyn")
-    write_date_partitioned(ev, path, "ts")
-    first = read_partitioned(spark, path)
-    before_jan5 = first.filter(F.col("dt") == "2024-01-05").count()
-    before_other = first.filter(F.col("dt") != "2024-01-05").count()
-    assert before_jan5 > 1 and before_other > 0
-    # overwrite ONLY Jan 5 with a single row
-    one = ev.filter(F.col("ts").cast("date") == "2024-01-05").limit(1)
-    write_date_partitioned(one, path, "ts", mode="overwrite")
-    after = read_partitioned(spark, path)
-    assert after.filter(F.col("dt") == "2024-01-05").count() == 1  # replaced
-    assert after.filter(F.col("dt") != "2024-01-05").count() == before_other  # untouched
-
-
-def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key with the same bucket count
-    join with NO Exchange on either side (SCALE.md's bucketing claim
-    as an assertion), and the result matches the plain join."""
-    from traffic_forecast_etl_spark.sinks import write_bucketed
-
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_quantity")
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_totalprice")
-    write_bucketed(li, "li_b", ["l_orderkey"], num_buckets=8,
-                   sort_cols=["l_orderkey"], path=str(tmp_path / "li_b"))
-    write_bucketed(o, "o_b", ["o_orderkey"], num_buckets=8,
-                   sort_cols=["o_orderkey"], path=str(tmp_path / "o_b"))
-    try:
-        li_b, o_b = spark.table("li_b"), spark.table("o_b")
-        joined = li_b.join(
-            o_b.hint("merge"), li_b.l_orderkey == o_b.o_orderkey
-        ).groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"),
-                                    F.max("o_totalprice").alias("p"))
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        # the join must be exchange-free, and the groupBy on the SAME
-        # bucket key rides the bucketing too -> no Exchange anywhere
-
-        assert "Exchange" not in plan, plan[:2000]
-        expected = (
-            li.join(o.hint("merge"), li.l_orderkey == o.o_orderkey)
-            .groupBy("l_orderkey")
-            .agg(F.sum("l_quantity").alias("q"), F.max("o_totalprice").alias("p"))
-        )
-        assert sorted(map(tuple, joined.collect())) == sorted(
-            map(tuple, expected.collect())
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS o_b")
 
 
 def test_range_clustered_files_have_disjoint_ranges(spark, tmp_path):

@@ -221,97 +221,6 @@ def test_compact_partition_reduces_files(spark, tmp_path):
     assert [d for d in os.listdir(tmp_path) if "compact" in d] == []
 
 
-def test_analyze_table_feeds_cbo_stats(spark, tmp_path):
-    """ANALYZE TABLE must land rowCount stats in the catalog — the
-    input Catalyst's cost-based join planning reads."""
-    from traffic_forecast_etl_spark.ddl import analyze_table
-
-    spark.range(0, 777).write.mode("overwrite").option(
-        "path", str(tmp_path / "stats_tbl")
-    ).saveAsTable("stats_tbl")
-    try:
-        analyze_table(spark, "stats_tbl", columns=["id"])
-        desc = {
-            r.col_name: r.data_type
-            for r in spark.sql("DESCRIBE TABLE EXTENDED stats_tbl").collect()
-        }
-        assert "777 rows" in desc.get("Statistics", ""), desc.get("Statistics")
-    finally:
-        spark.sql("DROP TABLE IF EXISTS stats_tbl")
-
-
-def test_streaming_dedup_sink(spark, tmp_path):
-    """Streaming plane: watermarked dedup + foreachBatch idempotent
-    append over the events stream — re-running the stream appends
-    nothing new."""
-    from traffic_forecast_etl_spark.streaming.micro_batch import (
-        read_events_stream,
-        streaming_dedup_sink,
-    )
-
-    sink = str(tmp_path / "events_sink")
-    ckpt1, ckpt2 = str(tmp_path / "ck1"), str(tmp_path / "ck2")
-    src = "/root/testdata/sf0.001/events.parquet"
-    q = streaming_dedup_sink(
-        read_events_stream(spark, src), sink, ["event_id"], checkpoint=ckpt1
-    )
-    q.awaitTermination()
-    n1 = spark.read.parquet(sink).count()
-    assert n1 == 1000
-    # fresh query (new checkpoint) over the same source: sink unchanged
-    q2 = streaming_dedup_sink(
-        read_events_stream(spark, src), sink, ["event_id"], checkpoint=ckpt2
-    )
-    q2.awaitTermination()
-    assert spark.read.parquet(sink).count() == n1
-
-
-def test_streaming_checkpoint_resume_is_incremental(spark, tmp_path):
-    """R2 semantics: successive AvailableNow ticks over a growing
-    source directory with the SAME checkpoint process only the new
-    files — the streaming form of the reference's 12-hourly poll."""
-    import shutil
-
-    from traffic_forecast_etl_spark.streaming.micro_batch import (
-        read_events_stream,
-        streaming_dedup_sink,
-    )
-
-    src = tmp_path / "events_src"
-    src.mkdir()
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    first = events.filter("event_id < 500")
-    second = events.filter("event_id >= 500")
-    first.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b1"))
-    for f in (tmp_path / "b1").glob("*.parquet"):
-        shutil.copy(f, src / "batch1.parquet")
-
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ck")
-    q = streaming_dedup_sink(
-        read_events_stream(spark, str(src)), sink, ["event_id"], checkpoint=ckpt
-    )
-    q.awaitTermination()
-    assert spark.read.parquet(sink).count() == first.count()
-
-    # tick 2: new file arrives; SAME checkpoint — only it is processed
-    second.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b2"))
-    for f in (tmp_path / "b2").glob("*.parquet"):
-        shutil.copy(f, src / "batch2.parquet")
-    q2 = streaming_dedup_sink(
-        read_events_stream(spark, str(src)), sink, ["event_id"], checkpoint=ckpt
-    )
-    q2.awaitTermination()
-    assert spark.read.parquet(sink).count() == events.count()
-
-    # tick 3: nothing new — a no-op tick appends nothing
-    q3 = streaming_dedup_sink(
-        read_events_stream(spark, str(src)), sink, ["event_id"], checkpoint=ckpt
-    )
-    q3.awaitTermination()
-    assert spark.read.parquet(sink).count() == events.count()
-
-
 def test_streaming_rollup_maintenance_incremental(spark, tmp_path):
     """Continuous-aggregate semantics across ticks: tick 2's events
     land in windows tick 1 already wrote (the event_id split
@@ -412,26 +321,6 @@ def test_compact_refuses_partitioned_root(spark, tmp_path):
         compact_partition(spark, path)
 
 
-def test_expire_date_partitions(spark, tmp_path):
-    """Retention drops exactly the partitions below the cutoff as a
-    directory-level operation; survivors read back intact."""
-    from traffic_forecast_etl_spark.sources.writers import expire_date_partitions
-
-    path = str(tmp_path / "retained")
-    df = spark.createDataFrame(
-        [(i, d) for i, d in enumerate(["2024-01-01", "2024-01-02", "2024-01-03"])],
-        "id int, dt string",
-    )
-    df.write.partitionBy("dt").parquet(path)
-    dropped = expire_date_partitions(spark, path, older_than="2024-01-03")
-    assert dropped == ["2024-01-01", "2024-01-02"]
-    left = spark.read.parquet(path)
-    # partition discovery type-infers dt as date — compare stringified
-    assert [str(r.dt) for r in left.collect()] == ["2024-01-03"]
-    # idempotent: nothing below the cutoff remains
-    assert expire_date_partitions(spark, path, older_than="2024-01-03") == []
-
-
 def test_fresh_rows_nonkey_range_key(spark, tmp_path):
     """The traffic-sink shape: hash surrogate key, pruning on the
     timestamp the hash derives from — the non-key range column must
@@ -449,31 +338,6 @@ def test_fresh_rows_nonkey_range_key(spark, tmp_path):
     out = fresh_rows(spark, batch, path, ["date_id"], range_key="datetime")
     assert sorted(out.columns) == ["date_id", "datetime", "v"]
     assert sorted(r.datetime for r in out.collect()) == [100, 101, 102, 103, 104]
-
-
-def test_clean_orphaned_staging(spark, tmp_path):
-    """The janitor removes aged crash leftovers (staging/old/expired
-    dirs) but never the sink itself or a fresh in-flight staging."""
-    import os
-
-    from traffic_forecast_etl_spark.sinks import clean_orphaned_staging
-
-    sink = tmp_path / "sink"
-    sink.mkdir()
-    (sink / "part-0.parquet").write_bytes(b"x")
-    old_stage = tmp_path / "sink__staging_dead"
-    old_old = tmp_path / "sink__old_dead"
-    in_table = sink / "__expired_dead"
-    fresh = tmp_path / "sink__staging_live"
-    for d in (old_stage, old_old, in_table, fresh):
-        d.mkdir()
-    stale = 1_000_000
-    for d in (old_stage, old_old, in_table):
-        os.utime(d, (os.path.getmtime(d) - stale,) * 2)
-
-    removed = set(clean_orphaned_staging(str(sink), older_than_seconds=3600))
-    assert removed == {str(old_stage), str(old_old), str(in_table)}
-    assert sink.exists() and fresh.exists() and (sink / "part-0.parquet").exists()
 
 
 def test_merge_upsert_crash_recovery(spark, tmp_path):
@@ -1211,31 +1075,6 @@ def test_delta_append_race_cleans_staged_files(spark, tmp_path, monkeypatch):
     }
     assert after == before  # loser's files were cleaned up
     assert DL.read_delta(spark, path).count() == 1
-
-
-def test_delta_sweep_orphans(spark, tmp_path):
-    """Files never referenced by any retained action (crash residue)
-    are swept; referenced data files — including ones only visible
-    via time travel — and DV sidecars stay."""
-    import os
-
-    from traffic_forecast_etl_spark.sources import delta_log as DL
-
-    path = str(tmp_path / "dt")
-    DL.write_delta_append(
-        spark, spark.createDataFrame([(i,) for i in range(20)], "id long"), path
-    )
-    DL.delete_from_delta(spark, path, "id < 3")
-    # plant two orphans: a stray parquet and a stray DV
-    open(os.path.join(path, "zz-orphan.parquet"), "wb").write(b"x")
-    open(os.path.join(path, "deletion_vector_orphan.bin"), "wb").write(b"x")
-    swept = DL.delta_sweep_orphans(path)
-    assert sorted(os.path.basename(p) for p in swept) == [
-        "deletion_vector_orphan.bin", "zz-orphan.parquet",
-    ]
-    # table still reads, DVs intact
-    assert {r.id for r in DL.read_delta(spark, path).collect()} == set(range(3, 20))
-    assert DL.read_delta(spark, path, version=0).count() == 20
 
 
 def test_delta_checkpoint_write_and_log_truncation(spark, tmp_path):

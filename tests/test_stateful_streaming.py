@@ -145,164 +145,6 @@ def test_text_scoring_is_stream_compatible(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_streaming_near_dedup_across_ticks(spark, tmp_path):
-    """Continuous-ingestion near-dedup: tick 2 must drop exact dups,
-    near-dups of TICK-1 docs (known only via the signature store —
-    corpus text is never re-read), and in-batch near-dups (min-id
-    representative wins), while fresh docs pass."""
-    from traffic_forecast_etl_spark.streaming.micro_batch import (
-        read_documents_stream,
-        streaming_near_dedup,
-    )
-
-    src = str(tmp_path / "in")
-    corpus = str(tmp_path / "corpus")
-    sigs = str(tmp_path / "sigs")
-    ckpt = str(tmp_path / "ckpt")
-
-    base = (
-        "the quick brown fox jumps over the lazy dog and then runs far away "
-        "into the dark woods tonight while the moon rises slowly over the hills "
-    ) * 3
-    other = (
-        "spark aggregates shuffle partitions through hash exchanges while the "
-        "catalyst optimizer prunes columns and pushes filters into parquet scans "
-    ) * 3
-    near_base = base.replace("lazy dog", "sleepy cat")  # small edit: high jaccard
-    fresh = (
-        "embeddings cluster into inverted lists probed by coarse centroids "
-        "while minhash bands bucket shingled documents for candidate joins "
-    ) * 3
-    near_fresh = fresh.replace("coarse centroids", "kmeans anchors")
-
-    def write_batch(rows, part):
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars int"
-        ).coalesce(1).write.parquet(f"{src}/{part}")
-
-    def run_tick():
-        # glob: the file source does not recurse into the per-tick
-        # subdirectories on its own
-        q = streaming_near_dedup(
-            read_documents_stream(spark, src + "/p*"), corpus, sigs, checkpoint=ckpt
-        )
-        q.awaitTermination()
-
-    write_batch([(0, base, "en", "s", len(base)), (1, other, "en", "s", len(other))], "p1")
-    run_tick()
-    assert {r["doc_id"] for r in spark.read.parquet(corpus).collect()} == {0, 1}
-    assert spark.read.parquet(sigs).count() == 2
-
-    write_batch(
-        [
-            (2, base, "en", "s", len(base)),        # exact dup of 0 -> drop
-            (3, near_base, "en", "s", len(near_base)),  # near-dup of 0 -> drop
-            (4, fresh, "en", "s", len(fresh)),      # fresh -> keep
-            (5, near_fresh, "en", "s", len(near_fresh)),  # in-batch near-dup of 4 -> drop
-        ],
-        "p2",
-    )
-    run_tick()
-    kept = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert kept == {0, 1, 4}
-    # the store now carries signatures for every kept doc
-    assert {r["doc_id"] for r in spark.read.parquet(sigs).collect()} == {0, 1, 4}
-    # replaying with the same checkpoint is a no-op (idempotent sinks)
-    run_tick()
-    assert spark.read.parquet(corpus).count() == 3
-
-
-def test_streaming_near_dedup_bounded_store(spark, tmp_path):
-    """With store_retention_days the signature store holds only the
-    dedup horizon: partitions older than max(store dt) - retention are
-    dropped after each tick, so store size is O(window) across N
-    ticks; a doc re-crawled past the horizon is admitted as new
-    (retention contract), and a replayed tick stays a no-op. The
-    ``source`` column carries the ingest date."""
-    import os
-
-    from traffic_forecast_etl_spark.streaming.micro_batch import (
-        read_documents_stream,
-        streaming_near_dedup,
-    )
-
-    src = str(tmp_path / "in")
-    corpus = str(tmp_path / "corpus")
-    sigs = str(tmp_path / "sigs")
-    ckpt = str(tmp_path / "ckpt")
-
-    base = (
-        "the quick brown fox jumps over the lazy dog and then runs far away "
-        "into the dark woods tonight while the moon rises slowly over the hills "
-    ) * 3
-    near_base = base.replace("lazy dog", "sleepy cat")
-    fresh = (
-        "embeddings cluster into inverted lists probed by coarse centroids "
-        "while minhash bands bucket shingled documents for candidate joins "
-    ) * 3
-
-    def write_batch(rows, part):
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars int"
-        ).coalesce(1).write.parquet(f"{src}/{part}")
-
-    def run_tick():
-        q = streaming_near_dedup(
-            read_documents_stream(spark, src + "/p*"),
-            corpus,
-            sigs,
-            checkpoint=ckpt,
-            store_retention_days=2,
-            ingest_dt_col="source",
-        )
-        q.awaitTermination()
-
-    def store_dts():
-        return sorted(
-            d.split("=", 1)[1] for d in os.listdir(sigs) if d.startswith("sig_dt=")
-        )
-
-    write_batch([(0, base, "en", "2024-01-01", len(base))], "p1")
-    run_tick()
-    assert store_dts() == ["2024-01-01"]
-    assert spark.read.parquet(sigs).count() == 1
-
-    # 3 days later: near-dup of doc 0 is STILL blocked this tick (the
-    # store is read before expiry), fresh doc admitted; afterwards the
-    # 01-01 partition is past the horizon (04 - 2d = 02) and dropped
-    write_batch(
-        [
-            (3, near_base, "en", "2024-01-04", len(near_base)),
-            (4, fresh, "en", "2024-01-04", len(fresh)),
-        ],
-        "p2",
-    )
-    run_tick()
-    assert {r["doc_id"] for r in spark.read.parquet(corpus).collect()} == {0, 4}
-    assert store_dts() == ["2024-01-04"]  # 01-01 expired, store bounded
-    assert spark.read.parquet(sigs).count() == 1
-
-    # doc 0's signature has aged out: a re-crawled near-dup is now
-    # admitted as new (horizon semantics); an EXACT dup of doc 0 is
-    # still caught forever by the corpus-fingerprint anti-join
-    write_batch(
-        [
-            (6, near_base, "en", "2024-01-05", len(near_base)),
-            (7, base, "en", "2024-01-05", len(base)),
-        ],
-        "p3",
-    )
-    run_tick()
-    assert {r["doc_id"] for r in spark.read.parquet(corpus).collect()} == {0, 4, 6}
-    assert store_dts() == ["2024-01-04", "2024-01-05"]
-    assert spark.read.parquet(sigs).count() == 2
-
-    # replay: corpus and store both unchanged
-    run_tick()
-    assert spark.read.parquet(corpus).count() == 3
-    assert spark.read.parquet(sigs).count() == 2
-
-
 def test_watermark_drops_late_data_after_window_eviction(spark, tmp_path):
     """The late-data contract of the streaming plane, pinned at the
     boundary Structured Streaming actually GUARANTEES: an event

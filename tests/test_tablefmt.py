@@ -1508,46 +1508,6 @@ def test_update_prunes_and_validates(spark, tmp_path):
             .filter(F.col("id") == 0).collect()} == {"x"}
 
 
-def test_restore_rolls_back_as_new_commit(spark, tmp_path):
-    path = str(tmp_path / "t")
-    T.snapshot_write(spark, _mk(spark, range(10)), path, stats_cols=["id"])
-    T.snapshot_delete(
-        spark, path, keys=["id"],
-        keys_df=spark.createDataFrame([(i,) for i in range(9)], "id long"),
-    )  # oops: deleted almost everything
-    assert T.snapshot_read(spark, path).count() == 1
-    v = T.snapshot_restore(path, 0)
-    assert v == 2  # a NEW commit, not a pointer rewind
-    assert _rows(T.snapshot_read(spark, path)) == _rows(_mk(spark, range(10)))
-    # the bad version stays readable for forensics
-    assert T.snapshot_read(spark, path, version=1).count() == 1
-    # restore-to-current is a no-op
-    assert T.snapshot_restore(path, 2) == 2
-    # CDF synthesizes the restore delta file-level exactly
-    chg = T.read_snapshot_changes(spark, path, since_version=1, net=True)
-    assert sorted(r.id for r in chg.collect() if r._change_type == "insert") \
-        == list(range(9))
-
-
-def test_restore_sharded_is_metadata_only(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(T, "_INLINE_MAX_FILES", 4)
-    path = str(tmp_path / "t")
-    T.snapshot_write(
-        spark, _mk(spark, range(100)).repartition(8), path, stats_cols=["id"]
-    )
-    m0 = T.read_manifest(path)
-    T.snapshot_delete(
-        spark, path, keys=["id"],
-        keys_df=spark.createDataFrame([(1,)], "id long"),
-    )
-    T.snapshot_restore(path, 0)
-    m2 = T.read_manifest(path)
-    assert {s["path"] for s in m2["segments"]} == {
-        s["path"] for s in m0["segments"]
-    }  # pure reference re-publish, zero data movement
-    assert T.snapshot_read(spark, path).count() == 100
-
-
 def test_version_as_of_timestamp(spark, tmp_path):
     import datetime as dt
     import time
@@ -2209,47 +2169,6 @@ def test_tagged_version_survives_expire(spark, tmp_path):
         T.read_manifest(path, 0)
 
 
-def test_snapshot_stats_metadata_only(spark, tmp_path):
-    """count/min/max answered from the manifest alone — exact counts,
-    SQL-null-semantics min/max, conservative None when any file lacks
-    stats, refusal under pending MoR deletes."""
-    import datetime as dt
-
-    path = str(tmp_path / "t")
-    df = _mk_events(spark, n=300, users=7, days=3)
-    T.snapshot_write(
-        spark, df, path, partition_spec=_SPEC, stats_cols=["id", "v"]
-    )
-    st = T.snapshot_stats(path, cols=["id", "v", "user_id"])
-    assert st["row_count"] == 300
-    assert st["file_count"] == len(T.manifest_files(path, T.read_manifest(path)))
-    assert st["columns"]["id"] == [0, 299]
-    assert st["columns"]["v"] == [0.0, 299.0]
-    # user_id carries no stats -> unknown, never a guess
-    assert st["columns"]["user_id"] is None
-    # version= answers historical stats
-    T.snapshot_delete(
-        spark, path, keys=["id"],
-        keys_df=spark.createDataFrame([(0,), (299,)], "id bigint"),
-        change_feed=False,
-    )
-    assert T.snapshot_stats(path)["row_count"] == 298
-    assert T.snapshot_stats(path, cols=["id"], version=0)["columns"]["id"] == [
-        0, 299,
-    ]
-    # tag resolution
-    T.snapshot_tag(path, "v0", version=0)
-    assert T.snapshot_stats(path, ref="v0")["row_count"] == 300
-    # MoR deletes refuse metadata answers
-    T.snapshot_delete(
-        spark, path, keys=["id"],
-        keys_df=spark.createDataFrame([(5,)], "id bigint"),
-        change_feed=False, mode="mor",
-    )
-    with pytest.raises(ValueError, match="merge-on-read"):
-        T.snapshot_stats(path)
-
-
 def test_scan_by_ref(spark, tmp_path):
     """snapshot_scan/scan_files resolve ref= like snapshot_read."""
     path = str(tmp_path / "t")
@@ -2636,79 +2555,6 @@ def test_wap_partitioned_append_checks_spec(spark, tmp_path):
         for e in T.manifest_files(path, m)
         if e["rows"] > 0
     )
-
-
-def test_purge_deletes_scoped_rewrite_and_retire(spark, tmp_path):
-    """snapshot_purge_deletes (r7): materializes pending MoR deletes
-    rewriting ONLY the files they can touch, respects sequencing
-    (later re-inserts survive), retires every delete file, reads as
-    an empty change-feed delta, and no-ops when nothing is pending."""
-    path = str(tmp_path / "t")
-    T.snapshot_write(
-        spark,
-        _mk(spark, range(100)).repartitionByRange(4, "id"),
-        path,
-        stats_cols=["id"],
-    )
-    T.snapshot_delete(
-        spark, path, keys=["id"],
-        keys_df=spark.createDataFrame([(7,), (8,)], "id long"),
-        mode="mor", change_feed=False,
-    )
-    T.snapshot_delete(
-        spark, path, keys=["id"],
-        keys_df=spark.createDataFrame([(93,)], "id long"),
-        mode="mor", change_feed=False,
-    )
-    T.snapshot_write(spark, _mk(spark, [7], "re"), path, mode="append")
-    m0 = T.read_manifest(path)
-    before = {e["path"] for e in T.manifest_files(path, m0)}
-    v = T.snapshot_purge_deletes(spark, path)
-    m1 = T.read_manifest(path)
-    assert not m1.get("eq_deletes")
-    after = {e["path"] for e in T.manifest_files(path, m1)}
-    # only the two masked range-files moved; the rest carried by name
-    assert len(before & after) >= len(before) - 2
-    rows = sorted((r.id, r.val) for r in T.snapshot_read(spark, path).collect())
-    ids = [i for i, _ in rows]
-    assert 8 not in ids and 93 not in ids and len(rows) == 98
-    assert (7, "re7") in rows and (7, "v7") not in rows
-    # no-op on a clean table; CDF reads the purge as an empty delta
-    assert T.snapshot_purge_deletes(spark, path) == v
-    assert (
-        T.read_snapshot_changes(spark, path, since_version=v - 1, version=v)
-        .count()
-        == 0
-    )
-
-
-def test_purge_deletes_with_bloom_pruning(spark, tmp_path):
-    """On unclustered keys, purge uses bloom sidecars to scope the
-    rewrite; results stay exact."""
-    import random
-    import uuid as _uuid
-
-    rnd = random.Random(3)
-    ids = [_uuid.UUID(int=rnd.getrandbits(128)).hex for _ in range(2000)]
-    df = spark.createDataFrame(
-        [(k, i) for i, k in enumerate(ids)], "k string, n long"
-    ).repartition(8)
-    path = str(tmp_path / "t")
-    T.snapshot_write(spark, df, path, stats_cols=["k"], bloom_cols=["k"])
-    T.snapshot_delete(
-        spark, path, keys=["k"],
-        keys_df=spark.createDataFrame([(ids[5],), (ids[900],)], "k string"),
-        mode="mor", change_feed=False,
-    )
-    before = {e["path"] for e in T.manifest_files(path, T.read_manifest(path))}
-    T.snapshot_purge_deletes(spark, path)
-    m1 = T.read_manifest(path)
-    assert not m1.get("eq_deletes")
-    after = {e["path"] for e in T.manifest_files(path, m1)}
-    # bloom scoping: at most the 2 key-holding files (+ rare fp) moved
-    assert len(before & after) >= len(before) - 3
-    assert T.snapshot_read(spark, path).count() == 1998
-    assert T.snapshot_lookup(spark, path, "k", [ids[5], ids[900]]).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -3149,79 +2995,6 @@ def test_zorder_materializes_mor_deletes_and_guards(spark, tmp_path):
         T.snapshot_cluster(spark, sp, ["a", "s"])
     with pytest.raises(ValueError, match="2-4"):
         T.snapshot_cluster(spark, sp, ["a"])
-
-
-def test_backfill_stats_from_footers(spark, tmp_path):
-    """Retroactive pruning (r8): a table written WITHOUT stats_cols
-    gains per-file min/max from the parquet footers as a
-    metadata-only commit — paths and sequences untouched, rows
-    unchanged, pruning live afterwards; repeat call is a no-op."""
-    path = str(tmp_path / "t")
-    df = (
-        spark.range(4096)
-        .withColumn("v", (F.col("id") * 2).cast("double"))
-        .withColumn("s", F.format_string("k%05d", F.col("id")))
-    )
-    T.snapshot_write(
-        spark, df.repartitionByRange(8, "id").sortWithinPartitions("id"), path
-    )
-    m0 = T.read_manifest(path)
-    paths0 = {e["path"] for e in T.manifest_files(path, m0)}
-    assert all(not e.get("stats") for e in T.manifest_files(path, m0))
-    _, adm0 = T.snapshot_scan_files(path, "id", 100, 150)
-    assert len(adm0) == 8  # stats-less: everything admits
-
-    v = T.snapshot_backfill_stats(spark, path, ["id", "s"])
-    assert v == 1 and T.read_manifest(path)["op"] == "backfill_stats"
-    m1 = T.read_manifest(path)
-    assert {e["path"] for e in T.manifest_files(path, m1)} == paths0
-    _, adm_id = T.snapshot_scan_files(path, "id", 100, 150)
-    _, adm_s = T.snapshot_scan_files(path, "s", "k00100", "k00150")
-    assert len(adm_id) <= 2 and len(adm_s) <= 2
-    assert T.snapshot_read(spark, path).count() == 4096
-    assert _rows(T.snapshot_read(spark, path)) == _rows(
-        T.snapshot_read(spark, path, version=0)
-    )
-    # no-op repeat: no empty commit
-    assert T.snapshot_backfill_stats(spark, path, ["id"]) == 1
-    # CDF skips the metadata-only commit
-    assert T.read_snapshot_changes(spark, path, 0).count() == 0
-
-
-def test_backfill_stats_compute_missing_covers_ntz(spark, tmp_path):
-    """Spark writes no footer statistics for timestamp_ntz — the
-    footer pass leaves them open (conservative), compute_missing=True
-    fills the gap with one aggregate over only the gapped slice."""
-    import datetime as dt
-
-    path = str(tmp_path / "t")
-    df = (
-        spark.range(512)
-        .withColumn(
-            "ts",
-            F.to_timestamp(F.lit("2024-01-01"))
-            + F.make_interval(mins=F.col("id").cast("int")),
-        )
-    )
-    T.snapshot_write(
-        spark, df.repartitionByRange(4, "id").sortWithinPartitions("id"), path
-    )
-    T.snapshot_backfill_stats(spark, path, ["ts"])
-    _, adm = T.snapshot_scan_files(
-        path, "ts", dt.datetime(2024, 1, 1, 2, 10), dt.datetime(2024, 1, 1, 3, 0)
-    )
-    assert len(adm) == 4, "footer-only pass must leave ntz unpruned"
-    T.snapshot_backfill_stats(spark, path, ["ts"], compute_missing=True)
-    _, adm2 = T.snapshot_scan_files(
-        path, "ts", dt.datetime(2024, 1, 1, 2, 10), dt.datetime(2024, 1, 1, 3, 0)
-    )
-    assert len(adm2) <= 2
-    # sequences preserved -> a MoR delete recorded before the backfill
-    # still masks its rows afterwards
-    kdf = spark.createDataFrame([(5,)], "id long")
-    T.snapshot_delete(spark, path, keys_df=kdf, keys=["id"], mode="mor")
-    T.snapshot_backfill_stats(spark, path, ["id"], compute_missing=True)
-    assert T.snapshot_read(spark, path).filter(F.col("id") == 5).count() == 0
 
 
 def test_cluster_commit_skipped_by_cdf(spark, tmp_path):

@@ -27,8 +27,6 @@ transactional star schema onto an analytical lakehouse."""
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import SparkSession
 
 WEATHER_TABLE = "weather"
@@ -89,21 +87,3 @@ def drop_tables(spark: SparkSession, database: str | None = None) -> None:
     prefix = f"{database}." if database else ""
     for table in (TRAFFIC_TABLE, WEATHER_TABLE):
         spark.sql(f"DROP TABLE IF EXISTS {prefix}{table}")
-
-
-def analyze_table(
-    spark: SparkSession, table: str, columns: Sequence[str] | None = None
-) -> None:
-    """Collect table (and optionally column) statistics into the
-    catalog — what Postgres' autovacuum ANALYZE did for the reference
-    for free. With stats, Catalyst's cost-based optimizer can reorder
-    multi-way joins and pick broadcast sides from measured sizes
-    instead of file-size guesses; at 100 TB a wrong build side is an
-    OOM, so the maintenance DAG should ANALYZE after large loads."""
-    if columns:
-        spark.sql(
-            f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS "
-            + ", ".join(columns)
-        )
-    else:
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")

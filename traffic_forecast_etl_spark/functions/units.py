@@ -16,13 +16,14 @@ from pyspark.sql import functions as F
 
 def fahrenheit_to_celsius(value: Column | str, unit: Column | str | None = None) -> Column:
     """F6: int((f-32)*5/9) applied only where unit == 'F'
-    (reference: dags/utils.py:185-189)."""
+    (reference: dags/utils.py:185-189). A value outside the INT range
+    reads as NULL instead of failing the query under ANSI."""
     v = F.col(value) if isinstance(value, str) else value
-    conv = ((v - F.lit(32)) * F.lit(5) / F.lit(9)).cast("int")
+    conv = ((v - F.lit(32)) * F.lit(5) / F.lit(9)).try_cast("int")
     if unit is None:
         return conv
     u = F.col(unit) if isinstance(unit, str) else unit
-    return F.when(u == "F", conv).otherwise(v.cast("int"))
+    return F.when(u == "F", conv).otherwise(v.try_cast("int"))
 
 
 def decicelsius_to_celsius(col: Column | str) -> Column:

@@ -17,8 +17,7 @@ Model mapping (SURVEY M2-M4):
     model, MAE 0.084 vs RF 0.038).
 
 Metrics: MAE via RegressionEvaluator, Pearson R via ``corr`` (M5-M6);
-feature importances (M7); MLWriter save/load replaces the pickle
-blob (S6-S7).
+MLWriter save/load replaces the pickle blob (S6-S7).
 """
 
 from __future__ import annotations
@@ -106,12 +105,6 @@ def evaluate(model: PipelineModel, test: DataFrame, feature_cols: list[str] | No
     return EvalResult(mae=mae, pearson_r=r)
 
 
-def feature_importances(model: PipelineModel, feature_cols: list[str] | None = None) -> dict[str, float]:
-    feature_cols = feature_cols or FEATURE_COLS
-    imp = model.stages[-1].featureImportances
-    return {c: float(imp[i]) for i, c in enumerate(feature_cols)}
-
-
 def save(model: PipelineModel, path: str) -> None:
     """S7: MLWriter replaces the pickle sink (notebook cell 16)."""
     model.write().overwrite().save(path)
@@ -120,49 +113,3 @@ def save(model: PipelineModel, path: str) -> None:
 def load(path: str) -> PipelineModel:
     """S6: MLReader replaces pickle.load (dags/utils.py:231)."""
     return PipelineModel.load(path)
-
-
-def fit_per_group_linear(
-    df: DataFrame,
-    key_cols: list[str],
-    x_col: str,
-    y_col: str,
-) -> DataFrame:
-    """Per-group model training via applyInPandas (grouped map) — the
-    pattern for training one small model PER ENTITY at scale (a model
-    per sensor/detector rather than the reference's single global
-    model): each group's rows arrive as one Arrow-backed pandas frame
-    in one task, models fit in parallel across groups, and only the
-    O(1) coefficients come back.
-
-    The fitted model here is closed-form OLS (numpy polyfit), so the
-    result is deterministic and pinned equal to the pure-aggregate
-    twin operators/aggregates.linear_trend in test_ml — the swap-in
-    point for any sklearn estimator is the body of ``_fit``.
-
-    Scale note: one shuffle keyed by the group; a group must fit one
-    task (true for per-sensor series; NOT for 'one group is half the
-    corpus' keying — that shape belongs to the moment-aggregate twin,
-    which never moves the rows).
-    """
-    import pandas as pd
-
-    schema = ", ".join(
-        [f"{df.schema[k].name} {df.schema[k].dataType.simpleString()}" for k in key_cols]
-        + ["n bigint", "slope double", "intercept double"]
-    )
-
-    def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        keys = {k: [pdf[k].iloc[0]] for k in key_cols}
-        x = pdf[x_col].to_numpy(dtype="float64")
-        y = pdf[y_col].to_numpy(dtype="float64")
-        if len(x) < 2 or np.ptp(x) == 0.0:
-            return pd.DataFrame({**keys, "n": [len(x)], "slope": [None], "intercept": [None]})
-        slope, intercept = np.polyfit(x, y, 1)
-        return pd.DataFrame(
-            {**keys, "n": [len(x)], "slope": [float(slope)], "intercept": [float(intercept)]}
-        )
-
-    return df.groupBy(*key_cols).applyInPandas(_fit, schema=schema)

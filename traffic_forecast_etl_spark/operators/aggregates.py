@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -20,12 +20,6 @@ def group_avg(df: DataFrame, keys: Sequence[str], value: str, out: str | None = 
     groupby(['Datum','Uur']).mean()[['Waarde']],
     data/extract_from_raw_data.py:21,32)."""
     return df.groupBy(*keys).agg(F.avg(value).alias(out or value))
-
-
-def global_minmax(df: DataFrame, col: str) -> DataFrame:
-    """A2: grand-total min/max (reference: Count.min()/Count.max(),
-    notebook cell 6 ≈L74) — a 1-row aggregate."""
-    return df.agg(F.min(col).alias("min_val"), F.max(col).alias("max_val"))
 
 
 def profile(df: DataFrame) -> DataFrame:
@@ -58,17 +52,6 @@ def approx_distinct(df: DataFrame, keys: Sequence[str], distinct_col: str, rsd: 
     mergeable across partitions (the scale path)."""
     return df.groupBy(*keys).agg(
         F.approx_count_distinct(distinct_col, rsd).alias(f"apx_{distinct_col}")
-    )
-
-
-def percentiles(df: DataFrame, col: str, probs: Sequence[float] = (0.25, 0.5, 0.75)) -> DataFrame:
-    """Approximate quantiles via the GK sketch (mergeable, bounded
-    memory — the only sane quantile at 100 TB)."""
-    return df.agg(
-        *[
-            F.percentile_approx(col, p).alias(f"p{int(p * 100)}")
-            for p in probs
-        ]
     )
 
 
@@ -113,33 +96,3 @@ def profile_columns(df: DataFrame, cols: Sequence[str]) -> DataFrame:
         ]
     )
     return one.select(F.explode(structs).alias("p")).select("p.*")
-
-
-def linear_trend(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    x_col: Column | str,
-    y_col: Column | str,
-) -> DataFrame:
-    """Per-group ordinary-least-squares line fit — the trend-detection
-    aggregate (is this sensor's series drifting?): slope =
-    covar_pop(x,y)/var_pop(x), intercept = avg(y) - slope*avg(x).
-
-    Pure native aggregates, so the whole fit is ONE map-side-partial
-    groupBy shuffle carrying five moments per group — no per-group
-    data movement, no Python. Degenerate groups (var_pop(x)=0: a
-    single point or constant x) yield NULL slope/intercept.
-    """
-    x = F.col(x_col) if isinstance(x_col, str) else x_col
-    y = F.col(y_col) if isinstance(y_col, str) else y_col
-    slope = F.covar_pop(x, y) / F.nullif(F.var_pop(x), F.lit(0.0))
-    return df.groupBy(*key_cols).agg(
-        F.count(F.lit(1)).alias("n"),
-        slope.alias("__slope"),
-        (F.avg(y) - slope * F.avg(x)).alias("__intercept"),
-    ).select(
-        *key_cols,
-        "n",
-        F.round("__slope", 6).alias("slope"),
-        F.round("__intercept", 6).alias("intercept"),
-    )

@@ -14,12 +14,6 @@ Nothing per-row ever reaches Python during training; the in-array
 pair merge is a native ``F.aggregate`` fold (greedy left-to-right,
 exactly the reference algorithm's scan order).
 
-Encoding (``apply_bpe``) IS per-row sequential — merge rank lookup
-inside a while-loop — so it ships as an Arrow-batched pandas UDF
-with the learned ranks broadcast in the closure: the documented
-slow-path escape hatch (SURVEY §2.8 U2), amortized to one python
-worker call per Arrow batch.
-
 Reference anchor: the reference repo has no tokenizer plane
 (reference: Traffic-Prediction-Modelling.ipynb is numeric-only); this
 is LLM-pipeline extension surface, cited to the published algorithm.
@@ -27,11 +21,8 @@ is LLM-pipeline extension surface, cited to the published algorithm.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .text import tokens
 
@@ -396,96 +387,8 @@ def train_bpe(
 
 def merges_df(spark, merges: list[tuple[str, str]]) -> DataFrame:
     """The learned merges as a (rank, a, b) frame — the persistable
-    model artifact (write it, `apply_bpe` consumers read it)."""
+    model artifact."""
     return spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, a string, b string",
     )
-
-
-def apply_bpe_model(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    model: DataFrame,
-) -> DataFrame:
-    """Encode with a PERSISTED merge-table artifact (the (rank, a, b)
-    frame :func:`merges_df` writes): the deployment path — a tokenize
-    job loads the model table (KBs for any practical vocabulary: 32k
-    merges ≈ a few hundred KB), reconstructs the rank order, and
-    encodes without the training session's Python state. Rank order
-    comes from the table's ``rank`` column, so the artifact is the
-    single source of truth end-to-end.
-
-    The artifact is VALIDATED before use (ADVICE r6): ranks must be
-    exactly 0..n-1 with no NULLs, duplicates, or gaps — a partially
-    written or doubly-appended model table would otherwise silently
-    encode with a wrong merge order."""
-    rows = model.select("rank", "a", "b").collect()
-    ranks = [r["rank"] for r in rows]
-    if any(r is None for r in ranks):
-        raise ValueError(
-            "corrupt BPE model table: NULL rank values (partially "
-            "written artifact?) — refusing to encode"
-        )
-    if sorted(ranks) != list(range(len(ranks))):
-        raise ValueError(
-            f"corrupt BPE model table: ranks must be exactly "
-            f"0..{len(ranks) - 1} with no duplicates or gaps (got "
-            f"{len(ranks)} rows, rank range "
-            f"[{min(ranks) if ranks else None}, "
-            f"{max(ranks) if ranks else None}], "
-            f"{len(set(ranks))} distinct) — a doubly-appended or "
-            "truncated artifact would silently encode with a wrong "
-            "merge order"
-        )
-    merges = [(r["a"], r["b"]) for r in sorted(rows, key=lambda r: r["rank"])]
-    return apply_bpe(df, text_col, id_col, merges)
-
-
-def apply_bpe(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    merges: list[tuple[str, str]],
-) -> DataFrame:
-    """Encode documents with learned merges: (id, bpe_tokens,
-    n_bpe_tokens). Arrow-batched pandas UDF (per-word sequential
-    rank-lookup loop — the algorithm is inherently ordered, the
-    justified Python boundary); ranks ride the closure broadcast,
-    KBs for any practical merge count."""
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def encode(texts: pd.Series) -> pd.Series:
-        cache: dict[str, list[str]] = {}
-
-        def encode_word(word: str) -> list[str]:
-            got = cache.get(word)
-            if got is not None:
-                return got
-            syms = list(word) + [END_OF_WORD]
-            while len(syms) > 1:
-                best_rank, best_i = None, None
-                for i in range(len(syms) - 1):
-                    r = ranks.get((syms[i], syms[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best_rank, best_i = r, i
-                if best_i is None:
-                    break
-                syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-            cache[word] = syms
-            return syms
-
-        out = []
-        for t in texts:
-            toks: list[str] = []
-            for w in (t or "").split():
-                toks.extend(encode_word(w))
-            out.append(toks)
-        return pd.Series(out)
-
-    return df.select(
-        F.col(id_col),
-        encode(F.col(text_col)).alias("bpe_tokens"),
-    ).withColumn("n_bpe_tokens", F.size("bpe_tokens"))

@@ -42,26 +42,6 @@ def normalize_text(col: Column | str) -> Column:
     return F.trim(c)
 
 
-def char_shingles(col: Column | str, k: int = 5) -> Column:
-    """Distinct character k-gram shingle array, built natively:
-    sequence(1, len-k+1) → transform(substring) → array_distinct.
-    Short texts (< k chars) yield a single whole-string shingle."""
-    c = normalize_text(col)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(c, i, k)))
-
-
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (space-joined)."""
-    c = normalize_text(col)
-    toks = F.split(c, r"\s+")
-    cnt = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    idx = F.sequence(F.lit(0), cnt - 1)
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    )
-
-
 _SCAN_LIKE_NODES = frozenset(
     {
         "Project",

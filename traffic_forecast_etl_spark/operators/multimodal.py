@@ -25,17 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image | audio | video
-        T.StructField("format", T.StringType()),      # png/jpeg/wav/mp4/...
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -79,15 +68,6 @@ def _decode_one(buf: bytes) -> dict:
         "est_width": (len(buf) % 640) + 1,
         "est_height": (len(buf) % 480) + 1,
     }
-
-
-def decode_strict(buf: bytes) -> dict:
-    """The production decode entry point — requires codec libraries
-    that are intentionally not shipped in this container."""
-    raise NotImplementedError(
-        "real media decoding requires PIL/librosa/ffmpeg; "
-        "use decode_stub_features for the deterministic-fake path"
-    )
 
 
 def decode_stub_features(df: DataFrame, content_col: str = "content", id_col: str = "doc_id") -> DataFrame:

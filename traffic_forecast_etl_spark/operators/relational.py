@@ -55,19 +55,6 @@ def first_row(df: DataFrame, order_by: Sequence[str | Column]) -> DataFrame:
     return df.orderBy(*order_by).limit(1)
 
 
-def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """P7: typed casts; Spark int casts truncate toward zero, matching
-    pandas astype(int) (SURVEY §1.2)."""
-    return df.withColumns({c: F.col(c).cast(t) for c, t in casts.items()})
-
-
-def sort_rows(df: DataFrame, cols: Sequence[str | Column]) -> DataFrame:
-    """O1: multi-key global sort (range-partitioned shuffle; the only
-    global-order operator — avoid in pipelines at scale unless the
-    output truly needs total order)."""
-    return df.orderBy(*cols)
-
-
 def temporal_split(
     df: DataFrame, order_by: Sequence[str | Column], n_train: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -77,23 +64,13 @@ def temporal_split(
 
     Implemented with row_number over a global ordering. The empty
     partitionBy makes this a single-reducer window — correct, and fine
-    for ML-table scale; for 100 TB use a date-cutoff filter instead
-    (also provided: ``temporal_split_at``).
+    for ML-table scale; for 100 TB use a date-cutoff filter instead.
     """
     w = Window.orderBy(*order_by)
     ranked = df.withColumn("__rn", F.row_number().over(w))
     train = ranked.filter(F.col("__rn") <= n_train).drop("__rn")
     test = ranked.filter(F.col("__rn") > n_train).drop("__rn")
     return train, test
-
-
-def temporal_split_at(
-    df: DataFrame, ts_col: str, cutoff: Any
-) -> tuple[DataFrame, DataFrame]:
-    """O2 at scale: cutoff-based temporal split — two partition-prunable
-    filters, no global window."""
-    c = F.col(ts_col)
-    return df.filter(c < F.lit(cutoff)), df.filter(c >= F.lit(cutoff))
 
 
 def union_all(*dfs: DataFrame) -> DataFrame:

@@ -146,23 +146,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(
-    df: DataFrame, vec_col: str, dim: int, n_planes: int = 12, seed: int = 42, out: str = "lsh_bucket"
-) -> DataFrame:
-    """Random-hyperplane (sign) LSH bucket id: bit i = sign(v · r_i).
-    Same-bucket vectors collide with prob (1 - θ/π)^n_planes — the
-    standard cosine LSH. One map-only pass; bucketing is reusable
-    (write the bucketed corpus once, probe many times)."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(_hyperplanes(dim, n_planes, seed)):
-        arr = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(_dot(F.col(vec_col), arr) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseXOR(F.shiftleft(bit, i))
-    return df.withColumn(out, bucket)
-
-
 def multitable_bucket_entries(
     df: DataFrame,
     id_col: str,
@@ -179,9 +162,9 @@ def multitable_bucket_entries(
 
     All tables' planes stack into ONE (tables·planes × dim) matrix;
     buckets come from a single scan + one numpy matmul per Arrow
-    batch. The per-table lsh_bucket() expression form costs n_tables
-    scans × n_planes interpreted aggregate() lambdas per row —
-    measured ~7× slower at 2k×64.
+    batch (a per-table expression form, n_tables scans × n_planes
+    interpreted aggregate() lambdas per row, measured ~7× slower at
+    2k×64).
 
     ``sketch_planes > 0`` additionally emits ``__sk`` — the
     ``sketch_planes``-bit single-table hyperplane sketch (seeded by

@@ -1455,9 +1455,9 @@ def a7_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a8_median_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact median + min/max per group (the quantile surface; the
-    approximate GK-sketch variant is operators/aggregates.percentiles
-    — mergeable, the 100 TB path)."""
+    """Exact median + min/max per group (the quantile surface; an
+    approximate GK sketch, ``F.percentile_approx``, is the mergeable
+    100 TB path)."""
     li = _t(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.median("l_quantity").alias("med_qty"),
@@ -3201,10 +3201,7 @@ def a14_linear_trend(spark, sf_dir):
     with avg(x) — so for the cross-engine check it is assembled from
     6-decimal-ROUNDED pieces (slope, avg(y), avg(x)) identically on
     both engines: remaining last-ulp aggregation differences are
-    rounded away BEFORE the amplifying multiply. The full-precision
-    operator is operators/aggregates.linear_trend; its applyInPandas
-    grouped-map twin (ml.fit_per_group_linear, the per-entity-model
-    pattern) is pinned equal in test_ml."""
+    rounded away BEFORE the amplifying multiply."""
     ev = _t(spark, sf_dir, "events")
     x = (F.unix_micros("ts") - F.lit(1704067200000000)) / F.lit(3.6e9)
     y = F.col("value")

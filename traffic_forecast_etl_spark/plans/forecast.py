@@ -34,11 +34,12 @@ def normalize_forecast(payload_df: DataFrame) -> DataFrame:
     """Unit normalization (F5, F6): ISO timestamp parse; temperature
     F→C (truncating) only where Unit == 'F' (dags/utils.py:185-189);
     wind and precipitation passed through typed. An unparsable
-    timestamp reads as NULL and is rejected with the missing ones."""
+    timestamp reads as NULL and is rejected with the missing ones; a
+    number outside the INT range reads as NULL like a missing field."""
     out = payload_df.select(
         F.try_to_timestamp("datetime_raw").alias("datetime"),
         fahrenheit_to_celsius("temperature_value", "temperature_unit").alias("temperature"),
-        F.col("wind_speed").cast("int").alias("wind_speed"),
+        F.col("wind_speed").try_cast("int").alias("wind_speed"),
         F.col("has_precipitation").cast("boolean").alias("precipitation"),
     )
     # a null datetime can never key an idempotent insert (NULL never

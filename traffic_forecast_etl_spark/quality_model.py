@@ -110,34 +110,3 @@ def score_quality(
         F.round(prob, round_to).alias("quality_prob"),
         F.col("prediction").cast("int").alias("quality_pred"),
     )
-
-
-def quality_filter(
-    model: PipelineModel,
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Keep rows the classifier scores at or above ``threshold`` —
-    the corpus-curation filter form (returns the ORIGINAL rows, all
-    columns; the score is recomputed inline, not joined, so the
-    filter is still one map-only pass).
-
-    ``text_col``/``id_col`` are validated against the frame up front
-    (the model's own stage columns drive the transform, so a typo
-    here would otherwise be silently ignored)."""
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be a probability in [0,1]: {threshold}")
-    missing = [c for c in (text_col, id_col) if c not in docs.columns]
-    if missing:
-        raise ValueError(
-            f"quality_filter: column(s) {missing} not in frame "
-            f"(has: {docs.columns})"
-        )
-    scored = model.transform(docs)
-    prob = vector_to_array(F.col("probability"))[1]
-    return (
-        scored.filter(prob >= F.lit(float(threshold)))
-        .drop("__qc_toks", "__qc_feat", "rawPrediction", "probability", "prediction")
-    )

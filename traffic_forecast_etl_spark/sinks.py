@@ -414,87 +414,3 @@ def read_sink(
     if not os.path.isdir(path):
         recover_sink(path, min_marker_age_seconds=swap_grace_seconds)
     return spark.read.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as a hash-BUCKETED (and optionally sort-ordered)
-    catalog table.
-
-    This is the shuffle-elimination layout for repeated fact-fact
-    joins and aggregations (SCALE.md §Joins): two tables bucketed by
-    the same key into the same bucket count join with NO Exchange on
-    either side — at 100 TB that's the difference between a network-
-    bound job and a local merge. ``sort_cols`` additionally skips the
-    per-task sort of a sort-merge join. The write itself costs one
-    shuffle (hash-partition into buckets) — paid once, amortized over
-    every later join/agg on that key.
-
-    Bucketing metadata lives in the session catalog (``saveAsTable``;
-    plain ``.parquet(path)`` writes cannot carry it). ``path`` makes
-    it an external table (files owned by the caller).
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path:
-        writer = writer.option("path", path)
-    writer.format("parquet").saveAsTable(table)
-
-
-def clean_orphaned_staging(path: str, older_than_seconds: float = 3600.0) -> list[str]:
-    """Janitor for the non-transactional sink protocol: a crash
-    between merge_upsert's / compact_partition's rename pair leaves
-    `__staging_*` / `__old_*` / `__compact_*` / `__precompact_*`
-    siblings (and expire_date_partitions' in-table `__expired_*`
-    dirs) holding dead bytes forever. Remove those older than
-    ``older_than_seconds`` (mtime); age-gating keeps a CONCURRENT
-    in-flight merge's fresh staging dir safe — pick the gate above
-    the longest plausible write. Returns removed paths.
-
-    The Delta/Iceberg form of this janitor is VACUUM; same contract
-    (age-gated, safe against in-flight writers within the gate).
-
-    Commit-marker aware: resolves any interrupted swap FIRST
-    (recover_sink consumes the ``__commit_`` markers and the staging/
-    old dirs they reference), so the sweep below can never delete a
-    staging copy that an unresolved marker still needs.
-    """
-    import time
-
-    recover_sink(path, min_marker_age_seconds=older_than_seconds)
-    markers = ("__staging_", "__old_", "__compact_", "__precompact_", "__expired_")
-    now = time.time()
-    removed: list[str] = []
-    parent = os.path.dirname(os.path.abspath(path)) or "."
-    base = os.path.basename(os.path.abspath(path))
-    cands = [
-        os.path.join(parent, d)
-        for d in (os.listdir(parent) if os.path.isdir(parent) else [])
-        if d.startswith(base + "__")
-    ]
-    if os.path.isdir(path):
-        cands.extend(
-            os.path.join(path, d)
-            for d in os.listdir(path)
-            if d.startswith("__expired_")
-        )
-    for full in cands:
-        name = os.path.basename(full)
-        if not any(m in name for m in markers) or not os.path.isdir(full):
-            continue
-        if now - os.path.getmtime(full) < older_than_seconds:
-            continue
-        shutil.rmtree(full, ignore_errors=True)
-        # only report dirs that are actually gone — a failed delete
-        # (permissions, concurrent access) must not read as removed
-        if not os.path.exists(full):
-            removed.append(full)
-    return removed

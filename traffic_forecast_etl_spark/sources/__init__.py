@@ -1,4 +1,4 @@
-from .tables import TABLE_NAMES, load_table, load_tables, register_views
+from .tables import TABLE_NAMES, load_table, register_views
 from .csv import read_csv_auto, probe_delimiter
 from .json_payload import forecast_schema, read_json_payload
 from .jdbc import JdbcConfig, read_jdbc, write_jdbc_append
@@ -6,7 +6,6 @@ from .http_payload import ApiConfig, fetch_forecast, fetch_json
 from .delta_log import (
     delete_from_delta,
     delta_snapshot_files,
-    delta_sweep_orphans,
     read_delta,
     write_delta_append,
     write_delta_checkpoint,
@@ -16,12 +15,10 @@ from .iceberg_meta import (
     read_iceberg,
     write_iceberg_append,
 )
-from .writers import read_partitioned, write_date_partitioned
 
 __all__ = [
     "TABLE_NAMES",
     "load_table",
-    "load_tables",
     "register_views",
     "read_csv_auto",
     "probe_delimiter",
@@ -36,12 +33,9 @@ __all__ = [
     "write_delta_checkpoint",
     "delete_from_delta",
     "delta_snapshot_files",
-    "delta_sweep_orphans",
     "read_iceberg",
     "write_iceberg_append",
     "iceberg_snapshot_files",
     "read_jdbc",
     "write_jdbc_append",
-    "read_partitioned",
-    "write_date_partitioned",
 ]

@@ -749,9 +749,7 @@ def write_delta_append(
     so replay cost stays O(interval) JSON files instead of growing
     with table age — the spec's own compaction mechanism (None
     disables). A lost put-if-absent race deletes the just-moved data
-    files before re-raising (ADVICE r8) so nothing orphans;
-    :func:`delta_sweep_orphans` covers the crash-between-move-and-
-    commit window."""
+    files before re-raising (ADVICE r8) so nothing orphans."""
     try:
         latest = _latest_version(path)
     except FileNotFoundError:
@@ -1332,52 +1330,3 @@ def delete_from_delta(
             pass
         raise
     return version
-
-
-def delta_sweep_orphans(path: str) -> list[str]:
-    """Delete data/DV files in the table directory that NO action in
-    the retained log (any version: commit JSONs + checkpoint) has
-    ever referenced — the residue of a crash between staging moves
-    and the put-if-absent commit (ADVICE r8). Files referenced by any
-    historical add/remove stay put: they may still serve time travel
-    (retention-based vacuum of removed files is tablefmt's job for
-    its own format and out of this shim's scope). Returns the deleted
-    paths."""
-    referenced: set[str] = set()
-
-    def _note(action: dict) -> None:
-        body = action.get("add") or action.get("remove")
-        if not body:
-            return
-        referenced.add(body["path"])
-        dv = body.get("deletionVector")
-        if dv and dv.get("storageType") == "u":
-            referenced.add(
-                os.path.relpath(_dv_local_path(path, dv), path)
-            )
-
-    for v in _list_commits(path):
-        with open(_version_file(path, v)) as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    _note(json.loads(line))
-    cp = _read_checkpoint(path)
-    if cp is not None:
-        for a in cp[1]:
-            _note(a)
-    deleted: list[str] = []
-    for root, dirs, names in os.walk(path):
-        if _LOG_DIR in dirs:
-            dirs.remove(_LOG_DIR)
-        for name in names:
-            if not (name.endswith(".parquet") or name.endswith(".bin")):
-                continue
-            rel = os.path.relpath(os.path.join(root, name), path).replace(
-                os.sep, "/"
-            )
-            if rel not in referenced:
-                full = os.path.join(root, name)
-                os.remove(full)
-                deleted.append(full)
-    return sorted(deleted)

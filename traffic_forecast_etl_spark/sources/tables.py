@@ -87,12 +87,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return _ntz_to_utc_timestamp(df)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in names}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = TABLE_NAMES
 ) -> None:

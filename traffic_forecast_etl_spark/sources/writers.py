@@ -1,9 +1,6 @@
-"""Partitioned table writers (SCALE.md 'Layout' row).
-
-At 100 TB every time-series table is date-partitioned so that
-time-ranged scans prune at the directory level before any IO. These
-helpers pin that layout policy (and the test proves pruning happens:
-the physical plan's partition count drops).
+"""Table layout writers (SCALE.md 'Layout' row): partition
+compaction, range and z-order clustering for footer-stats data
+skipping, and the JSONL export.
 """
 
 from __future__ import annotations
@@ -12,30 +9,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_date_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str,
-    mode: str = "overwrite",
-    extra_partition_cols: Sequence[str] | None = None,
-) -> None:
-    """Write parquet partitioned by the date of ``ts_col`` (directory
-    per day: dt=YYYY-MM-DD). Dynamic partition overwrite replaces only
-    the partitions present in ``df`` — the idempotent-rewrite shape
-    merge_upsert uses at scale."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out = df.withColumn("dt", F.col(ts_col).cast("date").cast("string"))
-    cols = ["dt", *(extra_partition_cols or [])]
-    out.write.mode(mode).partitionBy(*cols).parquet(path)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read a partitioned table; filters on ``dt`` prune partitions
-    before file listing IO (PartitionFilters in the scan node)."""
-    return spark.read.parquet(path)
 
 
 def compact_partition(
@@ -97,47 +70,6 @@ def compact_partition(
         for f in files
         if f.endswith(".parquet")
     )
-
-
-def expire_date_partitions(
-    spark: SparkSession,
-    path: str,
-    older_than: str,
-    dt_col: str = "dt",
-) -> list[str]:
-    """Retention/TTL maintenance for a date-partitioned sink: drop
-    every ``dt=<value>`` partition directory with value strictly below
-    ``older_than`` (ISO yyyy-MM-dd strings compare lexically =
-    chronologically). Returns the dropped partition values.
-
-    This is the data-lifecycle half of sink maintenance (compaction
-    is the other): an append-forever events sink at 100 TB needs
-    retention enforced at the PARTITION level — a metadata-only
-    directory drop, never a scan-and-rewrite DELETE. Readers see a
-    partition atomically vanish (directory rename-then-delete), which
-    is the same visibility contract the compactor documents;
-    Delta/Iceberg `DELETE WHERE dt < ...` + VACUUM is the
-    transactional form.
-    """
-    import os
-    import shutil
-    import uuid
-
-    prefix = f"{dt_col}="
-    dropped: list[str] = []
-    for d in sorted(os.listdir(path)):
-        if not d.startswith(prefix) or not os.path.isdir(os.path.join(path, d)):
-            continue
-        val = d[len(prefix):]
-        if val < older_than:
-            live = os.path.join(path, d)
-            # rename first so a concurrent lister never sees a
-            # half-deleted partition, then delete the renamed dir
-            doomed = os.path.join(path, f"__expired_{uuid.uuid4().hex}")
-            os.rename(live, doomed)
-            shutil.rmtree(doomed, ignore_errors=True)
-            dropped.append(val)
-    return dropped
 
 
 def write_range_clustered(

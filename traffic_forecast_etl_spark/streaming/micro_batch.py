@@ -6,10 +6,8 @@ engine models it as Structured Streaming:
 
   - ``trigger(availableNow=True)`` = run-to-completion micro-batch —
     the scheduler-friendly form of the 12-hour poll (R2);
-  - ``withWatermark + dropDuplicates`` replaces ON CONFLICT for
-    late/duplicate events, with bounded state;
-  - ``foreachBatch`` + the idempotent sink (sinks.py) gives
-    effectively-exactly-once delivery to non-transactional stores;
+  - ``foreachBatch`` + a txn-keyed snapshot commit (tablefmt.py)
+    gives effectively-exactly-once delivery;
   - windowed/session aggregations are the streaming twins of catalog
     queries w5/w7 — same operators, same semantics, batch and stream.
 
@@ -178,28 +176,6 @@ def streaming_interval_join(
         "r_ts",
         F.round(F.col("l_value") + F.col("r_value"), 6).alias("pair_value"),
     )
-
-
-def streaming_dedup_sink(
-    events: DataFrame,
-    sink_path: str,
-    keys: list[str],
-    watermark: str = "2 hours",
-    checkpoint: str | None = None,
-) -> StreamingQuery:
-    """Watermarked dropDuplicates + foreachBatch idempotent append —
-    the streaming form of the reference's ON CONFLICT DO NOTHING sink."""
-    from ..sinks import insert_if_absent
-
-    deduped = events.withWatermark("ts", watermark).dropDuplicates(keys)
-
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        insert_if_absent(batch.sparkSession, batch, sink_path, keys)
-
-    writer = deduped.writeStream.foreachBatch(write_batch).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def streaming_rollup_maintenance(
@@ -413,46 +389,6 @@ def streaming_audited_append(
     return writer.start()
 
 
-def streaming_ann_index_sink(
-    stream: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "upsert",
-    txn_app: str = "streaming_ann_index",
-    checkpoint: str | None = None,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """EXACTLY-ONCE streaming ingestion into a persistent ANN index
-    (:mod:`..operators.ann_index`): each micro-batch of
-    ``(id, embedding)`` rows is assigned + PQ-encoded against the
-    index's FROZEN quantizers (O(batch) — nothing retrains) and
-    committed as one versioned upsert into the partition-pruned codes
-    table, carrying ``(txn_app, epoch_id)`` so an at-least-once
-    foreachBatch redelivery is a structural no-op. The index is
-    searchable (``ann_index_search``) after every tick, and readers
-    mid-commit see the previous consistent version — a live
-    embedding-ingestion tier whose search side never blocks on the
-    write side. The index must be BUILT first (frozen quantizers are
-    the append contract); same txn_app/checkpoint-lineage caveat as
-    :func:`streaming_snapshot_merge`."""
-    from ..operators.ann_index import ann_index_append
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        ann_index_append(
-            batch.sparkSession, batch, index_path,
-            id_col=id_col, vec_col=vec_col, mode=mode,
-            txn_app=txn_app, txn_version=int(epoch_id),
-        )
-
-    writer = stream.writeStream.foreachBatch(_apply).trigger(
-        **(trigger if trigger is not None else {"availableNow": True})
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
 def run_available_now(
     df: DataFrame,
     sink: Callable[[DataFrame, int], None] | None = None,
@@ -500,164 +436,6 @@ DOCUMENTS_SCHEMA = T.StructType(
         T.StructField("n_chars", T.LongType()),
     ]
 )
-
-
-def _expire_sig_store(sig_store_path: str, retention_days: int) -> list[str]:
-    """Drop signature-store partitions older than the dedup horizon:
-    cutoff = (max sig_dt present) - retention_days. The watermark is
-    the store's own max date — pure data, no wall clock — so replayed
-    ticks recompute the identical cutoff and expiry stays idempotent.
-    Partition values come from a directory listing (no scan)."""
-    import datetime
-    import os
-
-    from ..sources.writers import expire_date_partitions
-
-    prefix = "sig_dt="
-    dts = sorted(
-        d[len(prefix):]
-        for d in os.listdir(sig_store_path)
-        if d.startswith(prefix) and os.path.isdir(os.path.join(sig_store_path, d))
-    )
-    if not dts:
-        return []
-    horizon = datetime.date.fromisoformat(dts[-1]) - datetime.timedelta(
-        days=retention_days
-    )
-    return expire_date_partitions(
-        None, sig_store_path, horizon.isoformat(), dt_col="sig_dt"
-    )
-
-
-def streaming_near_dedup(
-    docs_stream: DataFrame,
-    corpus_path: str,
-    sig_store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-    jaccard_threshold: float = 0.5,
-    seed: int = 42,
-    checkpoint: str | None = None,
-    store_retention_days: int | None = None,
-    ingest_dt_col: str | None = None,
-) -> StreamingQuery:
-    """CONTINUOUS-INGESTION near-dedup — the composition a crawl
-    pipeline runs on every ingest tick, as one foreachBatch plane:
-
-      1. exact-dedup the batch within itself and against the corpus
-         (fingerprint anti-join, incremental_exact_dedup);
-      2. near-dedup survivors against the PERSISTED signature store
-         (incremental_near_dup_pairs — LSH band join vs the store,
-         estimate-Jaccard threshold), and within the batch itself
-         (minhash_lsh_pairs on the survivors, min-id winner);
-      3. append kept docs to the corpus and their signatures to the
-         store, so the NEXT tick sees them.
-
-    Steady-state cost per tick: O(batch text) + O(store signatures)
-    — corpus text is never re-read (the store carries 8·num_hashes
-    bytes per historical doc). Idempotence: both appends route
-    through insert_if_absent keyed by id, so a replayed micro-batch
-    (checkpoint recovery) cannot double-insert.
-
-    The batch-internal near-dup step keeps the MIN-id representative
-    (same convention as near_dedup_filter); batch docs near-duplicate
-    to the store are dropped outright. ``seed``/``num_hashes``/
-    ``shingle_k`` are store parameters — changing them invalidates
-    the store (documented on minhash_signatures).
-
-    BOUNDED STATE: with ``store_retention_days`` set, each signature
-    is stamped with its document's ingest date (``ingest_dt_col``,
-    required — a data column, not wall clock, so replays are
-    deterministic), the store is PARTITIONED by that date, and after
-    each tick every ``sig_dt`` partition older than
-    ``max(store dt) - retention`` days is dropped as a metadata-only
-    directory expiry (expire_date_partitions — never a
-    scan-and-rewrite). The store therefore holds O(retention-window
-    ingest), not O(ingest lifetime): the dedup HORIZON — a doc
-    re-crawled after the horizon is admitted as new, which is the
-    retention contract (exact-duplicate re-ingest is still caught
-    forever via the corpus-fingerprint anti-join in step 1). The
-    expiry cutoff derives from the store's own max date (a data
-    watermark), so a replayed tick recomputes the same cutoff."""
-    from ..operators.dedup import (
-        incremental_exact_dedup,
-        incremental_near_dup_pairs,
-        minhash_lsh_pairs,
-        minhash_signatures,
-    )
-    from ..sinks import insert_if_absent
-
-    if store_retention_days is not None and not ingest_dt_col:
-        raise ValueError(
-            "store_retention_days requires ingest_dt_col (a data column "
-            "stamping each doc's ingest date — wall clock would make "
-            "replays nondeterministic)"
-        )
-
-    def tick(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        if not batch.take(1):
-            return
-        try:
-            corpus = spark.read.parquet(corpus_path)
-            seen_sigs = spark.read.parquet(sig_store_path)
-            first_tick = False
-        except Exception:  # AnalysisException: store not created yet
-            corpus, seen_sigs, first_tick = None, None, True
-        # 1. exact: within-batch min-id rep, then anti-join the corpus
-        if first_tick:
-            from ..operators.dedup import exact_dedup
-
-            reps = exact_dedup(batch, text_col, id_col).select(id_col)
-            survivors = batch.join(reps, id_col, "left_semi")
-        else:
-            survivors = incremental_exact_dedup(batch, corpus, text_col, id_col)
-        # 2a. near-dup within the batch: min-id wins its cluster
-        batch_pairs = minhash_lsh_pairs(
-            survivors, text_col, id_col, num_hashes, bands, shingle_k,
-            jaccard_threshold, seed,
-        )
-        losers = batch_pairs.select(
-            F.greatest("id1", "id2").alias(id_col)
-        ).distinct()
-        survivors = survivors.join(losers, id_col, "left_anti")
-        # 2b. near-dup vs the store (estimate-threshold by design —
-        # corpus text is not read back on the steady-state path)
-        if not first_tick:
-            store_hits = incremental_near_dup_pairs(
-                survivors, seen_sigs, text_col, id_col, num_hashes,
-                bands, shingle_k, jaccard_threshold, seed,
-            ).select(F.col("new_id").alias(id_col)).distinct()
-            survivors = survivors.join(store_hits, id_col, "left_anti")
-        kept = survivors.localCheckpoint(eager=True)  # cut lineage: 2 sinks below
-        # 3. corpus + signature store appends (idempotent, keyed by id)
-        insert_if_absent(spark, kept, corpus_path, [id_col])
-        sigs = minhash_signatures(kept, text_col, id_col, num_hashes, shingle_k, seed)
-        if store_retention_days is None:
-            insert_if_absent(spark, sigs, sig_store_path, [id_col])
-            return
-        # bounded store: stamp each signature with its doc's ingest
-        # date, write date-partitioned, then expire partitions past
-        # the dedup horizon (metadata-only directory drops)
-        stamped = sigs.join(
-            kept.select(
-                id_col,
-                F.date_format(F.col(ingest_dt_col), "yyyy-MM-dd").alias("sig_dt"),
-            ),
-            id_col,
-        )
-        insert_if_absent(
-            spark, stamped, sig_store_path, [id_col], partition_by=["sig_dt"]
-        )
-        _expire_sig_store(sig_store_path, store_retention_days)
-
-    writer = docs_stream.writeStream.foreachBatch(tick).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def read_documents_stream(spark: SparkSession, path_dir: str) -> DataFrame:

@@ -1889,66 +1889,6 @@ def snapshot_scan(
     return df
 
 
-def snapshot_stats(
-    path: str,
-    cols: Sequence[str] | None = None,
-    version: int | None = None,
-    ref: str | None = None,
-) -> dict:
-    """Metadata-only aggregates (the Iceberg metadata-tables trick):
-    answer ``row_count`` / ``file_count`` / ``total_bytes`` and
-    per-column ``[min, max]`` for ``cols`` straight from the
-    manifest — ZERO Spark jobs, zero file opens, at any table size.
-
-    Exactness contract: counts are exact (manifest row counts are
-    written from the staging scan). Per-column min/max follow SQL
-    aggregate semantics (nulls ignored — parquet/Spark min/max stats
-    already exclude them) and are returned only when EVERY file
-    carries stats for the column; a column any file lacks maps to
-    None (unknown), never a guess. Tables with pending merge-on-read
-    deletes refuse row_count/min/max (the manifest can't subtract
-    masked rows) — compact first or read the data.
-
-    Returns ``{"row_count", "file_count", "total_bytes",
-    "columns": {col: [min, max] | None}}``."""
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version or ref, not both")
-        version = snapshot_ref_version(path, ref)
-    m = read_manifest(path, version)
-    if m.get("eq_deletes"):
-        raise ValueError(
-            "table has pending merge-on-read delete files — manifest "
-            "counts/mins can't subtract masked rows; snapshot_compact "
-            "materializes them, or read the data"
-        )
-    entries = manifest_files(path, m)
-    out = {
-        "row_count": sum(e["rows"] for e in entries),
-        "file_count": len(entries),
-        "total_bytes": sum(e["bytes"] for e in entries),
-        "columns": {},
-    }
-    for c in cols or []:
-        dtype = _col_type(m["schema"], c)
-        lo = hi = None
-        ok = bool(entries)
-        for e in entries:
-            if e["rows"] == 0:
-                continue  # empty file: no rows to bound
-            st = e.get("stats", {}).get(c)
-            if not st or st[0] is None or st[1] is None:
-                # all-null files also land here — indistinguishable
-                # from missing stats, so stay conservative
-                ok = False
-                break
-            mn, mx = _dec_stat(st[0], dtype), _dec_stat(st[1], dtype)
-            lo = mn if lo is None or mn < lo else lo
-            hi = mx if hi is None or mx > hi else hi
-        out["columns"][c] = [lo, hi] if ok and lo is not None else None
-    return out
-
-
 def snapshot_incremental(
     spark: SparkSession, path: str, since_version: int, version: int | None = None
 ) -> DataFrame:
@@ -2779,38 +2719,6 @@ def snapshot_abandon(path: str, wap_id: str) -> None:
     os.remove(_staged_path(path, wap_id))
 
 
-def snapshot_restore(path: str, version: int) -> int:
-    """Roll the table back to ``version`` AS A NEW COMMIT (the Delta
-    RESTORE concept): the target version's file set and schema are
-    re-published under a new version number — pure metadata, zero
-    data movement (files are immutable and still referenced), and the
-    bad versions stay in history for forensics until expired. The
-    change feed synthesizes restore deltas file-level exactly, like
-    overwrite."""
-    holder = acquire_writer_lease(path)
-    try:
-        parent = current_version(path)
-        if parent is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        if version == parent:
-            return parent  # restoring to the current version: no-op
-        m_target = read_manifest(path, version)
-        fileset = (
-            {"segments": m_target["segments"]}
-            if "segments" in m_target
-            else {"files": m_target["files"]}
-        )
-        return _commit(
-            path, fileset, "restore", m_target["schema"], parent,
-            _parent_txns(path, parent), eq_deletes=m_target.get("eq_deletes"),
-            partition_spec=m_target.get("partition_spec"),
-            bloom_cols=m_target.get("bloom_cols"),
-            partition_specs=m_target.get("partition_specs"),
-        )
-    finally:
-        release_writer_lease(path, holder)
-
-
 def snapshot_update(
     spark: SparkSession,
     path: str,
@@ -3396,238 +3304,6 @@ def snapshot_cluster(
             _parent_txns(path, parent), eq_deletes=m.get("eq_deletes"),
             partition_spec=spec,
             bloom_cols=m.get("bloom_cols"),
-            partition_specs=m.get("partition_specs"),
-        )
-    finally:
-        release_writer_lease(path, holder)
-
-
-def snapshot_backfill_stats(
-    spark: SparkSession,
-    path: str,
-    cols: Sequence[str],
-    compute_missing: bool = False,
-) -> int:
-    """Backfill per-file min/max stats for ``cols`` from the PARQUET
-    FOOTERS — a metadata-only commit, zero data movement, zero Spark
-    jobs (pyarrow reads each footer's row-group statistics on the
-    driver). The retroactive-pruning story: a table written before
-    anyone passed ``stats_cols`` gets full scan/merge/delete pruning
-    after the fact, entries keep their paths AND sequences (MoR
-    delete applicability is untouched), and files whose footer lacks
-    usable statistics for a column stay stats-less — pruning remains
-    an optimization, never a filter.
-
-    Footer bounds are trusted as written (parquet writers may
-    TRUNCATE long string stats, but truncation keeps them valid
-    bounds by spec). Some types never get footer stats from Spark's
-    writer (timestamp_ntz, notably); ``compute_missing=True`` fills
-    whatever the footer pass left open with ONE Spark min/max
-    aggregate grouped by input file, scanning ONLY the still-missing
-    (file, column) slice — no longer zero-job, still column-pruned
-    and O(gap). Returns the new version; no-op (no commit) when
-    every file already has stats for every requested column."""
-    try:
-        import pyarrow.parquet as _pq
-    except ImportError as e:  # pragma: no cover
-        raise ImportError("snapshot_backfill_stats needs pyarrow") from e
-
-    holder = acquire_writer_lease(path)
-    try:
-        parent = current_version(path)
-        if parent is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        m = read_manifest(path, parent)
-        for c in cols:
-            _col_type(m["schema"], c)  # KeyError on unknown column
-        entries = manifest_files(path, m, tag_segments=True)
-        new_entries: list[dict] = []
-        n_changed = 0
-        for e in entries:
-            stats = dict(e.get("stats") or {})
-            missing = [c for c in cols if c not in stats]
-            clean = {k: v for k, v in e.items() if k != "_seg"}
-            if missing:
-                md = _pq.ParquetFile(os.path.join(path, e["path"])).metadata
-                col_idx = {
-                    md.schema.column(i).name: i
-                    for i in range(md.num_columns)
-                }
-                for c in missing:
-                    i = col_idx.get(c)
-                    if i is None:
-                        continue  # pre-evolution file without the column
-                    mn = mx = None
-                    ok = md.num_row_groups > 0
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(i).statistics
-                        if st is None or not st.has_min_max:
-                            ok = False
-                            break
-                        lo, hi = st.min, st.max
-                        if isinstance(lo, _dt.datetime) and lo.tzinfo:
-                            lo = lo.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                            hi = hi.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                        mn = lo if mn is None or lo < mn else mn
-                        mx = hi if mx is None or hi > mx else mx
-                    if ok and mn is not None:
-                        stats[c] = [_enc_stat(mn), _enc_stat(mx)]
-                        n_changed += 1
-                clean["stats"] = stats
-            new_entries.append(clean)
-        if compute_missing:
-            # one aggregate over only the still-gapped files, only
-            # the still-gapped columns
-            gapped = [
-                e for e in new_entries
-                if e.get("rows", 1) and any(c not in e["stats"] for c in cols)
-            ]
-            if gapped:
-                gap_cols = sorted(
-                    {c for e in gapped for c in cols if c not in e["stats"]}
-                )
-                scan = spark.read.parquet(
-                    *[os.path.join(path, e["path"]) for e in gapped]
-                ).withColumn("__file", F.input_file_name())
-                aggs = []
-                for c in gap_cols:
-                    aggs.append(F.min(c).alias(f"__min_{c}"))
-                    aggs.append(F.max(c).alias(f"__max_{c}"))
-                by_file = {
-                    os.path.basename(r["__file"].replace("file:", "")): r
-                    for r in scan.groupBy("__file").agg(*aggs).collect()
-                }
-                for e in gapped:
-                    r = by_file.get(os.path.basename(e["path"]))
-                    if r is None:
-                        continue
-                    for c in gap_cols:
-                        if c in e["stats"]:
-                            continue
-                        mn, mx = r[f"__min_{c}"], r[f"__max_{c}"]
-                        if mn is not None:
-                            e["stats"][c] = [_enc_stat(mn), _enc_stat(mx)]
-                            n_changed += 1
-        if not n_changed:
-            return parent
-        fileset = _fileset_for_commit(
-            path,
-            m,
-            {e["path"] for e in entries},
-            {e["_seg"] for e in entries if e.get("_seg") is not None},
-            new_entries,
-            m["schema"],
-        )
-        return _commit(
-            path, fileset, "backfill_stats", m["schema"], parent,
-            _parent_txns(path, parent), eq_deletes=m.get("eq_deletes"),
-            partition_spec=m.get("partition_spec"),
-            bloom_cols=m.get("bloom_cols"),
-            partition_specs=m.get("partition_specs"),
-        )
-    finally:
-        release_writer_lease(path, holder)
-
-
-def snapshot_purge_deletes(spark: SparkSession, path: str) -> int:
-    """Materialize every pending merge-on-read delete file into the
-    data files it masks and retire the delete files (the Iceberg
-    rewrite-position-deletes maintenance concept, for our equality
-    deletes): per delete key-set, candidate files are those an
-    applicable delete could actually touch — sequence below the
-    delete's, key range / exact membership / bloom admit — and ONLY
-    those are rewritten (via the sequencing-aware read, so re-inserts
-    and later files are untouched); everything else carries by name.
-    Because candidates are chosen conservatively, every masked row is
-    provably gone afterwards and the commit records no eq_deletes.
-
-    The MoR lifecycle completer: `snapshot_delete(mode='mor')` makes
-    deletes O(|keys|) at write time; this op pays the rewrite later,
-    scoped to the files that need it, WITHOUT the full-table
-    bin-packing of `snapshot_compact` — the 100 TB shape for "erase
-    the anti-join rent, touch nothing else". No-op (no new commit)
-    when no deletes are pending. Contents are unchanged by
-    construction, so the change feed records an empty delta."""
-    holder = acquire_writer_lease(path)
-    try:
-        parent = current_version(path)
-        if parent is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        m = read_manifest(path, parent)
-        eqd = m.get("eq_deletes") or []
-        if not eqd:
-            return parent
-        spec = m.get("partition_spec")
-        bcols = m.get("bloom_cols")
-        schema_json = m["schema"]
-        table_schema = StructType.fromJson(json.loads(schema_json))
-        entries = manifest_files(path, m, tag_segments=True)
-        candidates: dict[str, dict] = {}
-        by_keys: dict[tuple, list[dict]] = {}
-        for d in eqd:
-            by_keys.setdefault(tuple(d["keys"]), []).append(d)
-        for keys, ds in by_keys.items():
-            k0 = keys[0]
-            k0_type = _col_type(schema_json, k0)
-            dels = spark.read.parquet(
-                *[os.path.join(path, d["path"]) for d in ds]
-            )
-            bounds = dels.agg(
-                F.min(k0).alias("lo"),
-                F.max(k0).alias("hi"),
-                F.approx_count_distinct(k0).alias("n"),
-            ).collect()[0]
-            if bounds["lo"] is None:
-                continue
-            sorted_keys = None
-            if bounds["n"] <= _EXACT_PRUNE_MAX_KEYS:
-                sorted_keys = sorted(
-                    _norm_key(r[k0])
-                    for r in dels.select(k0).distinct().collect()
-                )
-            lo, hi = _norm_key(bounds["lo"]), _norm_key(bounds["hi"])
-            padmit = _part_admitter(m, schema_json, k0, lo, hi, sorted_keys)
-            max_seq = max(d["seq"] for d in ds)
-            group = [
-                e
-                for e in entries
-                if e.get("seq", 0) < max_seq
-                and padmit(e)
-                and _touched(e, k0, lo, hi, sorted_keys, k0_type)
-            ]
-            if bcols and k0 in bcols:
-                group = _bloom_prefilter(path, group, k0, sorted_keys, k0_type)
-            for e in group:
-                candidates[e["path"]] = e
-        cand = list(candidates.values())
-        if cand:
-            # the sequencing-aware read materializes exactly the right
-            # deletes per file; rewritten rows come out clean
-            kept = _visible_read(spark, path, m, cand, schema=table_schema)
-            stats_cols = list(cand[0].get("stats", {}).keys())
-            new_entries = _stage_files(
-                spark, kept, path, stats_cols,
-                partition_spec=spec, bloom_cols=bcols,
-            )
-        else:
-            new_entries = []
-        fileset = _fileset_for_commit(
-            path,
-            m,
-            {e["path"] for e in cand},
-            {e["_seg"] for e in cand if e.get("_seg") is not None},
-            new_entries,
-            schema_json,
-        )
-        return _commit(
-            path, fileset, "purge_deletes", schema_json, parent,
-            _parent_txns(path, parent),
-            changes=[],  # contents unchanged: exact empty delta
-            # all pending deletes are fully materialized: every file
-            # they could touch was rewritten above
-            eq_deletes=None,
-            partition_spec=spec,
-            bloom_cols=bcols,
             partition_specs=m.get("partition_specs"),
         )
     finally:
