@@ -60,9 +60,6 @@ KEPT: dict[str, str] = {
     "sources.jdbc.read_jdbc": "the reference's Postgres sink (read side)",
     "sources.jdbc.write_jdbc_append": "the reference's Postgres sink (write side)",
     "sources.writers.compact_partition": "candidate for the forecast-jobs item",
-    "sources.writers.zorder_column": _TF_TEST,
-    "sources.writers.write_zorder": "layout writer built on zorder_column; next sweep decides it",
-    "sources.writers.write_range_clustered": "reference layout in the write_zorder test",
     "streaming.micro_batch.read_documents_stream": "source in the batch/stream curation parity test",
     "streaming.micro_batch.streaming_snapshot_merge": _TF_TEST,
     "tablefmt.snapshot_compact": _TF_TEST,

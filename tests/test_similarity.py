@@ -823,6 +823,34 @@ def test_ann_index_partition_pruned_lists(spark, emb, ann_path):
     assert {e["partition"][0] for e in adm} == {3}
 
 
+def test_ann_index_search_reads_one_codes_version(
+    spark, emb, ann_path, monkeypatch
+):
+    """A search resolves the codes version ONCE and plans every probed
+    list from that one version: at most two manifest reads however
+    many lists it probes (one per probed list would let an append that
+    lands mid-search mix two versions into one answer)."""
+    from traffic_forecast_etl_spark import tablefmt as TF
+    from traffic_forecast_etl_spark.operators import ann_index as AI
+
+    queries = emb.filter(F.col("vec_id") < 10)
+    want = sorted(map(tuple, AI.ann_index_search(
+        spark, queries, ann_path, k=5, nprobe=6, refine=16
+    ).collect()))
+    reads = []
+    real = TF.read_manifest
+
+    def counting(path, version=None):
+        reads.append((path, version))
+        return real(path, version)
+
+    monkeypatch.setattr(TF, "read_manifest", counting)
+    out = AI.ann_index_search(spark, queries, ann_path, k=5, nprobe=6, refine=16)
+    got = sorted(map(tuple, out.collect()))
+    assert len(reads) <= 2, reads
+    assert got == want
+
+
 def test_ann_index_append_and_upsert(spark, emb, ann_path):
     """Appends encode against the FROZEN quantizers (O(new) commit —
     every existing file carries by name); an identical-vector query

@@ -620,26 +620,17 @@ def test_scan_after_schema_evolution(spark, tmp_path):
 
 
 def test_scan_over_zorder_layout_prunes_both_dims(spark, tmp_path):
-    """snapshot_scan × z-order integration: commit a Morton-clustered
-    frame with stats on BOTH cluster dims — a bounded scan on EITHER
-    dim must open a strict subset of the files (the manifest-level
-    twin of the parquet-footer pruning test in test_skew_writers),
-    and stay row-identical to read+filter."""
-    from traffic_forecast_etl_spark.sources.writers import zorder_column
-
+    """snapshot_scan × z-order integration: cluster a table on two
+    dims with stats on BOTH — a bounded scan on EITHER dim must open
+    a strict subset of the files, and stay row-identical to
+    read+filter."""
     df = spark.range(0, 4096).select(
         F.col("id").alias("x"),
         ((F.col("id") * 2654435761) % 4096).alias("y"),
     )
-    z = zorder_column(df, ["x", "y"], bits=6)
-    clustered = (
-        df.withColumn("__z", z)
-        .repartitionByRange(16, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
     path = str(tmp_path / "t")
-    T.snapshot_write(spark, clustered, path, stats_cols=["x", "y"])
+    T.snapshot_write(spark, df, path, stats_cols=["x", "y"])
+    T.snapshot_cluster(spark, path, ["x", "y"], n_files=16, bits=6)
     n_total = len(T.read_manifest(path)["files"])
     assert n_total >= 8
     for dim in ("x", "y"):
@@ -656,21 +647,13 @@ def test_scan_multi_intersects_prunes_and_matches(spark, tmp_path):
     """Conjunctive scan over a z-order layout: the admitted set is
     the intersection of per-dim prunes (stricter than either alone),
     rows identical to read + both filters."""
-    from traffic_forecast_etl_spark.sources.writers import zorder_column
-
     df = spark.range(0, 4096).select(
         F.col("id").alias("x"),
         ((F.col("id") * 2654435761) % 4096).alias("y"),
     )
-    z = zorder_column(df, ["x", "y"], bits=6)
-    clustered = (
-        df.withColumn("__z", z)
-        .repartitionByRange(16, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
     path = str(tmp_path / "t")
-    T.snapshot_write(spark, clustered, path, stats_cols=["x", "y"])
+    T.snapshot_write(spark, df, path, stats_cols=["x", "y"])
+    T.snapshot_cluster(spark, path, ["x", "y"], n_files=16, bits=6)
     _, ax = T.snapshot_scan_files(path, "x", 0, 511)
     _, ay = T.snapshot_scan_files(path, "y", 0, 511)
     got = T.snapshot_scan_multi(spark, path, {"x": (0, 511), "y": (0, 511)})
@@ -900,21 +883,13 @@ def test_delete_on_zorder_layout(spark, tmp_path):
     """Delete over a z-ordered two-dim layout via prune_bounds on
     both dims: result ≡ read + anti-filter, and pruning admits a
     strict subset of files."""
-    from traffic_forecast_etl_spark.sources.writers import zorder_column
-
     path = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(x, y, f"p{x}_{y}") for x in range(32) for y in range(32)],
         "x int, y int, payload string",
     )
-    z = zorder_column(df, ["x", "y"], bits=6)
-    clustered = (
-        df.withColumn("__z", z)
-        .repartitionByRange(16, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-    T.snapshot_write(spark, clustered, path, stats_cols=["x", "y"])
+    T.snapshot_write(spark, df, path, stats_cols=["x", "y"])
+    T.snapshot_cluster(spark, path, ["x", "y"], n_files=16, bits=6)
     m0 = T.read_manifest(path)
     T.snapshot_delete(
         spark, path,
@@ -1167,13 +1142,37 @@ def test_sharded_file_prune_equals_inline_prune(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(T, "_INLINE_MAX_FILES", 2)
     T.snapshot_write(spark, base, path_b, stats_cols=["id"])
     assert "segments" in T.read_manifest(path_b)
-    for lo, hi in [(0, 99), (500, 501), (990, None), (None, 10)]:
+
+    # both tables stage the same 8 files; file names differ only in
+    # their per-commit token, so compare the part suffixes
+    def parts(paths):
+        return sorted(os.path.basename(p).split("-", 1)[1] for p in paths)
+
+    for lo, hi in [(0, 99), (500, 501), (990, None), (None, 10), (7, 7)]:
         _, adm_a = T.snapshot_scan_files(path_a, "id", lo, hi)
         _, adm_b = T.snapshot_scan_files(path_b, "id", lo, hi)
-        assert len(adm_a) == len(adm_b), (lo, hi)
+        assert parts(e["path"] for e in adm_a) == parts(
+            e["path"] for e in adm_b
+        ), (lo, hi)
         assert _rows(T.snapshot_scan(spark, path_b, "id", lo, hi)) == _rows(
             T.snapshot_scan(spark, path_a, "id", lo, hi)
         )
+    for values in [[5], [5, 500, 990], [123, 124], [None, 7], [5000]]:
+        _, adm_a = T.snapshot_lookup_files(path_a, "id", values)
+        _, adm_b = T.snapshot_lookup_files(path_b, "id", values)
+        assert parts(e["path"] for e in adm_a) == parts(
+            e["path"] for e in adm_b
+        ), values
+    for bounds in [
+        {"id": (0, 99), "val": ("v0", "v5")},
+        {"id": (900, None)},
+        {"id": (40, 30)},
+        {},
+    ]:
+        multi_a = T.snapshot_scan_multi(spark, path_a, bounds)
+        multi_b = T.snapshot_scan_multi(spark, path_b, bounds)
+        assert parts(multi_a.inputFiles()) == parts(multi_b.inputFiles()), bounds
+        assert _rows(multi_a) == _rows(multi_b), bounds
 
 
 def test_sharded_delete_and_change_feed(spark, tmp_path, monkeypatch):
@@ -1669,6 +1668,46 @@ def test_cdf_stream_unrecorded_merge_fails_loudly(spark, tmp_path):
     )
     with pytest.raises(StreamingQueryException, match="no recorded change feed"):
         q.awaitTermination()
+
+
+def test_cdf_cluster_version_contributes_nothing(spark, tmp_path):
+    """A z-order clustering rewrite moves rows between files without
+    changing any: the batch feed and the streaming source share one
+    change-feed rule, so both drain ZERO rows for it (the stream once
+    raised 'no recorded change feed' on a cluster version)."""
+    from traffic_forecast_etl_spark.streaming.cdf_source import (
+        read_snapshot_changes_stream,
+    )
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, (i * 7) % 64) for i in range(64)], "a long, b long"
+    )
+    T.snapshot_write(spark, df, path, stats_cols=["a", "b"])
+    T.snapshot_cluster(spark, path, ["a", "b"])
+    assert T.read_manifest(path)["op"] == "cluster"
+    assert T.read_snapshot_changes(spark, path, since_version=0).count() == 0
+    got = _drain_stream(
+        spark,
+        read_snapshot_changes_stream(spark, path, starting_version=0),
+        "cdf_cluster",
+    ).collect()
+    assert got == []
+
+
+def test_empty_keyed_delete_keeps_change_feed_readable(spark, tmp_path):
+    """A keyed delete whose key set is empty commits a no-op version;
+    with the change feed on (the default) it records an EMPTY feed, so
+    the feed over it stays readable instead of raising."""
+    path = str(tmp_path / "t")
+    T.snapshot_write(spark, _mk(spark, range(3)), path, stats_cols=["id"])
+    T.snapshot_delete(
+        spark, path, keys=["id"],
+        keys_df=spark.createDataFrame([], "id long"),
+    )
+    assert T.read_manifest(path)["op"] == "delete"
+    assert T.read_snapshot_changes(spark, path, since_version=0).count() == 0
+    assert T.snapshot_read(spark, path).count() == 3
 
 
 # ---------------------------------------------------------------------------

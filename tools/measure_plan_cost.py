@@ -60,7 +60,7 @@ def build_synthetic(path: str, n_files: int) -> None:
     ]
     os.makedirs(T._mdir(path), exist_ok=True)
     fileset = T._fileset_for_commit(path, None, set(), set(), entries, SCHEMA_JSON)
-    T._commit(path, fileset, "overwrite", SCHEMA_JSON, None)
+    T._commit(path, fileset, "overwrite", SCHEMA_JSON, None, {})
 
 
 def min_of(fn, n=5) -> float:

@@ -15,7 +15,7 @@ from collections.abc import Callable, Sequence
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 

@@ -312,9 +312,12 @@ def ann_index_search(
     the quantizers that encoded them."""
     if np is None:  # pragma: no cover
         raise ImportError("numpy required for ADC scoring")
-    model = _model_for_version(
-        path, TF.read_manifest(_codes_path(path), version)["version"]
-    )
+    # resolve the codes version ONCE: the model lookup and the list
+    # planning below both pin it, so an append landing mid-search
+    # can never mix two versions into one answer
+    cpath = _codes_path(path)
+    v = TF.read_manifest(cpath, version)["version"]
+    model = _model_for_version(path, v)
     books = [np.asarray(b, dtype=np.float64) for b in model["codebooks"]]
     q = queries.select(F.col(query_id).alias("__qid"), _doubles(vec_col).alias("__qv"))
     probes = _route(q, _cent_df(spark, model), nprobe)
@@ -324,19 +327,10 @@ def ann_index_search(
         r["centroid_id"]
         for r in probes.select("centroid_id").distinct().collect()
     )
-    cpath = _codes_path(path)
-    entries: dict[str, dict] = {}
-    m_manifest = None
-    for cid in probed:
-        m_manifest, adm = TF.snapshot_scan_files(
-            cpath, "centroid_id", cid, cid, version=version
-        )
-        for e in adm:
-            entries[e["path"]] = e
-    lists = TF._visible_read(
-        spark, cpath, m_manifest or TF.read_manifest(cpath, version),
-        list(entries.values()),
+    m_codes, entries = TF.snapshot_lookup_files(
+        cpath, "centroid_id", probed, version=v
     )
+    lists = TF._visible_read(spark, cpath, m_codes, entries)
     # ADC phase reads (id, centroid_id, pq_code) only; refine reads
     # exact cosines from the SAME pruned file set (vector column read
     # only here, only for shortlisted ids)

@@ -598,7 +598,7 @@ def ivf_assign(
     nearest centroids and re-ranks only those inverted lists.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     c = corpus.select(F.col(corpus_id).alias("__cid"), _doubles(vec_col).alias("__cv"))
     spark = corpus.sparkSession

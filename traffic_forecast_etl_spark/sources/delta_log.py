@@ -67,7 +67,6 @@ from .delta_dv import (
     dv_file_write,
     dv_payload_decode,
     dv_payload_decode_np,
-    dv_payload_encode,
     z85_decode,
     z85_encode,
 )

@@ -614,7 +614,7 @@ def _commit_snapshot(
     manifest list carrying the previous snapshot's manifests plus the
     new one, ``vN.metadata.json`` + ``version-hint.text``. Returns
     the (sequential) snapshot id."""
-    prev_manifests: list[dict] = []
+    carried: list[dict] = []
     version = 1
     snapshots: list[dict] = []
     if meta is not None:
@@ -622,7 +622,7 @@ def _commit_snapshot(
         snapshots = list(meta.get("snapshots") or [])
         snap = _pick_snapshot(meta, None)
         if snap is not None:
-            _, prev_manifests = read_avro(_localize(snap["manifest-list"], path))
+            _, carried = read_avro(_localize(snap["manifest-list"], path))
     sid = version  # sequential snapshot ids (fixture determinism)
 
     manifest_name = f"{token}-m0.avro"
@@ -633,7 +633,7 @@ def _commit_snapshot(
     write_avro(manifest_path, _MANIFEST_SCHEMA, entries)
     # carried manifests re-encode under the CURRENT list schema:
     # backfill sequence_number (fixture rule: == added snapshot id)
-    for m in prev_manifests:
+    for m in carried:
         m.setdefault("sequence_number", m.get("added_snapshot_id"))
     new_manifest = {
         "manifest_path": f"metadata/{manifest_name}",
@@ -647,7 +647,7 @@ def _commit_snapshot(
     write_avro(
         os.path.join(_meta_dir(path), list_name),
         _MANIFEST_LIST_SCHEMA,
-        prev_manifests + [new_manifest],
+        carried + [new_manifest],
     )
     snapshots.append(
         {

@@ -16,12 +16,13 @@ feed parallelizes across the cluster. The table path must be visible
 from executors (shared filesystem / object store — the same
 requirement every file source has).
 
-Version semantics mirror :func:`..tablefmt.read_snapshot_changes`:
-recorded change files for CDF-enabled MERGE/DELETE/UPDATE commits,
-file-level synthesis for append/overwrite/restore/first commits,
-compaction versions contribute nothing, and an unrecorded
-merge/delete/update raises at planning time (enable ``change_feed``
-on the writer).
+Version semantics are :func:`..tablefmt.version_changes`, the one
+change-feed rule the batch :func:`..tablefmt.read_snapshot_changes`
+also uses: recorded change files for CDF-enabled MERGE/DELETE/UPDATE
+commits, file-level synthesis for append/overwrite/replace_partitions
+and first commits, nothing for layout rewrites (compact, cluster),
+and an unrecorded merge/delete/update raises at planning time
+(enable ``change_feed`` on the writer).
 
 Reference anchor: the reference's consumers re-poll whole Postgres
 serving tables on the DAG's 12-hour schedule (reference:
@@ -41,39 +42,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-
-def _manifest(path: str, version: int) -> dict:
-    with open(
-        os.path.join(path, "_manifests", f"v{version:08d}.json")
-    ) as f:
-        return json.load(f)
-
-
-def _latest_version(path: str) -> int:
-    with open(os.path.join(path, "_manifests", "LATEST")) as f:
-        return int(json.load(f)["version"])
-
-
-def _oldest_version(path: str) -> int:
-    versions = [
-        int(n[1:9])
-        for n in os.listdir(os.path.join(path, "_manifests"))
-        if n.startswith("v") and n.endswith(".json")
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no snapshot table at {path}")
-    return min(versions)
-
-
-def _entries_of(path: str, m: dict) -> list[dict]:
-    """Data-file entries of a manifest (inline or sharded)."""
-    if "segments" in m:
-        out: list[dict] = []
-        for seg in m["segments"]:
-            with open(os.path.join(path, "_manifests", seg["path"])) as f:
-                out.extend(json.load(f)["files"])
-        return out
-    return list(m["files"])
+from .. import tablefmt as TF
 
 
 _MAX_EMBEDDED_DELETE_KEYS = 100_000
@@ -147,64 +116,25 @@ class SnapshotChangesStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         if self._start is not None:
             return {"version": int(self._start)}
-        return {"version": _oldest_version(self._path) - 1}
+        return {"version": TF.oldest_version(self._path) - 1}
 
     def latestOffset(self) -> dict:
-        return {"version": _latest_version(self._path)}
+        return {"version": TF.current_version(self._path)}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         parts: list[InputPartition] = []
         for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            m = _manifest(self._path, v)
-            op = m["op"]
-            if op == "compact":
-                continue
-            if m.get("changes") is not None:
+            for m, entries, ctype in TF.version_changes(self._path, v):
+                # recorded change files are exact rows already; only
+                # synthesized data files need the manifest's MoR deletes
                 parts.extend(
                     _ChangeFilePartition(
-                        os.path.join(self._path, e["path"]), None, v
+                        os.path.join(self._path, e["path"]), ctype, v,
+                        None if ctype is None
+                        else _delete_filters(self._path, m, e.get("seq", 0)),
                     )
-                    for e in m["changes"]
+                    for e in entries
                 )
-                continue
-            if m["parent"] is None or op in (
-                "overwrite", "append", "restore", "replace_partitions",
-            ):
-                cur = _entries_of(self._path, m)
-                parent_entries: list[dict] = []
-                m_par = None
-                if m["parent"] is not None:
-                    m_par = _manifest(self._path, m["parent"])
-                    parent_entries = _entries_of(self._path, m_par)
-                pset = {e["path"] for e in parent_entries}
-                cset = {e["path"] for e in cur}
-                parts.extend(
-                    _ChangeFilePartition(
-                        os.path.join(self._path, e["path"]), "insert", v,
-                        _delete_filters(self._path, m, e.get("seq", 0)),
-                    )
-                    for e in cur
-                    if e["path"] not in pset
-                )
-                if (
-                    op in ("overwrite", "restore", "replace_partitions")
-                    and m_par is not None
-                ):
-                    parts.extend(
-                        _ChangeFilePartition(
-                            os.path.join(self._path, e["path"]), "delete", v,
-                            _delete_filters(
-                                self._path, m_par, e.get("seq", 0)
-                            ),
-                        )
-                        for e in parent_entries
-                        if e["path"] not in cset
-                    )
-                continue
-            raise ValueError(
-                f"version {v} (op={op}) has no recorded change feed — "
-                "commit with change_feed=True"
-            )
         return parts
 
     def read(self, partition: _ChangeFilePartition):
@@ -255,9 +185,7 @@ class SnapshotChangesDataSource(DataSource):
 
     def schema(self) -> StructType:
         path = self.options["path"]
-        table = StructType.fromJson(
-            json.loads(_manifest(path, _latest_version(path))["schema"])
-        )
+        table = StructType.fromJson(json.loads(TF.read_manifest(path)["schema"]))
         return StructType(
             table.fields
             + [

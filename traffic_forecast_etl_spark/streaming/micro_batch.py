@@ -519,16 +519,7 @@ def consume_snapshot_changes(
         if start_version is not None:
             cur = start_version
         else:
-            import os
-
-            versions = sorted(
-                int(n[1:9])
-                for n in os.listdir(os.path.join(src_path, "_manifests"))
-                if n.startswith("v") and n.endswith(".json")
-            )
-            if not versions:
-                raise FileNotFoundError(f"no snapshot table at {src_path}")
-            cur = versions[0] - 1
+            cur = TF.oldest_version(src_path) - 1
     end = (
         TF.current_version(src_path) if end_version is None else end_version
     )

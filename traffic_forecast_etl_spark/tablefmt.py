@@ -119,6 +119,9 @@ _INLINE_MAX_FILES = 1024
 # consolidate when the segment list grows past this (many small
 # per-commit segments otherwise accrete one per append forever)
 _MAX_SEGMENTS = 64
+# manifest keys every commit inherits from its parent unless it
+# redefines them (see _commit)
+_LAYOUT_KEYS = ("eq_deletes", "partition_spec", "partition_specs", "bloom_cols")
 
 
 class SnapshotConflictError(RuntimeError):
@@ -178,31 +181,47 @@ def read_manifest(path: str, version: int | None = None) -> dict:
         ) from None
 
 
+def _versions(path: str) -> list[int]:
+    """Every retained manifest version, oldest first."""
+    return sorted(
+        int(n[1:9])
+        for n in os.listdir(_mdir(path))
+        if n.startswith("v") and n.endswith(".json")
+    )
+
+
+def oldest_version(path: str) -> int:
+    """The oldest retained version — where a consumer with no cursor
+    starts to read the change feed."""
+    versions = _versions(path)
+    if not versions:
+        raise FileNotFoundError(f"no snapshot table at {path}")
+    return versions[0]
+
+
 def snapshot_history(path: str) -> list[dict]:
     """All retained manifests, oldest first, without file lists —
     the ``DESCRIBE HISTORY`` surface. Sharded (v2) manifests answer
     from the per-segment counts in the manifest list — no segment
     reads, O(segments) per version."""
     out = []
-    for name in sorted(os.listdir(_mdir(path))):
-        if name.startswith("v") and name.endswith(".json"):
-            with open(os.path.join(_mdir(path), name)) as f:
-                m = json.load(f)
-            if "segments" in m:
-                n_files = sum(s["n_files"] for s in m["segments"])
-                n_rows = sum(s["n_rows"] for s in m["segments"])
-            else:
-                n_files = len(m["files"])
-                n_rows = sum(e["rows"] for e in m["files"])
-            out.append(
-                {
-                    "version": m["version"],
-                    "parent": m["parent"],
-                    "op": m["op"],
-                    "n_files": n_files,
-                    "n_rows": n_rows,
-                }
-            )
+    for v in _versions(path):
+        m = read_manifest(path, v)
+        if "segments" in m:
+            n_files = sum(s["n_files"] for s in m["segments"])
+            n_rows = sum(s["n_rows"] for s in m["segments"])
+        else:
+            n_files = len(m["files"])
+            n_rows = sum(e["rows"] for e in m["files"])
+        out.append(
+            {
+                "version": m["version"],
+                "parent": m["parent"],
+                "op": m["op"],
+                "n_files": n_files,
+                "n_rows": n_rows,
+            }
+        )
     return out
 
 
@@ -1153,10 +1172,7 @@ def snapshot_evolve_partition(path: str, new_spec: Sequence | None) -> int:
     """
     holder = acquire_writer_lease(path)
     try:
-        parent = current_version(path)
-        if parent is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        m = read_manifest(path, parent)
+        m, txns = _open_commit(path)
         norm = (
             _norm_partition_spec(new_spec, m["schema"])
             if new_spec is not None
@@ -1166,7 +1182,7 @@ def snapshot_evolve_partition(path: str, new_spec: Sequence | None) -> int:
         if specs is None:
             specs = [m.get("partition_spec") or []]
         if norm == (m.get("partition_spec") or []):
-            return parent  # already the default: no-op, no commit
+            return m["version"]  # already the default: no-op, no commit
         if norm not in specs:
             specs = specs + [norm]
         fileset = (
@@ -1175,12 +1191,9 @@ def snapshot_evolve_partition(path: str, new_spec: Sequence | None) -> int:
             else {"files": m["files"]}
         )
         return _commit(
-            path, fileset, "evolve_partition", m["schema"], parent,
-            _parent_txns(path, parent),
+            path, fileset, "evolve_partition", m["schema"], m, txns,
             changes=[],  # contents unchanged: exact empty delta
-            eq_deletes=m.get("eq_deletes"),
             partition_spec=norm or None,
-            bloom_cols=m.get("bloom_cols"),
             partition_specs=specs,
         )
     finally:
@@ -1321,25 +1334,63 @@ def _stage_files(
     return entries
 
 
+def _open_commit(
+    path: str,
+    txn_app: str | None = None,
+    txn_version: int | None = None,
+    create: bool = False,
+) -> tuple[dict | None, dict[str, int] | None]:
+    """Start a commit under the held writer lease: read the parent
+    manifest ONCE and carry its writer-app → last-applied-version map
+    forward (Delta's txnAppId/txnVersion). Because the LATEST manifest
+    always holds the full map, replay detection survives
+    ``snapshot_expire`` dropping the manifest that first recorded a
+    transaction. Returns ``(parent manifest, txns)``; the manifest is
+    None only with ``create`` on an empty path (else a missing table
+    raises), and ``txns`` is None when ``txn_app`` already committed
+    ``txn_version`` or later — a replay that must commit nothing."""
+    if (txn_app is None) != (txn_version is None):
+        raise ValueError("txn_app and txn_version must be passed together")
+    m = None if create and current_version(path) is None else read_manifest(path)
+    txns = dict((m or {}).get("txns", {}))
+    if txn_app is not None:
+        if txns.get(txn_app, -1) >= txn_version:
+            return m, None
+        txns[txn_app] = txn_version
+    return m, txns
+
+
 def _commit(
     path: str,
     entries: list[dict] | dict,
     op: str,
     schema_json: str,
-    parent: int | None,
-    txns: dict[str, int] | None = None,
+    m_parent: dict | None,
+    txns: dict[str, int],
     changes: list[dict] | None = None,
-    eq_deletes: list[dict] | None = None,
-    partition_spec: list[dict] | None = None,
-    bloom_cols: list[str] | None = None,
-    partition_specs: list[list[dict]] | None = None,
+    **layout,
 ) -> int:
-    """``entries`` is a plain list (inline v1 file list) or a fileset
-    dict from :func:`_fileset_for_commit` ({"files": ...} or
-    {"segments": ...}). ``eq_deletes`` (merge-on-read equality-delete
-    file entries) are pruned before recording: a delete whose
-    sequence is <= every remaining data file's sequence can never
-    apply again (the rows it masked were rewritten) and is retired."""
+    """Publish the next version after ``m_parent`` (None: the table's
+    first commit). ``entries`` is a plain list (inline v1 file list)
+    or a fileset dict from :func:`_fileset_for_commit` ({"files": ...}
+    or {"segments": ...}).
+
+    The new manifest INHERITS the parent's layout — pending
+    ``eq_deletes``, ``partition_spec``, ``partition_specs`` and
+    ``bloom_cols`` — unless ``layout`` overrides a key: an overwrite
+    redefines all four, a partition evolution sets the spec, a
+    merge-on-read delete adds delete files. Inheriting by default is
+    what keeps a rewrite from dropping pending deletes (a merge once
+    did, and deleted rows came back). ``eq_deletes`` (merge-on-read
+    equality-delete file entries) are pruned before recording: a
+    delete whose sequence is <= every remaining data file's sequence
+    can never apply again (the rows it masked were rewritten) and is
+    retired."""
+    lay = {k: (m_parent or {}).get(k) for k in _LAYOUT_KEYS}
+    lay.update(layout)
+    eq_deletes, partition_spec = lay["eq_deletes"], lay["partition_spec"]
+    bloom_cols, partition_specs = lay["bloom_cols"], lay["partition_specs"]
+    parent = None if m_parent is None else m_parent["version"]
     fileset = entries if isinstance(entries, dict) else {"files": entries}
     if eq_deletes:
         if "segments" in fileset:
@@ -1361,7 +1412,7 @@ def _commit(
         # for correctness decisions
         "ts": int(_dt.datetime.now(_dt.timezone.utc).timestamp() * 1e6),
         "schema": schema_json,
-        "txns": txns or {},
+        "txns": txns,
         **fileset,
     }
     if changes is not None:
@@ -1394,24 +1445,13 @@ def _commit(
     return version
 
 
-def _parent_txns(path: str, parent: int | None) -> dict[str, int]:
-    """Writer-app → last-applied-version map, carried FORWARD into
-    every commit (like Delta's txnAppId/txnVersion): because the
-    LATEST manifest always holds the full map, replay detection
-    survives ``snapshot_expire`` dropping the manifest that originally
-    recorded a transaction."""
-    if parent is None:
-        return {}
-    return dict(read_manifest(path, parent).get("txns", {}))
-
-
 def last_txn_version(path: str, app: str) -> int | None:
     """Highest transaction version committed by ``app`` (None if the
     app never committed) — the streaming-sink replay question."""
     v = current_version(path)
     if v is None:
         return None
-    return _parent_txns(path, v).get(app)
+    return read_manifest(path, v).get("txns", {}).get(app)
 
 
 def _evolve_schema(
@@ -1505,29 +1545,19 @@ def snapshot_write(
         raise ValueError(
             f"mode must be overwrite|append|replace_partitions: {mode}"
         )
-    if (txn_app is None) != (txn_version is None):
-        raise ValueError("txn_app and txn_version must be passed together")
     os.makedirs(path, exist_ok=True)
     holder = acquire_writer_lease(path)
     try:
-        parent = current_version(path)
-        txns = _parent_txns(path, parent)
-        if txn_app is not None:
-            if txns.get(txn_app, -1) >= txn_version:
-                return parent  # replayed batch: already applied
-            txns[txn_app] = txn_version
-        if mode in ("append", "replace_partitions") and parent is not None:
-            schema_json = _evolve_schema(
-                read_manifest(path, parent)["schema"], df.schema, merge_schema
-            )
-        else:
-            schema_json = df.schema.json()
-        m_parent = (
-            read_manifest(path, parent)
-            if mode in ("append", "replace_partitions") and parent is not None
-            else None
-        )
+        m, txns = _open_commit(path, txn_app, txn_version, create=True)
+        if txns is None:
+            return m["version"]  # replayed batch: already applied
+        # the parent whose files and layout this commit carries:
+        # none for an overwrite, which replaces both
+        m_parent = m if mode != "overwrite" else None
         if m_parent is not None:
+            schema_json = _evolve_schema(
+                m_parent["schema"], df.schema, merge_schema
+            )
             spec = m_parent.get("partition_spec")
             if partition_spec is not None:
                 given = _norm_partition_spec(partition_spec, schema_json)
@@ -1543,6 +1573,7 @@ def snapshot_write(
                     f"got {list(bloom_cols)}) — overwrite to redefine"
                 )
         else:
+            schema_json = df.schema.json()
             spec = (
                 _norm_partition_spec(partition_spec, schema_json)
                 if partition_spec is not None
@@ -1605,15 +1636,13 @@ def snapshot_write(
             fileset = _fileset_for_commit(
                 path, m_parent, set(), set(), entries, schema_json
             )
-        return _commit(
-            path, fileset, mode, schema_json, parent, txns,
-            # append keeps pending merge-on-read deletes in force;
-            # overwrite replaces the table, so they die with it
-            eq_deletes=(m_parent or {}).get("eq_deletes"),
-            partition_spec=spec,
-            bloom_cols=bcols,
-            partition_specs=(m_parent or {}).get("partition_specs"),
+        # append keeps pending merge-on-read deletes in force;
+        # overwrite replaces the table, so they die with it
+        layout = {} if m_parent is not None else dict(
+            eq_deletes=None, partition_spec=spec, bloom_cols=bcols,
+            partition_specs=None,
         )
+        return _commit(path, fileset, mode, schema_json, m, txns, **layout)
     finally:
         release_writer_lease(path, holder)
 
@@ -1629,17 +1658,136 @@ def snapshot_read(
     Every file named by the manifest is immutable, so the returned
     DataFrame is a consistent point-in-time view no concurrent commit
     can shear — the isolation plain-dir parquet readers never get."""
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version or ref, not both")
-        version = snapshot_ref_version(path, ref)
-    m = read_manifest(path, version)
+    m = _resolve(path, version, ref)
     # the MANIFEST schema drives the read (not the first footer Spark
     # happens to open): after schema evolution, files written before a
     # column existed null-fill it, and time travel to an old version
     # reads with THAT version's schema. Merge-on-read equality
     # deletes, if any, are applied per the sequencing rule.
     return _visible_read(spark, path, m, manifest_files(path, m))
+
+
+def _touched(
+    entry: dict, key: str, lo, hi, sorted_keys: list | None, dtype: DataType
+) -> bool:
+    """Can this file contain any batch key? Conservative on missing
+    stats (counts as touched). Manifest stats are decoded to the
+    column's native type before comparison (see ``_dec_stat``)."""
+    st = entry.get("stats", {}).get(key)
+    if not st or st[0] is None or st[1] is None:
+        return True
+    fmin, fmax = _dec_stat(st[0], dtype), _dec_stat(st[1], dtype)
+    if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
+        return False
+    if sorted_keys is not None:
+        i = bisect_left(sorted_keys, fmin)
+        return i < len(sorted_keys) and sorted_keys[i] <= fmax
+    return True
+
+
+def _norm_bounds(schema_json: str, bounds: dict[str, tuple]) -> dict | None:
+    """``{col: (lower, upper)}`` → ``{col: (lo, hi, dtype)}``, each
+    bound checked against and normalized to the column's manifest
+    type (:func:`_check_bound`; either bound None = open). None when
+    some bound is inverted: the predicate admits no file."""
+    norm: dict[str, tuple] = {}
+    for key, (lower, upper) in bounds.items():
+        dtype = _col_type(schema_json, key)
+        lo = _check_bound(lower, dtype, key, "lower")
+        hi = _check_bound(upper, dtype, key, "upper")
+        if lo is not None and hi is not None and lo > hi:
+            return None
+        norm[key] = (lo, hi, dtype)
+    return norm
+
+
+def _plan_files(
+    path: str, m: dict, bounds: dict[str, tuple], values: list | None = None
+) -> list[dict]:
+    """File PLANNING, the one implementation behind every scan, lookup
+    and copy-on-write commit: the entries of manifest ``m`` that can
+    hold a row inside EVERY ``bounds`` range (``{col: (lo, hi,
+    dtype)}``, see :func:`_norm_bounds`) and, with ``values`` (the
+    sorted exact key set on the single bounded column), one of those
+    keys. Four stages, cheapest first:
+
+    1. segment aggregate stats — a sharded manifest reads only the
+       segments whose ranges overlap every bound;
+    2. recorded partition tuples (:func:`_part_admitter`, exact);
+    3. per-file min/max (:func:`_touched`; exact-membership bisect
+       with ``values``);
+    4. bloom sidecars, with ``values``, when the table indexes the
+       key (:func:`_bloom_prefilter`).
+
+    Files without stats, tuples or blooms are admitted — pruning is
+    an optimization, never a filter. Pure manifest arithmetic on the
+    driver: zero footer reads, zero Spark jobs. Entries come back
+    tagged with ``_seg`` (see :func:`manifest_files`) so a commit that
+    rewrites them names the affected segments without a second
+    membership scan. Empty ``bounds`` admits every file."""
+    schema_json = m["schema"]
+    padmits = [
+        _part_admitter(m, schema_json, k, lo, hi, values)
+        for k, (lo, hi, _dtype) in bounds.items()
+    ]
+
+    def admit(e: dict) -> bool:
+        return all(p(e) for p in padmits) and all(
+            _touched(e, k, lo, hi, values, dt)
+            for k, (lo, hi, dt) in bounds.items()
+        )
+
+    if "segments" in m:
+        out = [
+            dict(e, _seg=i)
+            for i, seg in enumerate(m["segments"])
+            if all(
+                _seg_admits(seg, k, lo, hi, dt)
+                for k, (lo, hi, dt) in bounds.items()
+            )
+            for e in _read_segment(path, seg)
+            if admit(e)
+        ]
+    else:
+        out = [dict(e, _seg=None) for e in m["files"] if admit(e)]
+    if values is not None:
+        ((key, (_lo, _hi, dtype)),) = bounds.items()
+        if key in (m.get("bloom_cols") or []):
+            out = _bloom_prefilter(path, out, key, values, dtype)
+    return out
+
+
+def _batch_keys(df: DataFrame, k0: str) -> tuple:
+    """The batch side of keyed planning, shared by snapshot_merge and
+    the keyed snapshot_delete: ONE aggregate for the batch's [min,
+    max] of ``k0`` plus an approximate distinct count, then — at most
+    ``_EXACT_PRUNE_MAX_KEYS`` keys — the sorted distinct keys, so
+    planning prunes by exact membership (the normal upsert shape)
+    instead of range overlap. Returns ``(lo, hi, sorted keys or
+    None)``; ``lo`` is None when the batch has no non-null key."""
+    b = df.agg(
+        F.min(k0).alias("lo"),
+        F.max(k0).alias("hi"),
+        F.approx_count_distinct(k0).alias("n"),
+    ).collect()[0]
+    if b["lo"] is None:
+        return None, None, None
+    sorted_keys = None
+    if b["n"] <= _EXACT_PRUNE_MAX_KEYS:
+        sorted_keys = sorted(
+            _norm_key(r[k0]) for r in df.select(k0).distinct().collect()
+        )
+    return _norm_key(b["lo"]), _norm_key(b["hi"]), sorted_keys
+
+
+def _resolve(path: str, version: int | None, ref: str | None) -> dict:
+    """The manifest a read names by ``version=`` or tag ``ref=``
+    (neither: the latest)."""
+    if ref is not None:
+        if version is not None:
+            raise ValueError("pass version or ref, not both")
+        version = snapshot_ref_version(path, ref)
+    return read_manifest(path, version)
 
 
 def snapshot_scan_files(
@@ -1656,57 +1804,20 @@ def snapshot_scan_files(
     overlap ``[lower, upper]`` (either bound may be None =
     unbounded). Files without stats for ``key`` are admitted
     conservatively — pruning is an optimization, never a filter.
+    An equality range (``lower == upper``) IS a point probe, so the
+    bloom sidecars prune it too, like :func:`snapshot_lookup_files`.
 
     Planning is pure manifest arithmetic on the driver: O(files in
     manifest) comparisons over KBs of JSON, zero footer reads, zero
     Spark jobs — at 100 TB a key-ranged read is decided without
     touching storage."""
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version or ref, not both")
-        version = snapshot_ref_version(path, ref)
-    m = read_manifest(path, version)
-    dtype = _col_type(m["schema"], key)
-    lo = _check_bound(lower, dtype, key, "lower")
-    hi = _check_bound(upper, dtype, key, "upper")
-    if lo is not None and hi is not None and lo > hi:
+    m = _resolve(path, version, ref)
+    bounds = _norm_bounds(m["schema"], {key: (lower, upper)})
+    if bounds is None:
         return m, []
-    # hidden partitioning: transform the bounds and prune on recorded
-    # partition tuples FIRST (exact, per-file), then on min/max stats
-    padmit = _part_admitter(m, m["schema"], key, lo, hi, None)
-    if "segments" in m:
-        # stream segments, skipping whole segments whose aggregate
-        # range can't overlap — the manifest list is all that's
-        # always parsed
-        admitted = []
-        for seg in m["segments"]:
-            if _seg_admits(seg, key, lo, hi, dtype):
-                admitted.extend(
-                    e
-                    for e in _read_segment(path, seg)
-                    if padmit(e) and _touched(e, key, lo, hi, None, dtype)
-                )
-        if (
-            lo is not None
-            and lo == hi
-            and key in (m.get("bloom_cols") or [])
-        ):
-            admitted = _bloom_prefilter(path, admitted, key, [lo], dtype)
-        return m, admitted
-    admitted = [
-        e
-        for e in m["files"]
-        if padmit(e) and _touched(e, key, lo, hi, None, dtype)
-    ]
-    if (
-        lo is not None
-        and lo == hi
-        and key in (m.get("bloom_cols") or [])
-    ):
-        # an equality range IS a point probe: let the blooms prune
-        # what min/max can't on an unclustered key
-        admitted = _bloom_prefilter(path, admitted, key, [lo], dtype)
-    return m, admitted
+    lo, hi, _dtype = bounds[key]
+    point = [lo] if lo is not None and lo == hi else None
+    return m, _plan_files(path, m, bounds, point)
 
 
 def snapshot_lookup_files(
@@ -1728,11 +1839,7 @@ def snapshot_lookup_files(
     files, zero Spark jobs. Files without a bloom (pre-bloom commits,
     evolved columns) are admitted conservatively; a NULL probe value
     admits everything (blooms never index NULL)."""
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version or ref, not both")
-        version = snapshot_ref_version(path, ref)
-    m = read_manifest(path, version)
+    m = _resolve(path, version, ref)
     dtype = _col_type(m["schema"], key)
     vals = sorted(
         {_norm_key(_check_bound(v, dtype, key, "lookup")) for v in values
@@ -1742,21 +1849,7 @@ def snapshot_lookup_files(
         if any(v is None for v in values):  # NULL probe: no pruning
             return m, manifest_files(path, m)
         return m, []
-    lo, hi = vals[0], vals[-1]
-    padmit = _part_admitter(m, m["schema"], key, lo, hi, vals)
-    if "segments" in m:
-        pool = []
-        for seg in m["segments"]:
-            if _seg_admits(seg, key, lo, hi, dtype):
-                pool.extend(_read_segment(path, seg))
-    else:
-        pool = list(m["files"])
-    admitted = [
-        e for e in pool if padmit(e) and _touched(e, key, lo, hi, vals, dtype)
-    ]
-    if (m.get("bloom_cols") or []) and key in m["bloom_cols"]:
-        admitted = _bloom_prefilter(path, admitted, key, vals, dtype)
-    return m, admitted
+    return m, _plan_files(path, m, {key: (vals[0], vals[-1], dtype)}, vals)
 
 
 def snapshot_lookup(
@@ -1786,61 +1879,15 @@ def snapshot_scan_multi(
 ) -> DataFrame:
     """Conjunctive multi-column range scan: admit only files whose
     stats overlap EVERY ``col: (lower, upper)`` bound (either bound
-    None = open). With a z-order layout (``write_zorder`` →
-    ``snapshot_write(stats_cols=dims)``) each dimension's per-file
-    min/max is tight, so the admitted set is the INTERSECTION of the
-    per-dim prunes — the two-axis (time AND entity) read the z-order
-    layout exists for. Residual predicates applied; row-identical to
-    snapshot_read + filters by construction."""
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version or ref, not both")
-        version = snapshot_ref_version(path, ref)
-    m = read_manifest(path, version)
-    norm: dict[str, tuple] = {}
-    empty = False
-    for key, (lower, upper) in bounds.items():
-        dtype = _col_type(m["schema"], key)
-        lo = _check_bound(lower, dtype, key, "lower")
-        hi = _check_bound(upper, dtype, key, "upper")
-        if lo is not None and hi is not None and lo > hi:
-            empty = True
-            break
-        norm[key] = (lo, hi, dtype)
-    padmits = [
-        _part_admitter(m, m["schema"], k, lo, hi, None)
-        for k, (lo, hi, _dt2) in norm.items()
-    ]
-    if empty:
-        admitted = []
-    elif "segments" in m:
-        # a segment is read only if its aggregate ranges overlap
-        # EVERY bound — the intersection prune at segment level
-        admitted = []
-        for seg in m["segments"]:
-            if all(
-                _seg_admits(seg, k, lo, hi, dt)
-                for k, (lo, hi, dt) in norm.items()
-            ):
-                admitted.extend(
-                    e
-                    for e in _read_segment(path, seg)
-                    if all(p(e) for p in padmits)
-                    and all(
-                        _touched(e, k, lo, hi, None, dt)
-                        for k, (lo, hi, dt) in norm.items()
-                    )
-                )
-    else:
-        admitted = [
-            e
-            for e in m["files"]
-            if all(p(e) for p in padmits)
-            and all(
-                _touched(e, k, lo, hi, None, dt)
-                for k, (lo, hi, dt) in norm.items()
-            )
-        ]
+    None = open). With a z-order layout (:func:`snapshot_cluster` on
+    the bounded columns) each dimension's per-file min/max is tight,
+    so the admitted set is the INTERSECTION of the per-dim prunes —
+    the two-axis (time AND entity) read the z-order layout exists
+    for. Residual predicates applied; row-identical to snapshot_read
+    + filters by construction."""
+    m = _resolve(path, version, ref)
+    norm = _norm_bounds(m["schema"], bounds)
+    admitted = [] if norm is None else _plan_files(path, m, norm)
     df = _visible_read(spark, path, m, admitted)
     for key, (lower, upper) in bounds.items():
         if lower is not None:
@@ -1961,40 +2008,6 @@ def snapshot_incremental(
     return spark.read.schema(schema).parquet(*added)
 
 
-def _candidate_pool(
-    path: str, m: dict, key: str, lo, hi, dtype: DataType
-) -> list[dict]:
-    """Entries that could contain keys in [lo, hi], tagged with their
-    segment index (``_seg``): for sharded manifests only segments
-    whose aggregate range overlaps are READ at all — commit-time
-    pruning costs O(overlapping files), never O(table)."""
-    if "segments" not in m:
-        return [dict(e, _seg=None) for e in m["files"]]
-    pool: list[dict] = []
-    for i, seg in enumerate(m["segments"]):
-        if _seg_admits(seg, key, lo, hi, dtype):
-            pool.extend(dict(e, _seg=i) for e in _read_segment(path, seg))
-    return pool
-
-
-def _touched(
-    entry: dict, key: str, lo, hi, sorted_keys: list | None, dtype: DataType
-) -> bool:
-    """Can this file contain any batch key? Conservative on missing
-    stats (counts as touched). Manifest stats are decoded to the
-    column's native type before comparison (see ``_dec_stat``)."""
-    st = entry.get("stats", {}).get(key)
-    if not st or st[0] is None or st[1] is None:
-        return True
-    fmin, fmax = _dec_stat(st[0], dtype), _dec_stat(st[1], dtype)
-    if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
-        return False
-    if sorted_keys is not None:
-        i = bisect_left(sorted_keys, fmin)
-        return i < len(sorted_keys) and sorted_keys[i] <= fmax
-    return True
-
-
 def snapshot_merge(
     spark: SparkSession,
     batch: DataFrame,
@@ -2040,19 +2053,14 @@ def snapshot_merge(
     ``snapshot_incremental`` documents.
     """
     keys = list(keys)
-    if (txn_app is None) != (txn_version is None):
-        raise ValueError("txn_app and txn_version must be passed together")
     os.makedirs(path, exist_ok=True)
     holder = acquire_writer_lease(path)
     try:
-        parent = current_version(path)
-        txns = _parent_txns(path, parent)
-        if txn_app is not None:
-            if txns.get(txn_app, -1) >= txn_version:
-                return parent
-            txns[txn_app] = txn_version
+        m, txns = _open_commit(path, txn_app, txn_version, create=True)
+        if txns is None:
+            return m["version"]
         deduped = batch.dropDuplicates(keys)
-        if parent is None:
+        if m is None:
             entries = _fileset_for_commit(
                 path, None, set(), set(),
                 _stage_files(spark, deduped, path, keys),
@@ -2071,42 +2079,20 @@ def snapshot_merge(
                 path, entries, "merge", deduped.schema.json(), None, txns,
                 changes=changes,
             )
-        m = read_manifest(path, parent)
         spec = m.get("partition_spec")
         schema_json = _evolve_schema(m["schema"], deduped.schema, merge_schema)
         table_schema = StructType.fromJson(json.loads(schema_json))
         k0 = keys[0]
-        bounds = deduped.agg(
-            F.min(k0).alias("lo"),
-            F.max(k0).alias("hi"),
-            F.approx_count_distinct(k0).alias("n"),
-        ).collect()[0]
-        bcols = m.get("bloom_cols")
-        if bounds["lo"] is None:
+        lo, hi, sorted_keys = _batch_keys(deduped, k0)
+        if lo is None:
             carry = _fileset_for_commit(path, m, set(), set(), [], schema_json)
             return _commit(
-                path, carry, "merge", schema_json, parent, txns,
+                path, carry, "merge", schema_json, m, txns,
                 changes=[] if change_feed else None,
-                eq_deletes=m.get("eq_deletes"),
-                partition_spec=spec,
-                bloom_cols=bcols,
-                partition_specs=m.get("partition_specs"),
             )
-        k0_type = _col_type(schema_json, k0)
-        sorted_keys = None
-        if bounds["n"] <= _EXACT_PRUNE_MAX_KEYS:
-            sorted_keys = sorted(
-                _norm_key(r[k0]) for r in deduped.select(k0).distinct().collect()
-            )
-        lo, hi = _norm_key(bounds["lo"]), _norm_key(bounds["hi"])
-        padmit = _part_admitter(m, schema_json, k0, lo, hi, sorted_keys)
-        touched = [
-            e
-            for e in _candidate_pool(path, m, k0, lo, hi, k0_type)
-            if padmit(e) and _touched(e, k0, lo, hi, sorted_keys, k0_type)
-        ]
-        if bcols and k0 in bcols:
-            touched = _bloom_prefilter(path, touched, k0, sorted_keys, k0_type)
+        touched = _plan_files(
+            path, m, {k0: (lo, hi, _col_type(schema_json, k0))}, sorted_keys
+        )
         removed = None
         if touched:
             existing = _visible_read(spark, path, m, touched, schema=table_schema)
@@ -2124,7 +2110,8 @@ def snapshot_merge(
             {e["path"] for e in touched},
             {e["_seg"] for e in touched if e.get("_seg") is not None},
             _stage_files(
-                spark, out, path, keys, partition_spec=spec, bloom_cols=bcols
+                spark, out, path, keys, partition_spec=spec,
+                bloom_cols=m.get("bloom_cols"),
             ),
             schema_json,
         )
@@ -2138,18 +2125,13 @@ def snapshot_merge(
             changes = _stage_files(
                 spark, change_df, path, [], subdir=_CHANGES_DIR
             )
+        # pending merge-on-read delete files stay in force (inherited)
+        # for the files this merge did NOT rewrite: the rewrite itself
+        # materializes deletes via _visible_read, and the new files'
+        # higher sequence keeps old deletes off them
+        # (test_merge_keeps_pending_mor_deletes)
         return _commit(
-            path, fileset, "merge", schema_json, parent, txns, changes=changes,
-            # pending merge-on-read delete files stay in force for the
-            # files this merge did NOT rewrite (the rewrite itself
-            # materializes deletes via _visible_read, and the new
-            # files' higher sequence keeps old deletes off them);
-            # dropping them here resurrected deleted rows (r7 bugfix,
-            # pinned by test_merge_keeps_pending_mor_deletes)
-            eq_deletes=m.get("eq_deletes"),
-            partition_spec=spec,
-            bloom_cols=bcols,
-            partition_specs=m.get("partition_specs"),
+            path, fileset, "merge", schema_json, m, txns, changes=changes
         )
     finally:
         release_writer_lease(path, holder)
@@ -2223,21 +2205,11 @@ def snapshot_delete(
             "merge-on-read deletes are equality deletes — pass keys_df "
             "(predicate deletes need the cow mode's rewrite)"
         )
-    if (txn_app is None) != (txn_version is None):
-        raise ValueError("txn_app and txn_version must be passed together")
     holder = acquire_writer_lease(path)
     try:
-        parent = current_version(path)
-        if parent is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        txns = _parent_txns(path, parent)
-        if txn_app is not None:
-            if txns.get(txn_app, -1) >= txn_version:
-                return parent
-            txns[txn_app] = txn_version
-        m = read_manifest(path, parent)
-        spec = m.get("partition_spec")
-        bcols = m.get("bloom_cols")
+        m, txns = _open_commit(path, txn_app, txn_version)
+        if txns is None:
+            return m["version"]
         schema_json = m["schema"]
         table_schema = StructType.fromJson(json.loads(schema_json))
 
@@ -2245,43 +2217,13 @@ def snapshot_delete(
             keys = list(keys)
             del_keys = keys_df.select(*keys).dropDuplicates(keys)
             k0 = keys[0]
-            bounds = del_keys.agg(
-                F.min(k0).alias("lo"),
-                F.max(k0).alias("hi"),
-                F.approx_count_distinct(k0).alias("n"),
-            ).collect()[0]
-            if bounds["lo"] is None:
-                # empty key set: no-op commit (still records txns)
-                carry = _fileset_for_commit(
-                    path, m, set(), set(), [], schema_json
-                )
-                return _commit(
-                    path, carry, "delete", schema_json, parent, txns,
-                    eq_deletes=m.get("eq_deletes"),
-                    partition_spec=spec,
-                    bloom_cols=bcols,
-                    partition_specs=m.get("partition_specs"),
-                )
-            k0_type = _col_type(schema_json, k0)
-            sorted_keys = None
-            if bounds["n"] <= _EXACT_PRUNE_MAX_KEYS:
-                sorted_keys = sorted(
-                    _norm_key(r[k0])
-                    for r in del_keys.select(k0).distinct().collect()
-                )
-            lo, hi = _norm_key(bounds["lo"]), _norm_key(bounds["hi"])
-            padmit = _part_admitter(m, schema_json, k0, lo, hi, sorted_keys)
-            candidates = [
-                e
-                for e in _candidate_pool(path, m, k0, lo, hi, k0_type)
-                if padmit(e) and _touched(e, k0, lo, hi, sorted_keys, k0_type)
-            ]
-            if bcols and k0 in bcols:
-                candidates = _bloom_prefilter(
-                    path, candidates, k0, sorted_keys, k0_type
-                )
-            if mode == "mor":
-                new_version = parent + 1
+            lo, hi, sorted_keys = _batch_keys(del_keys, k0)
+            # an empty key set plans nothing: a no-op commit that
+            # still records txns
+            candidates = [] if lo is None else _plan_files(
+                path, m, {k0: (lo, hi, _col_type(schema_json, k0))}, sorted_keys
+            )
+            if mode == "mor" and lo is not None:
                 d_staged = _stage_files(
                     spark, del_keys, path, [], subdir=_DELETES_DIR
                 )
@@ -2291,7 +2233,7 @@ def snapshot_delete(
                         "rows": e["rows"],
                         "bytes": e["bytes"],
                         "keys": list(keys),
-                        "seq": new_version,
+                        "seq": m["version"] + 1,
                     }
                     for e in d_staged
                 ]
@@ -2311,46 +2253,14 @@ def snapshot_delete(
                     path, m, set(), set(), [], schema_json
                 )
                 return _commit(
-                    path, carry, "delete", schema_json, parent, txns,
+                    path, carry, "delete", schema_json, m, txns,
                     changes=changes,
                     eq_deletes=list(m.get("eq_deletes") or []) + d_entries,
-                    partition_spec=spec,
-                    bloom_cols=bcols,
-                    partition_specs=m.get("partition_specs"),
                 )
         else:
             cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-            if prune_bounds:
-                norm: dict[str, tuple] = {}
-                impossible = False
-                for key, (lower, upper) in prune_bounds.items():
-                    dtype = _col_type(schema_json, key)
-                    lo = _check_bound(lower, dtype, key, "lower")
-                    hi = _check_bound(upper, dtype, key, "upper")
-                    if lo is not None and hi is not None and lo > hi:
-                        impossible = True
-                        break
-                    norm[key] = (lo, hi, dtype)
-                if impossible:
-                    candidates = []
-                else:
-                    first = next(iter(norm))
-                    flo, fhi, fdt = norm[first]
-                    padmits = [
-                        _part_admitter(m, schema_json, k, lo, hi, None)
-                        for k, (lo, hi, _dt2) in norm.items()
-                    ]
-                    candidates = [
-                        e
-                        for e in _candidate_pool(path, m, first, flo, fhi, fdt)
-                        if all(p(e) for p in padmits)
-                        and all(
-                            _touched(e, k, lo, hi, None, dt)
-                            for k, (lo, hi, dt) in norm.items()
-                        )
-                    ]
-            else:
-                candidates = manifest_files(path, m, tag_segments=True)
+            norm = _norm_bounds(schema_json, prune_bounds or {})
+            candidates = [] if norm is None else _plan_files(path, m, norm)
 
         changes: list[dict] | None = [] if change_feed else None
         if candidates:
@@ -2372,7 +2282,8 @@ def snapshot_delete(
                 {e["_seg"] for e in candidates if e.get("_seg") is not None},
                 _stage_files(
                     spark, kept, path, stats_cols,
-                    partition_spec=spec, bloom_cols=bcols,
+                    partition_spec=m.get("partition_spec"),
+                    bloom_cols=m.get("bloom_cols"),
                 ),
                 schema_json,
             )
@@ -2387,11 +2298,7 @@ def snapshot_delete(
         else:
             fileset = _fileset_for_commit(path, m, set(), set(), [], schema_json)
         return _commit(
-            path, fileset, "delete", schema_json, parent, txns, changes=changes,
-            eq_deletes=m.get("eq_deletes"),
-            partition_spec=spec,
-            bloom_cols=bcols,
-            partition_specs=m.get("partition_specs"),
+            path, fileset, "delete", schema_json, m, txns, changes=changes
         )
     finally:
         release_writer_lease(path, holder)
@@ -2490,12 +2397,10 @@ def snapshot_version_as_of(path: str, ts) -> int:
     timestamp — re-bootstrap from an explicit version)."""
     ts_us = _instant_us(ts)
     best = None
-    for name in sorted(os.listdir(_mdir(path))):
-        if name.startswith("v") and name.endswith(".json"):
-            with open(os.path.join(_mdir(path), name)) as f:
-                m = json.load(f)
-            if m.get("ts") is not None and m["ts"] <= ts_us:
-                best = m["version"] if best is None else max(best, m["version"])
+    for v in _versions(path):
+        m = read_manifest(path, v)
+        if m.get("ts") is not None and m["ts"] <= ts_us:
+            best = m["version"] if best is None else max(best, m["version"])
     if best is None:
         raise ValueError(
             f"no retained version of {path} at or before the requested "
@@ -2658,31 +2563,27 @@ def snapshot_publish(
     silently discard the concurrent commits — else raises
     SnapshotConflictError. The staged manifest is consumed; replay
     protection comes from the usual ``txn_app``/``txn_version``."""
-    if (txn_app is None) != (txn_version is None):
-        raise ValueError("txn_app and txn_version must be passed together")
     holder = acquire_writer_lease(path)
     try:
         s = _read_staged(path, wap_id)
-        parent = current_version(path)
-        txns = _parent_txns(path, parent)
-        if txn_app is not None:
-            if txns.get(txn_app, -1) >= txn_version:
-                os.remove(_staged_path(path, wap_id))
-                return parent  # replayed publish: consume, commit nothing
-            txns[txn_app] = txn_version
-        m_cur = read_manifest(path, parent)
+        m_cur, txns = _open_commit(path, txn_app, txn_version)
+        if txns is None:
+            os.remove(_staged_path(path, wap_id))
+            return m_cur["version"]  # replayed publish: consume, commit nothing
         if s["mode"] == "overwrite":
-            if parent != s["parent"]:
+            if m_cur["version"] != s["parent"]:
                 raise SnapshotConflictError(
                     f"staged overwrite {wap_id} planned against version "
-                    f"{s['parent']} but the table is at {parent} — "
+                    f"{s['parent']} but the table is at {m_cur['version']} — "
                     "re-stage (publishing would discard concurrent commits)"
                 )
             version = _commit(
                 path, {"files": s["files"]}, "overwrite", s["schema"],
-                parent, txns,
+                m_cur, txns,
+                eq_deletes=None,
                 partition_spec=s.get("partition_spec"),
                 bloom_cols=s.get("bloom_cols"),
+                partition_specs=None,
             )
         else:
             if m_cur.get("partition_spec") != s.get("partition_spec"):
@@ -2700,11 +2601,7 @@ def snapshot_publish(
                 path, m_cur, set(), set(), s["files"], schema_json
             )
             version = _commit(
-                path, fileset, "append", schema_json, parent, txns,
-                eq_deletes=m_cur.get("eq_deletes"),
-                partition_spec=m_cur.get("partition_spec"),
-                bloom_cols=m_cur.get("bloom_cols"),
-                partition_specs=m_cur.get("partition_specs"),
+                path, fileset, "append", schema_json, m_cur, txns
             )
         os.remove(_staged_path(path, wap_id))
         return version
@@ -2741,20 +2638,11 @@ def snapshot_update(
     rows per matched row."""
     if not set_exprs:
         raise ValueError("set_exprs must name at least one column")
-    if (txn_app is None) != (txn_version is None):
-        raise ValueError("txn_app and txn_version must be passed together")
     holder = acquire_writer_lease(path)
     try:
-        parent = current_version(path)
-        if parent is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        txns = _parent_txns(path, parent)
-        if txn_app is not None:
-            if txns.get(txn_app, -1) >= txn_version:
-                return parent
-            txns[txn_app] = txn_version
-        m = read_manifest(path, parent)
-        spec = m.get("partition_spec")
+        m, txns = _open_commit(path, txn_app, txn_version)
+        if txns is None:
+            return m["version"]
         schema_json = m["schema"]
         table_schema = StructType.fromJson(json.loads(schema_json))
         known = {f.name for f in table_schema.fields}
@@ -2764,37 +2652,8 @@ def snapshot_update(
                 f"set_exprs name columns not in the table schema: {unknown} "
                 "— UPDATE never evolves the schema"
             )
-        if prune_bounds:
-            norm: dict[str, tuple] = {}
-            impossible = False
-            for key, (lower, upper) in prune_bounds.items():
-                dtype = _col_type(schema_json, key)
-                lo = _check_bound(lower, dtype, key, "lower")
-                hi = _check_bound(upper, dtype, key, "upper")
-                if lo is not None and hi is not None and lo > hi:
-                    impossible = True
-                    break
-                norm[key] = (lo, hi, dtype)
-            if impossible:
-                candidates = []
-            else:
-                first = next(iter(norm))
-                flo, fhi, fdt = norm[first]
-                padmits = [
-                    _part_admitter(m, schema_json, k, lo, hi, None)
-                    for k, (lo, hi, _dt2) in norm.items()
-                ]
-                candidates = [
-                    e
-                    for e in _candidate_pool(path, m, first, flo, fhi, fdt)
-                    if all(p(e) for p in padmits)
-                    and all(
-                        _touched(e, k, lo, hi, None, dt)
-                        for k, (lo, hi, dt) in norm.items()
-                    )
-                ]
-        else:
-            candidates = manifest_files(path, m, tag_segments=True)
+        norm = _norm_bounds(schema_json, prune_bounds or {})
+        candidates = [] if norm is None else _plan_files(path, m, norm)
         changes: list[dict] | None = [] if change_feed else None
         if candidates:
             existing = _visible_read(
@@ -2838,7 +2697,8 @@ def snapshot_update(
                 {e["_seg"] for e in candidates if e.get("_seg") is not None},
                 _stage_files(
                     spark, out, path, stats_cols,
-                    partition_spec=spec, bloom_cols=m.get("bloom_cols"),
+                    partition_spec=m.get("partition_spec"),
+                    bloom_cols=m.get("bloom_cols"),
                 ),
                 schema_json,
             )
@@ -2857,14 +2717,67 @@ def snapshot_update(
         else:
             fileset = _fileset_for_commit(path, m, set(), set(), [], schema_json)
         return _commit(
-            path, fileset, "update", schema_json, parent, txns, changes=changes,
-            eq_deletes=m.get("eq_deletes"),
-            partition_spec=spec,
-            bloom_cols=m.get("bloom_cols"),
-            partition_specs=m.get("partition_specs"),
+            path, fileset, "update", schema_json, m, txns, changes=changes
         )
     finally:
         release_writer_lease(path, holder)
+
+
+def version_changes(path: str, version: int):
+    """THE change-feed rule, shared by :func:`read_snapshot_changes`
+    and the streaming source (``streaming/cdf_source.py``): yield
+    ``(manifest, entries, change_type)`` for each non-empty piece of
+    commit ``version``'s row-level delta, cheapest source first:
+
+    - recorded change files (MERGE/DELETE/UPDATE committed with
+      ``change_feed=True``) — ``(m, m["changes"], None)``: exact row
+      deltas that carry their own ``_change_type`` column, and COMPLETE
+      for their commit (a merge records delete-preimages and batch
+      inserts, a delete its deletions); nothing is synthesized;
+    - first commits (parent None), ``append``, ``overwrite`` and
+      ``replace_partitions`` — synthesized from the files the commit
+      added (``"insert"``, read under this version's manifest) and,
+      for the two replacing ops, the parent files it dropped
+      (``"delete"``, under the parent's manifest, whose equality
+      deletes masked them): file-level exact at zero write cost;
+    - ``compact`` / ``cluster`` — nothing: file moves, no logical
+      change (MoR deletes a rewrite materializes were already applied
+      in reads);
+    - MERGE/DELETE/UPDATE recorded WITHOUT change files — raises:
+      rewritten files mix kept and new rows, so row deltas are not
+      reconstructible after the fact (enable ``change_feed`` on the
+      writer, or diff the two versions with ``table_diff``).
+
+    Synthesized entries are data files: readers apply the yielded
+    manifest's equality deletes to them (:func:`_visible_read`)."""
+    m = read_manifest(path, version)
+    op = m["op"]
+    if op in ("compact", "cluster"):
+        return  # file moves only: no logical row changes
+    if m.get("changes") is not None:
+        if m["changes"]:
+            yield m, m["changes"], None
+        return
+    if m["parent"] is not None and op not in (
+        "overwrite", "append", "replace_partitions",
+    ):
+        raise ValueError(
+            f"version {version} (op={op}) has no recorded change feed — "
+            "commit with change_feed=True, or diff snapshot_read views "
+            "with operators.relational.table_diff"
+        )
+    m_files = manifest_files(path, m)
+    m_par = None if m["parent"] is None else read_manifest(path, m["parent"])
+    parent_entries = [] if m_par is None else manifest_files(path, m_par)
+    parent_files = {e["path"] for e in parent_entries}
+    added = [e for e in m_files if e["path"] not in parent_files]
+    if added:
+        yield m, added, "insert"
+    if op in ("overwrite", "replace_partitions") and m_par is not None:
+        cur_files = {e["path"] for e in m_files}
+        dropped = [e for e in parent_entries if e["path"] not in cur_files]
+        if dropped:
+            yield m_par, dropped, "delete"
 
 
 def read_snapshot_changes(
@@ -2879,25 +2792,11 @@ def read_snapshot_changes(
     ``version`` (default latest), as table rows plus ``_change_type``
     ('insert' | 'delete') and ``_commit_version``. An update under
     full-row-replace MERGE semantics reads as delete(old) +
-    insert(new) at the same commit version.
-
-    Per-version sourcing, cheapest available:
-
-    - recorded change files (MERGE/DELETE committed with
-      ``change_feed=True``) — exact row deltas, O(delta) read;
-    - ``append`` commits — inserts synthesized from the files the
-      commit added (file-level exact, zero write cost, so appends
-      never need recording);
-    - first commits (parent None) and ``overwrite`` — synthesized as
-      inserts of the new files (plus deletes of the parent's files
-      for overwrite);
-    - ``compact`` / ``cluster`` / ``backfill_stats`` — skipped (file
-      moves or metadata enrichment, no logical change; MoR deletes a
-      cluster rewrite materializes were already applied in reads);
-    - MERGE/DELETE recorded WITHOUT change files — raises: rewritten
-      files mix kept and new rows, so row deltas are not
-      reconstructible after the fact (enable ``change_feed`` on the
-      writer, or fall back to ``table_diff`` of the two versions).
+    insert(new) at the same commit version. Each version's rows come
+    from :func:`version_changes` — recorded change files where the
+    writer kept them, file-level synthesis for appends and
+    overwrites, nothing for layout rewrites; an unrecorded
+    merge/delete/update raises.
 
     ``net=True`` cancels delete/insert pairs of identical rows per
     commit version (a no-op rewrite nets to nothing) — for an
@@ -2913,88 +2812,31 @@ def read_snapshot_changes(
     if since_version > end:
         raise ValueError(f"since_version {since_version} is ahead of {end}")
     schema = StructType.fromJson(json.loads(m_new["schema"]))
-    meta_schema = StructType(
-        schema.fields
-        + [
-            StructField("_change_type", StringType()),
-            StructField("_commit_version", LongType()),
-        ]
+    change_schema = StructType(
+        schema.fields + [StructField("_change_type", StringType())]
     )
     out: DataFrame | None = None
-
-    def _tagged(mm: dict, entries: list[dict], ctype: str, v: int) -> DataFrame:
-        # visible rows only: synthesized deltas on a merge-on-read
-        # table must not resurface rows masked by equality deletes
-        df = _visible_read(spark, path, mm, entries, schema=schema)
-        return df.withColumn("_change_type", F.lit(ctype)).withColumn(
-            "_commit_version", F.lit(v).cast("long")
-        )
-
-    v = since_version + 1
-    while v <= end:
-        m = read_manifest(path, v)
-        if m["op"] in ("compact", "cluster", "backfill_stats"):
-            # pure layout/metadata rewrites — file moves or stat
-            # enrichment, zero logical row changes
-            v += 1
-            continue
-        part: DataFrame | None = None
-        if m.get("changes") is not None:
-            chg = [os.path.join(path, e["path"]) for e in m["changes"]]
-            if chg:
-                change_schema = StructType(
-                    schema.fields + [StructField("_change_type", StringType())]
+    for v in range(since_version + 1, end + 1):
+        for mm, entries, ctype in version_changes(path, v):
+            if ctype is None:
+                part = spark.read.schema(change_schema).parquet(
+                    *[os.path.join(path, e["path"]) for e in entries]
                 )
-                part = (
-                    spark.read.schema(change_schema)
-                    .parquet(*chg)
-                    .withColumn("_commit_version", F.lit(v).cast("long"))
-                )
-            # recorded change files are COMPLETE for their commit:
-            # snapshot_merge writes both delete-preimages and batch
-            # inserts; snapshot_delete writes its deletions (it has
-            # no inserts). Nothing is synthesized from data files.
-        elif m["parent"] is None or m["op"] in (
-            "overwrite", "append", "restore", "replace_partitions",
-        ):
-            m_files = manifest_files(path, m)
-            parent_entries = (
-                manifest_files(path, read_manifest(path, m["parent"]))
-                if m["parent"] is not None
-                else []
-            )
-            parent_files = {e["path"] for e in parent_entries}
-            added = [e for e in m_files if e["path"] not in parent_files]
-            pieces = []
-            if added:
-                pieces.append(_tagged(m, added, "insert", v))
-            if (
-                m["op"] in ("overwrite", "restore", "replace_partitions")
-                and m["parent"] is not None
-            ):
-                m_par = read_manifest(path, m["parent"])
-                cur_files = {e["path"] for e in m_files}
-                dropped = [
-                    e for e in parent_entries if e["path"] not in cur_files
-                ]
-                if dropped:
-                    pieces.append(_tagged(m_par, dropped, "delete", v))
-            part = pieces[0] if pieces else None
-            for p in pieces[1:]:
-                part = part.unionByName(p)
-        else:
-            raise ValueError(
-                f"version {v} (op={m['op']}) has no recorded change feed — "
-                "commit with change_feed=True, or diff snapshot_read views "
-                "with operators.relational.table_diff"
-            )
-        if part is not None:
+            else:
+                # visible rows only: synthesized deltas on a
+                # merge-on-read table must not resurface rows masked
+                # by equality deletes
+                part = _visible_read(
+                    spark, path, mm, entries, schema=schema
+                ).withColumn("_change_type", F.lit(ctype))
+            part = part.withColumn("_commit_version", F.lit(v).cast("long"))
             out = part if out is None else out.unionByName(
                 part, allowMissingColumns=True
             )
-        v += 1
     if out is None:
-        return spark.createDataFrame([], meta_schema)
+        return spark.createDataFrame([], StructType(
+            change_schema.fields + [StructField("_commit_version", LongType())]
+        ))
     # normalize column order/presence to the target schema
     out = out.select(
         *[
@@ -3049,8 +2891,7 @@ def snapshot_compact(
     working after compaction."""
     holder = acquire_writer_lease(path)
     try:
-        parent = current_version(path)
-        m = read_manifest(path, parent)
+        m, txns = _open_commit(path)
         spec = m.get("partition_spec")
         all_entries = manifest_files(path, m, tag_segments=True)
         small = [e for e in all_entries if e["bytes"] < target_bytes / 2]
@@ -3074,7 +2915,7 @@ def snapshot_compact(
                 by_part.setdefault(k, []).append(e)
             small = [e for grp in by_part.values() if len(grp) > 1 for e in grp]
         if len(small) <= 1:
-            return parent  # nothing to do; no empty commit
+            return m["version"]  # nothing to do; no empty commit
         if stats_cols is None:
             stats_cols = list(all_entries[0].get("stats", {}).keys())
         # first-fit bin packing by accumulated bytes (per partition
@@ -3120,13 +2961,7 @@ def snapshot_compact(
             new_entries,
             m["schema"],
         )
-        return _commit(
-            path, fileset, "compact", m["schema"], parent,
-            _parent_txns(path, parent), eq_deletes=m.get("eq_deletes"),
-            partition_spec=spec,
-            bloom_cols=m.get("bloom_cols"),
-            partition_specs=m.get("partition_specs"),
-        )
+        return _commit(path, fileset, "compact", m["schema"], m, txns)
     finally:
         release_writer_lease(path, holder)
 
@@ -3242,14 +3077,11 @@ def snapshot_cluster(
     whatever the manifest already tracked."""
     holder = acquire_writer_lease(path)
     try:
-        parent = current_version(path)
-        if parent is None:
-            raise FileNotFoundError(f"no snapshot table at {path}")
-        m = read_manifest(path, parent)
+        m, txns = _open_commit(path)
         spec = m.get("partition_spec")
         entries = manifest_files(path, m, tag_segments=True)
         if not entries:
-            return parent
+            return m["version"]
         table_schema = StructType.fromJson(json.loads(m["schema"]))
         df = _visible_read(spark, path, m, entries, schema=table_schema)
         z = _zorder_expr(df, list(by), bits=bits)
@@ -3299,13 +3131,7 @@ def snapshot_cluster(
             new_entries,
             m["schema"],
         )
-        return _commit(
-            path, fileset, "cluster", m["schema"], parent,
-            _parent_txns(path, parent), eq_deletes=m.get("eq_deletes"),
-            partition_spec=spec,
-            bloom_cols=m.get("bloom_cols"),
-            partition_specs=m.get("partition_specs"),
-        )
+        return _commit(path, fileset, "cluster", m["schema"], m, txns)
     finally:
         release_writer_lease(path, holder)
 
@@ -3332,11 +3158,7 @@ def snapshot_expire(
         cutoff_us = _instant_us(older_than)
     holder = acquire_writer_lease(path)
     try:
-        versions = sorted(
-            int(n[1:9])
-            for n in os.listdir(_mdir(path))
-            if n.startswith("v") and n.endswith(".json")
-        )
+        versions = _versions(path)
         tagged = set(snapshot_refs(path).values())
         drop = [v for v in versions[:-keep_last] if v not in tagged]
         if cutoff_us is not None:
