@@ -4,6 +4,8 @@ run-twice idempotence contract (ON CONFLICT DO NOTHING parity)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -147,6 +149,40 @@ def test_forecast_plane_idempotent(spark, tmp_path):
     assert traffic.join(weather_ids, "date_id", "left_anti").count() == 0
     vals = [r.intensity for r in traffic.collect()]
     assert all(0 <= v <= 10 for v in vals)
+
+
+def _parquet_files(path):
+    return sum(f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs)
+
+
+@pytest.mark.slow
+def test_forecast_cycle_job_budget_and_replay_writes_no_file(spark, tmp_path):
+    """Each sink insert materializes its fresh rows once and counts
+    them in that pass: a fresh cycle against existing sinks runs at
+    most 13 Spark jobs, a replay at most 9, and a replay writes no
+    part file (empty or not) to either sink."""
+    model = _plumbing_model(spark)
+    wpath, tpath = str(tmp_path / "weather"), str(tmp_path / "traffic")
+    assert run_forecast_plane(spark, PAYLOAD[:1], model, wpath, tpath) == (1, 1)
+    sc = spark.sparkContext
+
+    def jobs_of(group):
+        sc.setJobGroup(group, group)
+        try:
+            appended = run_forecast_plane(spark, PAYLOAD, model, wpath, tpath)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        return appended, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    appended, fresh_jobs = jobs_of("forecast-budget-fresh")
+    assert appended == (1, 1)
+    assert fresh_jobs <= 13
+    files = (_parquet_files(wpath), _parquet_files(tpath))
+    appended, replay_jobs = jobs_of("forecast-budget-replay")
+    assert appended == (0, 0)
+    assert replay_jobs <= 9
+    assert (_parquet_files(wpath), _parquet_files(tpath)) == files
 
 
 LOCATION_PAYLOAD = [

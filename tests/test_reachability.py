@@ -70,6 +70,7 @@ KEPT: dict[str, str] = {
     "tablefmt.snapshot_scan_multi": _TF_TEST,
     "tablefmt.snapshot_untag": _TF_TEST,
     "tablefmt.vacuum": _TF_TEST,
+    "tablefmt._sweep_unreferenced": "helper of snapshot_expire and vacuum",
 }
 
 

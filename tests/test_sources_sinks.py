@@ -78,6 +78,26 @@ def test_insert_if_absent_idempotent(spark, tmp_path):
     assert out == {1: "a", 2: "b", 3: "c"}  # id=2 kept ORIGINAL value
 
 
+def test_insert_if_absent_leaves_session_serializable(spark, tmp_path):
+    """Counting the appended rows must not leave state on the session
+    that breaks task serialization: a logistic regression keeps the
+    session in its training summary, and its transform ships the model
+    to the executors."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import Vectors
+
+    path = str(tmp_path / "sink")
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+    assert insert_if_absent(spark, batch, path, ["id"]) == 2
+    train = spark.createDataFrame(
+        [(float(i % 2), Vectors.dense([float(i % 2), float(i)])) for i in range(20)],
+        ["label", "features"],
+    )
+    model = LogisticRegression(maxIter=5).fit(train)
+    assert model.hasSummary
+    assert len(model.transform(train).collect()) == 20
+
+
 def test_merge_upsert_last_writer_wins(spark, tmp_path):
     path = str(tmp_path / "merge_sink")
     merge_upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"), path, ["id"])
@@ -338,6 +358,33 @@ def test_fresh_rows_nonkey_range_key(spark, tmp_path):
     out = fresh_rows(spark, batch, path, ["date_id"], range_key="datetime")
     assert sorted(out.columns) == ["date_id", "datetime", "v"]
     assert sorted(r.datetime for r in out.collect()) == [100, 101, 102, 103, 104]
+
+
+def test_fresh_rows_probe_range_covers_dropped_duplicates(spark, tmp_path):
+    """The pushed range is the batch's before dedup. A duplicate that
+    dedup drops may carry the batch's extreme range value; the scan
+    must still cover it, so fresh_rows returns exactly the absent keys
+    for a key and for a non-key range_key."""
+    from traffic_forecast_etl_spark.sinks import fresh_rows
+
+    # key range_key: both copies of the existing key 990 sit at the minimum
+    path = str(tmp_path / "key_sink")
+    spark.range(0, 1000).selectExpr("id AS ts", "id * 2 AS v").write.parquet(path)
+    batch = spark.createDataFrame(
+        [(990, 1), (1005, 0), (990, 0)], "ts long, v long"
+    ).coalesce(1)
+    assert {r.ts for r in fresh_rows(spark, batch, path, ["ts"]).collect()} == {1005}
+
+    # non-key range_key: one partition keeps the first copy of key 5
+    # (range value 1000) and drops the second, whose range value 50 is
+    # the batch minimum and the one the sink row carries
+    path = str(tmp_path / "nonkey_sink")
+    spark.range(1, 11).selectExpr("id AS k", "id * 10 AS t").write.parquet(path)
+    batch = spark.createDataFrame(
+        [(5, 1000), (5, 50), (11, 110), (12, 120)], "k long, t long"
+    ).coalesce(1)
+    out = fresh_rows(spark, batch, path, ["k"], range_key="t")
+    assert sorted(r.k for r in out.collect()) == [11, 12]
 
 
 def test_merge_upsert_crash_recovery(spark, tmp_path):

@@ -288,3 +288,49 @@ def test_streaming_audited_append_gate_replay_quarantine(spark, tmp_path):
     assert sorted(
         r.event_id for r in spark.read.parquet(quarantine).collect()
     ) == qrows
+
+
+def test_cdf_source_reads_each_delete_file_once_per_version(spark, tmp_path, monkeypatch):
+    """Planning a version of a merge-on-read table reads each
+    equality-delete file once, not once per synthesized data file, and
+    every dropped data file still carries all the keys that mask it."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from traffic_forecast_etl_spark import tablefmt as T
+    from traffic_forecast_etl_spark.streaming.cdf_source import (
+        SnapshotChangesDataSource,
+    )
+
+    path = str(tmp_path / "t")
+    rows = spark.createDataFrame([(i, f"v{i}") for i in range(12)], "id long, val string")
+    T.snapshot_write(spark, rows.repartition(4), path, stats_cols=["id"])
+    for k in (3, 7):  # two merge-on-read delete files
+        T.snapshot_delete(
+            spark, path, keys=["id"],
+            keys_df=spark.createDataFrame([(k,)], "id long"), mode="mor",
+        )
+    T.snapshot_write(spark, rows.limit(1), path)  # overwrite: drops the 4 files
+    parent = T.read_manifest(path, 2)
+    delete_files = {os.path.join(path, d["path"]) for d in parent["eq_deletes"]}
+    assert len(delete_files) == 2 and len(T.manifest_files(path, parent)) == 4
+
+    reads: list[str] = []
+    read_table = pq.read_table
+
+    def counting_read_table(source, *args, **kwargs):
+        reads.append(str(source))
+        return read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting_read_table)
+    source = SnapshotChangesDataSource({"path": path})
+    reader = source.streamReader(source.schema())
+    parts = reader.partitions({"version": 2}, {"version": 3})
+    assert sorted(reads) == sorted(delete_files)
+
+    dropped = [p for p in parts if p.change_type == "delete"]
+    assert len(dropped) == 4
+    for p in dropped:
+        assert p.del_filters == [(("id",), {(3,), (7,)})]
+    assert [p.del_filters for p in parts if p.change_type == "insert"] == [[]]

@@ -10,8 +10,9 @@ benchmark's inputs, builds the training table from the raw detector
 and KNMI CSVs, fits the ``dt`` model, then runs N forecast cycles into
 a weather sink seeded with the generated history. It prints row count
 and an order-insensitive content hash of the training table and both
-sinks, the model's held-out MAE, and the Spark jobs of each cycle.
-Diff two runs' output; only the ``jobs`` column may differ.
+sinks, each sink's parquet file count, the model's held-out MAE, and
+the Spark jobs of each cycle. Diff two runs' output; only the ``jobs``
+and ``files`` columns may differ.
 """
 
 from __future__ import annotations
@@ -84,7 +85,10 @@ def run(spark, seed: int, n: int) -> None:
             print(f"cycle {i:3d} {kind:6s} appended=({n_w}, {n_t})  jobs={jobs}")
         for name, path in (("weather", weather), ("traffic", traffic)):
             rows, digest = table_digest(spark.read.parquet(path))
-            print(f"{name:9s} rows={rows} hash={digest}")
+            files = sum(
+                f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
+            )
+            print(f"{name:9s} rows={rows} hash={digest} files={files}")
 
 
 if __name__ == "__main__":

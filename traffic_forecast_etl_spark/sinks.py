@@ -9,9 +9,11 @@ equivalents:
   - ``insert_if_absent``: stage → anti-join against the sink keys
     RESTRICTED to the batch's key range (pushed filter / partition
     pruning — the scan is O(batch window), not O(sink lifetime)) →
-    append only the new keys. Re-running the same batch is a no-op
-    (the ON CONFLICT contract), and the write is one distributed
-    append, not N commits.
+    one observed materialization of the new keys, which counts them
+    → append it only when it is non-empty. Re-running the same batch
+    is a no-op that writes no file (the ON CONFLICT contract), and
+    the write is one distributed append, not N commits — at a
+    12-row forecast batch, one parquet file per append.
   - ``merge_upsert``: MERGE emulation for engines without
     Delta/Iceberg. With ``partition_by``, only the partitions the
     batch touches are read and rewritten (dynamic partition
@@ -32,6 +34,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -133,14 +136,21 @@ def fresh_rows(
     if not _sink_exists(spark, path):
         return deduped
     rk = range_key or keys[0]
-    lo, hi = deduped.agg(F.min(rk), F.max(rk)).first()
+    # the raw batch's range: dedup can only narrow it, and the probe
+    # skips the dedup exchange
+    lo, hi = batch.agg(F.min(rk), F.max(rk)).first()
     # project the range key too when it is not a key column (e.g. a
     # time-ranged scan of a hash-keyed sink); the extra column rides
-    # on the anti-join's build side and never reaches the output
-    existing = spark.read.parquet(path).select(*dict.fromkeys([*keys, rk]))
+    # on the anti-join's build side and never reaches the output. The
+    # batch's types give the scan its schema: no footer-inference job
+    cols = list(dict.fromkeys([*keys, rk]))
+    existing = spark.read.schema(StructType([batch.schema[c] for c in cols])).parquet(path)
     if lo is not None:
         existing = existing.filter(F.col(rk).between(F.lit(lo), F.lit(hi)))
     return deduped.join(existing, on=list(keys), how="left_anti")
+
+
+_FRESH_ROWS = "sinks.insert_if_absent.fresh_rows"
 
 
 def insert_if_absent(
@@ -174,18 +184,30 @@ def insert_if_absent(
     a range on the hash itself prunes nothing) is sound iff its value
     is functionally determined by the keys; that contract is the
     caller's to uphold and is documented at the call site.
+
+    The fresh rows are materialized and counted in one observed pass
+    and appended only when there are any: a replay writes no file,
+    and a forecast-sized batch appends one.
     """
-    fresh = fresh_rows(spark, batch, path, keys, range_key)
-    # count once, write the same (cached) frame — avoids recomputing
-    # the anti-join twice
-    fresh = fresh.cache()
-    n = fresh.count()
-    if n:
+    # the count is a named observation read off the checkpoint's own
+    # query: an ``Observation`` object would register with the
+    # session's observation manager, which (Spark 4.1) leaves the
+    # session unserializable, and a later model holding a session
+    # reference (a logistic regression's training summary) then fails
+    # with "Task not serializable". The checkpoint lives only between
+    # the count and the write: a lost executor fails this call, and
+    # re-running it is a no-op for the rows already written
+    observed = fresh_rows(spark, batch, path, keys, range_key).observe(
+        _FRESH_ROWS, F.count(F.lit(1)).alias("n")
+    )
+    fresh = observed.localCheckpoint(eager=True)
+    metrics = observed._jdf.queryExecution().observedMetrics()  # noqa: SLF001
+    n = metrics.apply(_FRESH_ROWS).getLong(0)
+    if n:  # writing no rows would still leave an empty part file
         writer = fresh.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-    fresh.unpersist()
     return n
 
 

@@ -17,8 +17,8 @@ def compact_partition(
     """Compact a parquet table (or one partition of it) to
     ~``target_file_mb`` files — the small-files maintenance pass every
     steady append sink needs: a 12-hourly insert_if_absent writes a
-    few files per batch, and after months a scan pays per-file open
-    cost thousands of times over. Returns the new file count.
+    file per non-empty batch, and after months a scan pays per-file
+    open cost thousands of times over. Returns the new file count.
 
     Scoped like merge_upsert: with ``partition`` (e.g. {"dt":
     "2015-06-01"}) only that directory is read and rewritten —

@@ -48,14 +48,17 @@ from .. import tablefmt as TF
 _MAX_EMBEDDED_DELETE_KEYS = 100_000
 
 
-def _delete_filters(path: str, m: dict, file_seq: int) -> list[tuple]:
+def _delete_filters(
+    path: str, m: dict, file_seq: int, loaded: dict[str, set]
+) -> list[tuple]:
     """(key_cols, key_tuple_set) filters for the equality-delete files
     that apply to a data file of sequence ``file_seq`` under the
     merge-on-read sequencing rule. Keys are loaded driver-side with
-    pyarrow and EMBEDDED in the partition (delete files are key-only
-    and small by design); a feed whose pending deletes exceed the
-    embed cap should be consumed through the batch
-    read_snapshot_changes / foreachBatch path instead."""
+    pyarrow, once per delete file into ``loaded`` (keyed by its path),
+    and EMBEDDED in the partition (delete files are key-only and small
+    by design); a feed whose pending deletes exceed the embed cap
+    should be consumed through the batch read_snapshot_changes /
+    foreachBatch path instead."""
     import pyarrow.parquet as pq
 
     appl = [
@@ -74,9 +77,10 @@ def _delete_filters(path: str, m: dict, file_seq: int) -> list[tuple]:
     by_keys: dict[tuple, set] = {}
     for d in appl:
         cols = tuple(d["keys"])
-        tbl = pq.read_table(os.path.join(path, d["path"]), columns=list(cols))
-        rows = zip(*(tbl.column(c).to_pylist() for c in cols))
-        by_keys.setdefault(cols, set()).update(rows)
+        if d["path"] not in loaded:
+            tbl = pq.read_table(os.path.join(path, d["path"]), columns=list(cols))
+            loaded[d["path"]] = set(zip(*(tbl.column(c).to_pylist() for c in cols)))
+        by_keys.setdefault(cols, set()).update(loaded[d["path"]])
     return [(cols, keys) for cols, keys in by_keys.items()]
 
 
@@ -124,14 +128,17 @@ class SnapshotChangesStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         parts: list[InputPartition] = []
         for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
+            loaded: dict[str, set] = {}  # each delete file read once per version
             for m, entries, ctype in TF.version_changes(self._path, v):
                 # recorded change files are exact rows already; only
-                # synthesized data files need the manifest's MoR deletes
+                # synthesized data files need the manifest's MoR deletes,
+                # and the files of one sequence number share one filter set
+                seqs = set() if ctype is None else {e.get("seq", 0) for e in entries}
+                filters = {q: _delete_filters(self._path, m, q, loaded) for q in seqs}
                 parts.extend(
                     _ChangeFilePartition(
                         os.path.join(self._path, e["path"]), ctype, v,
-                        None if ctype is None
-                        else _delete_filters(self._path, m, e.get("seq", 0)),
+                        filters.get(e.get("seq", 0)),
                     )
                     for e in entries
                 )

@@ -3136,6 +3136,59 @@ def snapshot_cluster(
         release_writer_lease(path, holder)
 
 
+def _sweep_unreferenced(
+    path: str, versions: Sequence[int], tmp_blooms: bool = False
+) -> list[str]:
+    """Delete every data, change, delete, bloom and segment file that
+    neither a manifest of ``versions`` nor a live write–audit–publish
+    stage references (a batch still under audit is never collected);
+    return their table-relative paths. ``tmp_blooms`` also sweeps the
+    ``.tmp-`` bloom files a crashed writer left."""
+    refs: dict[str, set] = {
+        d: set() for d in (_DATA_DIR, _CHANGES_DIR, _DELETES_DIR, _BLOOMS_DIR)
+    }
+    segs = set()
+
+    def add_files(entries) -> None:
+        for e in entries:
+            refs[_DATA_DIR].add(os.path.basename(e["path"]))
+            for b in (e.get("blooms") or {}).values():
+                refs[_BLOOMS_DIR].add(os.path.basename(b["path"]))
+
+    for v in versions:
+        m = read_manifest(path, v)
+        segs.update(sg["path"] for sg in m.get("segments") or [])
+        add_files(manifest_files(path, m))
+        for d, key in ((_CHANGES_DIR, "changes"), (_DELETES_DIR, "eq_deletes")):
+            refs[d].update(os.path.basename(e["path"]) for e in m.get(key) or [])
+    for name in os.listdir(_mdir(path)):
+        if name.startswith("staged-") and name.endswith(".json"):
+            with open(os.path.join(_mdir(path), name)) as f:
+                add_files(json.load(f)["files"])
+    removed = []
+    for d, suffix in (
+        (_DATA_DIR, ".parquet"), (_CHANGES_DIR, ".parquet"),
+        (_DELETES_DIR, ".parquet"), (_BLOOMS_DIR, ".bloom"),
+    ):
+        full = os.path.join(path, d)
+        if not os.path.isdir(full):
+            continue
+        tmp = tmp_blooms and d == _BLOOMS_DIR
+        for name in sorted(os.listdir(full)):
+            if name in refs[d] or not (
+                name.endswith(suffix) or (tmp and name.startswith(".tmp-"))
+            ):
+                continue
+            os.remove(os.path.join(full, name))
+            _BLOOM_CACHE.pop((path, f"{d}/{name}"), None)
+            removed.append(f"{d}/{name}")
+    for name in sorted(os.listdir(_mdir(path))):
+        if name.startswith("seg-") and name not in segs:
+            os.remove(_seg_path(path, name))
+            removed.append(f"{_MANIFEST_DIR}/{name}")
+    return removed
+
+
 def snapshot_expire(
     path: str, keep_last: int = 2, older_than=None
 ) -> list[str]:
@@ -3168,65 +3221,11 @@ def snapshot_expire(
                 if (read_manifest(path, v).get("ts") or 0) < cutoff_us
             ]
         keep = [v for v in versions if v not in drop]
-        referenced = set()
-        chg_referenced = set()
-        seg_referenced = set()
-        del_referenced = set()
-        bloom_referenced = set()
-        for v in keep:
-            m = read_manifest(path, v)
-            for s in m.get("segments") or []:
-                seg_referenced.add(s["path"])
-            for e in manifest_files(path, m):
-                referenced.add(os.path.basename(e["path"]))
-                for b in (e.get("blooms") or {}).values():
-                    bloom_referenced.add(os.path.basename(b["path"]))
-            for e in m.get("changes") or []:
-                chg_referenced.add(os.path.basename(e["path"]))
-            for e in m.get("eq_deletes") or []:
-                del_referenced.add(os.path.basename(e["path"]))
-        # live write–audit–publish stages reference their files too —
-        # expiring history must never GC a batch still under audit
-        for s in snapshot_list_staged(path):
-            st = _read_staged(path, s["wap_id"])
-            for e in st["files"]:
-                referenced.add(os.path.basename(e["path"]))
-                for b in (e.get("blooms") or {}).values():
-                    bloom_referenced.add(os.path.basename(b["path"]))
-        removed = []
-        data_dir = os.path.join(path, _DATA_DIR)
-        if os.path.isdir(data_dir):
-            for name in sorted(os.listdir(data_dir)):
-                if name.endswith(".parquet") and name not in referenced:
-                    os.remove(os.path.join(data_dir, name))
-                    removed.append(f"{_DATA_DIR}/{name}")
-        chg_dir = os.path.join(path, _CHANGES_DIR)
-        if os.path.isdir(chg_dir):
-            for name in sorted(os.listdir(chg_dir)):
-                if name.endswith(".parquet") and name not in chg_referenced:
-                    os.remove(os.path.join(chg_dir, name))
-                    removed.append(f"{_CHANGES_DIR}/{name}")
-        del_dir = os.path.join(path, _DELETES_DIR)
-        if os.path.isdir(del_dir):
-            for name in sorted(os.listdir(del_dir)):
-                if name.endswith(".parquet") and name not in del_referenced:
-                    os.remove(os.path.join(del_dir, name))
-                    removed.append(f"{_DELETES_DIR}/{name}")
-        bloom_dir = os.path.join(path, _BLOOMS_DIR)
-        if os.path.isdir(bloom_dir):
-            for name in sorted(os.listdir(bloom_dir)):
-                if name.endswith(".bloom") and name not in bloom_referenced:
-                    os.remove(os.path.join(bloom_dir, name))
-                    _BLOOM_CACHE.pop((path, f"{_BLOOMS_DIR}/{name}"), None)
-                    removed.append(f"{_BLOOMS_DIR}/{name}")
+        # manifests go first: a crash mid-sweep leaves orphans for
+        # vacuum, never a retained manifest naming a deleted file
         for v in drop:
             os.remove(_manifest_path(path, v))
-        # segment files referenced only by dropped manifests
-        for name in sorted(os.listdir(_mdir(path))):
-            if name.startswith("seg-") and name not in seg_referenced:
-                os.remove(_seg_path(path, name))
-                removed.append(f"{_MANIFEST_DIR}/{name}")
-        return removed
+        return _sweep_unreferenced(path, keep)
     finally:
         release_writer_lease(path, holder)
 
@@ -3263,71 +3262,11 @@ def vacuum(path: str, stale_staged_older_than=None) -> list[str]:
                     # cutoff (it predates this code by definition)
                     if (st.get("ts") or 0) < stale_cut_us:
                         os.remove(os.path.join(_mdir(path), name))
-        referenced = set()
-        chg_referenced = set()
-        seg_referenced = set()
-        del_referenced = set()
-        bloom_referenced = set()
-        for name in os.listdir(_mdir(path)):
-            if name.startswith("v") and name.endswith(".json"):
-                with open(os.path.join(_mdir(path), name)) as f:
-                    m = json.load(f)
-                for s in m.get("segments") or []:
-                    seg_referenced.add(s["path"])
-                for e in manifest_files(path, m):
-                    referenced.add(os.path.basename(e["path"]))
-                    for b in (e.get("blooms") or {}).values():
-                        bloom_referenced.add(os.path.basename(b["path"]))
-                for e in m.get("changes") or []:
-                    chg_referenced.add(os.path.basename(e["path"]))
-                for e in m.get("eq_deletes") or []:
-                    del_referenced.add(os.path.basename(e["path"]))
-            elif name.startswith("staged-") and name.endswith(".json"):
-                # a live staged commit's files are NOT orphans — they
-                # become collectable only after snapshot_abandon
-                with open(os.path.join(_mdir(path), name)) as f:
-                    st = json.load(f)
-                for e in st["files"]:
-                    referenced.add(os.path.basename(e["path"]))
-                    for b in (e.get("blooms") or {}).values():
-                        bloom_referenced.add(os.path.basename(b["path"]))
         removed = []
         for name in sorted(os.listdir(path)):
             if name.startswith("__stage_"):
                 shutil.rmtree(os.path.join(path, name), ignore_errors=True)
                 removed.append(name)
-        data_dir = os.path.join(path, _DATA_DIR)
-        if os.path.isdir(data_dir):
-            for name in sorted(os.listdir(data_dir)):
-                if name.endswith(".parquet") and name not in referenced:
-                    os.remove(os.path.join(data_dir, name))
-                    removed.append(f"{_DATA_DIR}/{name}")
-        chg_dir = os.path.join(path, _CHANGES_DIR)
-        if os.path.isdir(chg_dir):
-            for name in sorted(os.listdir(chg_dir)):
-                if name.endswith(".parquet") and name not in chg_referenced:
-                    os.remove(os.path.join(chg_dir, name))
-                    removed.append(f"{_CHANGES_DIR}/{name}")
-        del_dir = os.path.join(path, _DELETES_DIR)
-        if os.path.isdir(del_dir):
-            for name in sorted(os.listdir(del_dir)):
-                if name.endswith(".parquet") and name not in del_referenced:
-                    os.remove(os.path.join(del_dir, name))
-                    removed.append(f"{_DELETES_DIR}/{name}")
-        bloom_dir = os.path.join(path, _BLOOMS_DIR)
-        if os.path.isdir(bloom_dir):
-            for name in sorted(os.listdir(bloom_dir)):
-                if (
-                    name.endswith(".bloom") or name.startswith(".tmp-")
-                ) and name not in bloom_referenced:
-                    os.remove(os.path.join(bloom_dir, name))
-                    _BLOOM_CACHE.pop((path, f"{_BLOOMS_DIR}/{name}"), None)
-                    removed.append(f"{_BLOOMS_DIR}/{name}")
-        # orphaned segment files (written by a crashed commit)
-        for name in sorted(os.listdir(_mdir(path))):
-            if name.startswith("seg-") and name not in seg_referenced:
-                os.remove(_seg_path(path, name))
-                removed.append(f"{_MANIFEST_DIR}/{name}")
-        return removed
+        return removed + _sweep_unreferenced(path, _versions(path), tmp_blooms=True)
     finally:
         release_writer_lease(path, holder)
