@@ -197,9 +197,6 @@ _SINGLE_PARTITION_WINDOW_OK = {
 _CARTESIAN_OK = {
     # broadcast query-side × corpus is the documented exact baseline
     "s1_cosine_topk",
-    # |queries| × n_centroids shortlist — bounded by centroid count
-    # (s6 = the same routing shape, scored from PQ codes)
-    "s3_ivf_ann", "s2_lsh_ann", "s6_ivf_pq_ann",
     # blocked all-pairs cosine is O(n²) BY CONTRACT (oracle baseline;
     # guard-railed: auto-sized blocks + >1M-row refusal)
     "d5_embedding_neardup",
@@ -371,6 +368,22 @@ def test_aqe_picks_broadcast_without_hints(spark, sf_dir, query):
     final = final_plan_of(QUERIES[query](spark, sf_dir))
     assert "BroadcastHashJoin" in final, f"{query}: no broadcast join\n{final[:800]}"
     assert "SortMergeJoin" not in final, f"{query}: sort-merge at tiny sf\n{final[:800]}"
+
+
+def test_ivf_route_is_one_narrow_projection(spark):
+    """IVF routing scores the k centroids as one array literal per
+    query: no exchange, no window and no Python node — a map over the
+    query batch, however many centroids or probes."""
+    from traffic_forecast_etl_spark.operators.similarity import _route
+
+    q = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5]) for i in range(6)], "__qid long, __qv array<double>"
+    )
+    routed = _route(q, [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]], 2)
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "Window", "Python", "Pandas", "Join"):
+        assert node not in plan, plan
+    assert routed.count() == 12
 
 
 # Keys whose plans legitimately cross into Python — ALL Arrow-batched

@@ -851,6 +851,95 @@ def test_ann_index_search_reads_one_codes_version(
     assert got == want
 
 
+def test_ann_index_search_runs_at_most_four_jobs(spark, emb, ann_path):
+    """A search routes its queries once, as a checkpointed projection
+    that observes the probed set in the same pass, then scores,
+    refines and ranks in one grouped-map pass: the checkpoint, the
+    probes broadcast, the map stage and the result — at most 4 Spark
+    jobs. (A codes table of more than 32 files adds a parallel
+    file-listing job; this fixture stays below that.)"""
+    from traffic_forecast_etl_spark import tablefmt as TF
+    from traffic_forecast_etl_spark.operators import ann_index as AI
+
+    cpath = ann_path + "/codes"
+    assert len(TF.manifest_files(cpath, TF.read_manifest(cpath))) < 32
+    queries = emb.filter(F.col("vec_id") < 10)
+    sc = spark.sparkContext
+    sc.setJobGroup("ann-search-budget", "ann-search-budget")
+    try:
+        rows = AI.ann_index_search(
+            spark, queries, ann_path, k=5, nprobe=6, refine=16
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert len(rows) == 50
+    assert len(sc.statusTracker().getJobIdsForGroup("ann-search-budget")) <= 4
+
+
+def _tie_lists(spark, rows):
+    return spark.createDataFrame(
+        rows, "id long, centroid_id int, pq_code array<int>, vector array<double>"
+    )
+
+
+def test_adc_shortlist_keeps_every_candidate_tying_the_cutoff(spark):
+    """Ids 2 and 3 carry identical PQ codes, so their ADC scores tie
+    at slot 2 of a 2-candidate shortlist. Both reach
+    the exact refine — a sort would keep whichever arrived first — so
+    id 3, the better exact match, ranks above id 2, and the answer
+    does not depend on the lists' row order or partitioning."""
+    import numpy as np
+
+    from traffic_forecast_etl_spark.operators.similarity import (
+        _adc_refine_topk,
+        _route,
+    )
+
+    # 2 subspaces of 2 dims, 2 codewords each: e0 and e1
+    books = [np.eye(2), np.eye(2)]
+    q = spark.createDataFrame([(100, [1.0, 0.0, 1.0, 0.0])], "__qid long, __qv array<double>")
+    probes = _route(q, [[1.0, 0.0, 0.0, 0.0]], 1)
+    rows = [
+        (1, 0, [0, 0], [1.0, 0.0, 1.0, 0.0]),  # ADC sqrt(2), cosine 1
+        (2, 0, [0, 1], [1.0, 0.5, 0.0, 1.0]),  # ADC 1/sqrt(2), cosine 0.471
+        (3, 0, [0, 1], [1.0, 0.0, 0.0, 1.0]),  # ADC 1/sqrt(2), cosine 0.5
+        (4, 0, [1, 1], [1.0, 0.0, 1.0, 0.1]),  # ADC 0: never refined
+    ]
+
+    def search(lists, k):
+        out = _adc_refine_topk(probes, lists, books, k, 2, "qid")
+        return sorted(map(tuple, out.collect()), key=lambda r: r[3])
+
+    got = search(_tie_lists(spark, rows), 3)
+    assert [(r[1], r[3]) for r in got] == [(1, 1), (3, 2), (2, 3)]
+    assert got[1][2] == 0.5 and got[2][2] == round(1 / (2**0.5 * 1.5), 6)
+    for lists in (
+        _tie_lists(spark, rows[::-1]),
+        _tie_lists(spark, rows).repartition(3),
+        _tie_lists(spark, rows[::-1]).repartition(2, "id"),
+    ):
+        assert search(lists, 3) == got
+    assert search(_tie_lists(spark, rows[::-1]), 2) == got[:2]
+
+
+def test_route_ties_to_lower_centroid_id(spark):
+    """Centroids 1 and 2 are identical and nearest to the query:
+    nprobe=1 routes to 1, nprobe=2 to both, and the farthest centroid
+    comes last."""
+    from traffic_forecast_etl_spark.operators.similarity import _route
+
+    q = spark.createDataFrame([(7, [1.0, 0.1])], "__qid long, __qv array<double>")
+    cents = [[0.0, 1.0], [1.0, 0.0], [1.0, 0.0]]
+
+    def routed(nprobe):
+        return [r.centroid_id for r in _route(q, cents, nprobe).collect()]
+
+    assert routed(1) == [1]
+    assert routed(2) == [1, 2]
+    assert routed(3) == [1, 2, 0]
+
+
 def test_ann_index_append_and_upsert(spark, emb, ann_path):
     """Appends encode against the FROZEN quantizers (O(new) commit —
     every existing file carries by name); an identical-vector query

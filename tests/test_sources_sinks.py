@@ -387,6 +387,27 @@ def test_fresh_rows_probe_range_covers_dropped_duplicates(spark, tmp_path):
     assert sorted(r.k for r in out.collect()) == [11, 12]
 
 
+def test_fresh_rows_empty_batch_reads_no_sink(spark, tmp_path):
+    """An empty batch (every payload element rejected upstream) has no
+    range to push: fresh_rows returns it without planning a scan of
+    the sink, and insert_if_absent appends nothing and writes no
+    file."""
+    import glob
+
+    from traffic_forecast_etl_spark.sinks import fresh_rows
+
+    path = str(tmp_path / "sink")
+    spark.range(0, 100).selectExpr("id AS ts", "id * 2 AS v").write.parquet(path)
+    files = sorted(glob.glob(path + "/*.parquet"))
+    batch = spark.createDataFrame([], "ts long, v long")
+    explained = fresh_rows(spark, batch, path, ["ts"])._jdf.queryExecution().explainString(  # noqa: SLF001
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert "parquet" not in explained.lower(), explained
+    assert insert_if_absent(spark, batch, path, ["ts"]) == 0
+    assert sorted(glob.glob(path + "/*.parquet")) == files
+
+
 def test_merge_upsert_crash_recovery(spark, tmp_path):
     """Kill the writer at every point of the marker-protected swap and
     assert a reader still sees a complete table — old or new, never a

@@ -2,27 +2,27 @@
 snapshot table format.
 
 :func:`similarity.ivf_pq_topk` and :func:`ann_index_search` share one
-search path: the IVF routing (``_route``), the ADC kernel
-(``_adc_shortlist``) and the exact-cosine refine + top-k tail
-(``_rank_topk``) of :mod:`.similarity`. They differ only in where the
-inverted lists come from: the former builds them inline per call, this
-module builds them ONCE and persists them, so a production corpus
-serves many query batches while new embeddings stream in. The index is
-two artifacts under one directory:
+search path: the IVF routing projection (``_route``) and the fused
+ADC + exact-refine + top-k kernel (``_adc_refine_topk``) of
+:mod:`.similarity`. They differ only in where the inverted lists come
+from: the former builds them inline per call, this module builds them
+ONCE and persists them, so a production corpus serves many query
+batches while new embeddings stream in. The index is two artifacts
+under one directory:
 
 - ``<path>/model.json`` — the frozen quantizers: IVF centroids
   (k × d) + PQ codebooks (m × 2^nbits × d/m), KBs-MBs, written
-  atomically; loaded to the driver per search and broadcast.
+  atomically; loaded to the driver per search, the centroids ride
+  the routing projection as one array literal.
 - ``<path>/codes`` — a :mod:`..tablefmt` snapshot table
   ``(id, centroid_id, pq_code, vector)`` IDENTITY-PARTITIONED on
   ``centroid_id``: the inverted lists ARE partition tuples, so a
   search's ``nprobe`` routing becomes manifest partition pruning —
   only the probed lists' files are ever planned, opened, or read
   (the Faiss/DiskANN on-disk inverted-list layout, expressed as
-  tablefmt partitioning). The ADC phase selects only
-  ``(id, pq_code)``, so parquet column pruning keeps the raw
-  vectors out of the scan; full vectors are read only for the
-  ``k·refine`` winners (same file set, keyed join).
+  tablefmt partitioning). The search kernel reads ``pq_code`` and
+  ``vector`` of those files in one pass: it scores every
+  candidate's codes and takes exact cosines of the shortlist only.
 
 Maintenance is O(new data) because the quantizers are FROZEN after
 build (the standard incremental-IVF pattern — recall degrades only
@@ -62,10 +62,10 @@ from pyspark.sql import functions as F
 from .. import tablefmt as TF
 from ..sinks import acquire_writer_lease, release_writer_lease
 from .similarity import (
-    _adc_shortlist,
+    _adc_refine_topk,
+    _centroids,
     _doubles,
     _index_rows,
-    _rank_topk,
     _route,
     ivf_assign,
     pq_train,
@@ -78,6 +78,7 @@ except ImportError:  # pragma: no cover
 
 _MODEL_NAME = "model.json"
 _CODES_DIR = "codes"
+_PROBED = "operators.ann_index.search.probed"
 
 
 def _codes_path(path: str) -> str:
@@ -140,10 +141,7 @@ def _write_epoch(
         "dim": int(len(books) * books[0].shape[1]),
         "seed": seed,
         "codebooks": [[list(map(float, row)) for row in b] for b in books],
-        "centroids": [
-            [float(x) for x in r["centroid"]]
-            for r in cent.orderBy("centroid_id").collect()
-        ],
+        "centroids": _centroids(cent),
     }
     cpath = _codes_path(path)
     cur = TF.current_version(cpath)
@@ -179,20 +177,11 @@ def ann_index_build(
     )
 
 
-def _cent_df(spark: SparkSession, model: dict) -> DataFrame:
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(model["centroids"])],
-        "centroid_id int, centroid array<double>",
-    )
-
-
-def _assign_frozen(
-    df: DataFrame, id_col: str, vec_col: str, cent: DataFrame
-) -> DataFrame:
+def _assign_frozen(df: DataFrame, id_col: str, vec_col: str, centroids: list) -> DataFrame:
     """Nearest-centroid assignment against the FROZEN model: the query
     routing with ``nprobe=1`` — new vectors never retrain anything."""
     c = df.select(F.col(id_col).alias("__qid"), _doubles(vec_col).alias("__qv"))
-    return _route(c, cent, 1).select(
+    return _route(c, centroids, 1).select(
         F.col("__qid").alias("__cid"), F.col("__qv").alias("__cv"), "centroid_id"
     )
 
@@ -227,9 +216,7 @@ def ann_index_append(
     try:
         model = ann_index_model(path)
         books = [np.asarray(b, dtype=np.float64) for b in model["codebooks"]]
-        assigned = _assign_frozen(
-            new_df, id_col, vec_col, _cent_df(spark, model)
-        )
+        assigned = _assign_frozen(new_df, id_col, vec_col, model["centroids"])
         rows = _index_rows(new_df, id_col, vec_col, assigned, books)
         if mode == "append":
             return TF.snapshot_write(
@@ -301,11 +288,13 @@ def ann_index_search(
     version: int | None = None,
 ) -> DataFrame:
     """Search the persisted index: route each query to its ``nprobe``
-    nearest centroids, PLAN only those inverted lists' files via the
-    codes table's partition pruning, ADC-score their m-byte codes,
-    and exact-cosine refine the top ``k·refine``. Output schema
-    matches s1/s3/s6: (query_id, neighbor_id, cosine, rank) with
-    exact cosines. ``version=`` time-travels the index (tags via
+    nearest centroids ONCE (a narrow projection, checkpointed; the
+    probed set is observed in that same pass), PLAN only those
+    inverted lists' files via the codes table's partition pruning,
+    then ADC-score, exact-refine and rank in one grouped-map pass
+    (:func:`.similarity._adc_refine_topk`). Output schema matches
+    s1/s3/s6: (query_id, neighbor_id, cosine, rank) with exact
+    cosines. ``version=`` time-travels the index (tags via
     ``TF.snapshot_tag`` on the codes table) — the quantizer model
     resolves to the one ACTIVE at that codes version
     (:func:`_model_for_version`), so pre-recluster epochs decode with
@@ -318,23 +307,18 @@ def ann_index_search(
     cpath = _codes_path(path)
     v = TF.read_manifest(cpath, version)["version"]
     model = _model_for_version(path, v)
-    books = [np.asarray(b, dtype=np.float64) for b in model["codebooks"]]
     q = queries.select(F.col(query_id).alias("__qid"), _doubles(vec_col).alias("__qv"))
-    probes = _route(q, _cent_df(spark, model), nprobe)
-    # the probed set is <= n_centroids ints — driver-side routing is
-    # the point: partition pruning plans ONLY these lists' files
-    probed = sorted(
-        r["centroid_id"]
-        for r in probes.select("centroid_id").distinct().collect()
+    # the probed set (<= n_centroids ints) is observed by the pass
+    # that checkpoints the routes, read off that query as
+    # sinks.insert_if_absent does; partition pruning then plans ONLY
+    # these lists' files. A lost executor fails the search (read-only:
+    # re-running it is safe)
+    observed = _route(q, model["centroids"], nprobe).observe(
+        _PROBED, F.collect_set("centroid_id").alias("ids")
     )
-    m_codes, entries = TF.snapshot_lookup_files(
-        cpath, "centroid_id", probed, version=v
-    )
+    probes = observed.localCheckpoint(eager=True)
+    metrics = observed._jdf.queryExecution().observedMetrics()  # noqa: SLF001
+    probed = sorted(int(c) for c in metrics.apply(_PROBED).getList(0))
+    m_codes, entries = TF.snapshot_lookup_files(cpath, "centroid_id", probed, version=v)
     lists = TF._visible_read(spark, cpath, m_codes, entries)
-    # ADC phase reads (id, centroid_id, pq_code) only; refine reads
-    # exact cosines from the SAME pruned file set (vector column read
-    # only here, only for shortlisted ids)
-    shortlist = _adc_shortlist(probes, lists, books, int(k * refine))
-    cvecs = lists.select(F.col("id").alias("__rcid"), F.col("vector").alias("__cv"))
-    pairs = shortlist.join(q, "__qid").join(cvecs, F.col("__cid") == F.col("__rcid"))
-    return _rank_topk(pairs, k, query_id)
+    return _adc_refine_topk(probes, lists, model["codebooks"], k, int(k * refine), query_id)

@@ -58,21 +58,26 @@ def _doubles(col: str) -> Column:
     return F.transform(F.col(col), lambda v: v.cast("double"))
 
 
-def _route(q: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
+def _centroids(cent: DataFrame) -> list[list[float]]:
+    """``ivf_assign``'s k centroid rows, in id order — the form
+    :func:`_route` takes (one small collect)."""
+    return [r["centroid"] for r in cent.orderBy("centroid_id").collect()]
+
+
+def _route(q: DataFrame, centroids: list[list[float]], nprobe: int) -> DataFrame:
     """IVF routing: (__qid, __qv, centroid_id) for each query's
-    ``nprobe`` most cosine-similar centroids. The centroid table is
-    tiny (k rows), so it broadcasts and the |q| × k score is a map-side
-    cross join; ties break to the lower centroid id."""
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id").asc()
+    ``nprobe`` most cosine-similar centroids; ties break to the lower
+    centroid id. One narrow projection: the k centroids ride as one
+    array literal, each query scores them with ``_cosine``, sorts the
+    (-cosine, id) pairs and explodes the first ``nprobe`` — no join,
+    no exchange, no window."""
+    cents = F.lit([[float(x) for x in c] for c in centroids])
+    scored = F.transform(
+        cents, lambda c, i: F.struct((-_cosine(F.col("__qv"), c)).alias("s"), i.alias("i"))
     )
-    return (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("__sim", _cosine(F.col("__qv"), F.col("centroid")))
-        .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= nprobe)
-        .select("__qid", "__qv", "centroid_id")
-    )
+    return q.select(
+        "__qid", "__qv", F.explode(F.slice(F.array_sort(scored), 1, nprobe)).alias("__p")
+    ).select("__qid", "__qv", F.col("__p.i").alias("centroid_id"))
 
 
 def _rank_topk(pairs: DataFrame, k: int, query_id: str) -> DataFrame:
@@ -671,7 +676,7 @@ def ivf_topk(
     """
     assigned, cent = ivf_assign(corpus, vec_col, corpus_id, n_centroids, seed=seed)
     q = queries.select(F.col(query_id).alias("__qid"), _doubles(vec_col).alias("__qv"))
-    cand = _route(q, cent, nprobe).join(assigned, "centroid_id")
+    cand = _route(q, _centroids(cent), nprobe).join(assigned, "centroid_id")
     return _rank_topk(cand.filter(F.col("__cid") != F.col("__qid")), k, query_id)
 
 
@@ -1325,41 +1330,58 @@ def _index_rows(
     )
 
 
-def _adc_shortlist(
-    probes: DataFrame, lists: DataFrame, books: list["np.ndarray"], n_short: int
+def _adc_refine_topk(
+    probes: DataFrame,
+    lists: DataFrame,
+    books: list,
+    k: int,
+    n_short: int,
+    query_id: str,
 ) -> DataFrame:
-    """The ADC (asymmetric distance computation) kernel: join the
-    routed queries (_route) to the probed inverted lists' ``(id,
-    centroid_id, pq_code)`` columns — never ``vector``, so a parquet
-    scan prunes it — and keep each query's ``n_short`` best candidates
-    by PQ-code inner product. One Arrow batch per query: ONE (m ×
-    2^nbits) table against the codebooks, then m lookups per
-    candidate via numpy fancy indexing. Returns (__qid, __cid, __adc)."""
-    mm = len(books)
-    dsub = books[0].shape[1]
-    flat_books = np.stack([np.asarray(b, dtype=np.float64) for b in books])
-    cand = probes.join(lists.select("id", "centroid_id", "pq_code"), "centroid_id").filter(
-        F.col("id") != F.col("__qid")
-    )
+    """The IVF-PQ search kernel: ADC shortlist, exact refine and top-k
+    in one grouped-map pass over the routed queries (:func:`_route`,
+    broadcast) joined to the probed lists ``(id, centroid_id, pq_code,
+    vector)``, one Arrow batch per query. Per batch: ONE (m × 2^nbits)
+    inner-product table, m lookups per candidate, keep the ``n_short``
+    best ADC scores AND every candidate tying the cutoff (which of a
+    tie a sort keeps depends on row order), exact cosines for those
+    only, ranked on (cosine desc, id asc). The sums fold sequentially
+    from 0.0 (``cumsum``'s last column; ``+ 0.0`` fixes an all-zero
+    sum's sign), as ``_cosine``'s ``aggregate`` does, so cosines are
+    bit-identical to the Spark expression. Returns (query_id,
+    neighbor_id, cosine rounded in Spark, rank)."""
+    flat_books = np.asarray(books, dtype=np.float64)  # (m, ksub, dsub)
+    mm, _, dsub = flat_books.shape
+    cand = F.broadcast(probes).join(
+        lists.select("id", "centroid_id", "pq_code", "vector"), "centroid_id"
+    ).filter(F.col("id") != F.col("__qid"))
 
-    def adc_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         qv = np.asarray(pdf["__qv"].iloc[0], dtype=np.float64)
-        qv = qv / max(np.linalg.norm(qv), 1e-300)
+        unit = qv / max(np.linalg.norm(qv), 1e-300)
         # per-subspace inner-product tables: (m, ksub)
-        tables = np.einsum("md,mkd->mk", qv.reshape(mm, dsub), flat_books)
-        codes = np.asarray([np.asarray(c, dtype=np.int64) for c in pdf["pq_code"]])
+        tables = np.einsum("md,mkd->mk", unit.reshape(mm, dsub), flat_books)
+        codes = np.stack(pdf["pq_code"].to_numpy())
         scores = tables[np.arange(mm)[None, :], codes].sum(1)
-        order = np.argsort(-scores, kind="stable")[:n_short]
-        return pd.DataFrame(
-            {
-                "__qid": pdf["__qid"].to_numpy()[order],
-                "__cid": pdf["id"].to_numpy()[order],
-                "__adc": scores[order],
-            }
-        )
+        keep = np.ones(len(scores), dtype=bool)
+        if len(scores) > n_short:
+            keep = scores >= -np.partition(-scores, n_short - 1)[n_short - 1]
+        ids = pdf["id"].to_numpy()[keep]
+        V = np.stack(pdf["vector"].to_numpy()[keep])
+        dot = np.cumsum(V * qv, axis=1)[:, -1] + 0.0
+        nq = np.sqrt(np.cumsum(qv * qv)[-1] + 0.0)
+        cos = dot / (nq * np.sqrt(np.cumsum(V * V, axis=1)[:, -1] + 0.0))
+        top = np.lexsort((ids, -cos))[:k]
+        rank = np.arange(1, len(top) + 1, dtype=np.int32)
+        qid = pdf["__qid"].iloc[0]
+        return pd.DataFrame({"__qid": qid, "__cid": ids[top], "__cos": cos[top], "rank": rank})
 
-    return cand.groupBy("__qid").applyInPandas(
-        adc_kernel, "__qid long, __cid long, __adc double"
+    out = cand.groupBy("__qid").applyInPandas(
+        kernel, "__qid long, __cid long, __cos double, rank int"
+    )
+    return out.select(
+        F.col("__qid").alias(query_id), F.col("__cid").alias("neighbor_id"),
+        F.round("__cos", 6).alias("cosine"), "rank",
     )
 
 
@@ -1381,30 +1403,22 @@ def ivf_pq_topk(
     to ``nprobe`` inverted lists (s3's structure), but candidates are
     scored from their ``m``-byte PQ codes via asymmetric distance
     computation — per query ONE (m × 2^nbits) inner-product table
-    against the codebooks, then each candidate costs m table lookups
-    — and
-    only the ADC top ``k·refine`` candidates are re-ranked with the
-    exact cosine (the standard refine step). Returns the s1/s3 schema
-    (query_id, neighbor_id, cosine, rank) with EXACT cosines, so
-    recall against s1 is directly comparable.
+    against the codebooks, then m table lookups per candidate — and
+    only the ADC top ``k·refine`` (plus any tying the cutoff) are
+    re-ranked with the exact cosine, the standard refine step.
+    Returns the s1/s3 schema (query_id, neighbor_id, cosine, rank)
+    with EXACT cosines, so recall against s1 is directly comparable.
 
-    Scale shape: the inverted lists carry (id, centroid_id, pq_code)
-    — m bytes a vector, 32-384× less than the raw embedding, which is
-    what lets a 100 TB corpus's index live in memory. Full vectors
-    are touched only for the k·refine winners per query (a keyed
-    join), never shuffled wholesale. The ADC kernel is an Arrow
-    batch per (query, probed lists) group: table build m·2^nbits·dsub
-    FLOPs, scoring |candidates|·m lookups via numpy fancy indexing.
-    The index is built inline per call; ``ann_index`` persists the
-    same lists and searches them through the same routing, ADC and
-    refine helpers.
+    Scale shape: routing is one narrow projection, then ONE
+    grouped-map pass per query scores the codes, refines the
+    shortlist from the ``vector`` column the lists already carry and
+    emits ranks 1..k (:func:`_adc_refine_topk`). The index is built
+    inline per call; ``ann_index`` persists the same lists and
+    searches them through the same routing and kernel.
     """
     books = pq_train(corpus, vec_col, m=m, nbits=nbits, seed=seed)
     assigned, cent = ivf_assign(corpus, vec_col, corpus_id, n_centroids, seed=seed)
     lists = _index_rows(corpus, corpus_id, vec_col, assigned, books)
     q = queries.select(F.col(query_id).alias("__qid"), _doubles(vec_col).alias("__qv"))
-    shortlist = _adc_shortlist(_route(q, cent, nprobe), lists, books, int(k * refine))
-    # refine: exact cosine for the ADC winners only
-    cvecs = corpus.select(F.col(corpus_id).alias("__rcid"), _doubles(vec_col).alias("__cv"))
-    pairs = shortlist.join(q, "__qid").join(cvecs, F.col("__cid") == F.col("__rcid"))
-    return _rank_topk(pairs, k, query_id)
+    probes = _route(q, _centroids(cent), nprobe)
+    return _adc_refine_topk(probes, lists, books, k, int(k * refine), query_id)

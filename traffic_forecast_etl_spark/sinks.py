@@ -137,8 +137,11 @@ def fresh_rows(
         return deduped
     rk = range_key or keys[0]
     # the raw batch's range: dedup can only narrow it, and the probe
-    # skips the dedup exchange
-    lo, hi = batch.agg(F.min(rk), F.max(rk)).first()
+    # skips the dedup exchange. An empty batch has nothing to look up;
+    # a batch of only null range values keeps the unfiltered scan
+    lo, hi, n = batch.agg(F.min(rk), F.max(rk), F.count(F.lit(1))).first()
+    if not n:
+        return deduped
     # project the range key too when it is not a key column (e.g. a
     # time-ranged scan of a hash-keyed sink); the extra column rides
     # on the anti-join's build side and never reaches the output. The
