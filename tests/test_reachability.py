@@ -43,7 +43,6 @@ KEPT: dict[str, str] = {
     "operators.sampling.split_train_eval": "its test also pins hash_sample's salt independence",
     "operators.skew.salted_aggregate": "candidate for the hot-key item",
     "operators.skew.salted_join": "candidate for the hot-key item",
-    "sinks.read_sink": "reader in the merge_upsert crash-recovery test",
     "sources.delta_dv.roaring_array_serialize": _CODEC,
     "sources.delta_dv.roaring_array_deserialize": _CODEC,
     "sources.delta_dv.dv_payload_encode": _CODEC,
@@ -59,9 +58,7 @@ KEPT: dict[str, str] = {
     "sources.json_payload.first_matching_location": "the reference's AccuWeather location lookup",
     "sources.jdbc.read_jdbc": "the reference's Postgres sink (read side)",
     "sources.jdbc.write_jdbc_append": "the reference's Postgres sink (write side)",
-    "sources.writers.compact_partition": "candidate for the forecast-jobs item",
     "streaming.micro_batch.read_documents_stream": "source in the batch/stream curation parity test",
-    "streaming.micro_batch.streaming_snapshot_merge": _TF_TEST,
     "tablefmt.snapshot_compact": _TF_TEST,
     "tablefmt.snapshot_expire": _TF_TEST,
     "tablefmt.snapshot_incremental": _TF_TEST,

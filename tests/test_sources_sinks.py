@@ -1,13 +1,13 @@
 """Source/sink tests: delimiter probing + mixed-dialect detector
-files (SURVEY S2-S3, E3 fixtures), idempotent sinks (S8), merge
-upsert."""
+files (SURVEY S2-S3, E3 fixtures), idempotent sinks (S8), the
+streaming rollup's snapshot-table upsert."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from traffic_forecast_etl_spark.plans.detector_prep import prepare_detector_series
-from traffic_forecast_etl_spark.sinks import insert_if_absent, merge_upsert
+from traffic_forecast_etl_spark.sinks import insert_if_absent
 from traffic_forecast_etl_spark.sources.csv import probe_delimiter, read_csv_auto
 
 DIALECT_A = """Detector,Datum,Uur,Waarde,Long,Lat
@@ -98,14 +98,6 @@ def test_insert_if_absent_leaves_session_serializable(spark, tmp_path):
     assert len(model.transform(train).collect()) == 20
 
 
-def test_merge_upsert_last_writer_wins(spark, tmp_path):
-    path = str(tmp_path / "merge_sink")
-    merge_upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"), path, ["id"])
-    merge_upsert(spark, spark.createDataFrame([(2, "B"), (3, "c")], "id int, v string"), path, ["id"])
-    out = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert out == {1: "a", 2: "B", 3: "c"}  # id=2 UPDATED
-
-
 def test_insert_if_absent_prunes_existing_scan(spark, tmp_path):
     """At a steady ingest cadence the anti-join must NOT reread the
     sink's full history: the existing-side scan carries the batch's
@@ -130,47 +122,6 @@ def test_insert_if_absent_prunes_existing_scan(spark, tmp_path):
     ), pushed
     # and pruning must not change semantics: 990 exists, 1005 is new
     assert {r.ts for r in df.collect()} == {1005}
-
-
-def test_merge_upsert_partition_scoped_rewrite(spark, tmp_path):
-    """With a partitioned sink, merging a batch that touches one
-    partition must leave the files of untouched partitions in place
-    (dynamic partition overwrite), not rewrite the whole sink."""
-    import os
-
-    path = str(tmp_path / "part_sink")
-    seed = spark.createDataFrame(
-        [(1, "d1", "a"), (2, "d1", "b"), (3, "d2", "c")], "id int, d string, v string"
-    )
-    merge_upsert(spark, seed, path, ["id"], partition_by=["d"])
-    d1_files = {
-        f: os.path.getmtime(os.path.join(path, "d=d1", f))
-        for f in os.listdir(os.path.join(path, "d=d1"))
-        if f.endswith(".parquet")
-    }
-    batch = spark.createDataFrame([(3, "d2", "C"), (4, "d2", "e")], "id int, d string, v string")
-    merge_upsert(spark, batch, path, ["id"], partition_by=["d"])
-    out = {r.id: (r.d, r.v) for r in spark.read.parquet(path).collect()}
-    assert out == {1: ("d1", "a"), 2: ("d1", "b"), 3: ("d2", "C"), 4: ("d2", "e")}
-    d1_after = {
-        f: os.path.getmtime(os.path.join(path, "d=d1", f))
-        for f in os.listdir(os.path.join(path, "d=d1"))
-        if f.endswith(".parquet")
-    }
-    assert d1_after == d1_files  # untouched partition: same files, same mtimes
-
-
-def test_merge_upsert_unique_staging(spark, tmp_path):
-    """Staging dirs are uniquely named and cleaned up — no fixed
-    '__staging' sibling for concurrent merges to collide on."""
-    import os
-
-    path = str(tmp_path / "stage_sink")
-    merge_upsert(spark, spark.createDataFrame([(1, "a")], "id int, v string"), path, ["id"])
-    merge_upsert(spark, spark.createDataFrame([(1, "A")], "id int, v string"), path, ["id"])
-    siblings = [d for d in os.listdir(tmp_path) if d.startswith("stage_sink") and d != "stage_sink"]
-    assert siblings == []
-    assert {r.v for r in spark.read.parquet(path).collect()} == {"A"}
 
 
 def test_ddl_create_tables_idempotent(spark, tmp_path):
@@ -214,33 +165,6 @@ def test_ddl_create_tables_idempotent(spark, tmp_path):
         spark.sql(f"DROP DATABASE IF EXISTS {db}")
 
 
-def test_compact_partition_reduces_files(spark, tmp_path):
-    """The small-files maintenance pass: a many-small-file partition
-    compacts to few files with identical data; sibling partitions are
-    untouched; staging dirs are cleaned up."""
-    import os
-
-    from traffic_forecast_etl_spark.sources.writers import compact_partition
-
-    path = str(tmp_path / "facts")
-    # 40 tiny files in dt=a, a few in dt=b
-    spark.range(0, 4000).selectExpr("id", "'a' AS dt").repartition(40).write.partitionBy(
-        "dt"
-    ).parquet(path)
-    spark.range(4000, 4100).selectExpr("id", "'b' AS dt").repartition(2).write.mode(
-        "append"
-    ).partitionBy("dt").parquet(path)
-    b_files = sorted(os.listdir(os.path.join(path, "dt=b")))
-    before = sum(1 for f in os.listdir(os.path.join(path, "dt=a")) if f.endswith(".parquet"))
-    assert before == 40
-    n = compact_partition(spark, path, {"dt": "a"})
-    assert n < 5
-    assert sorted(os.listdir(os.path.join(path, "dt=b"))) == b_files  # untouched
-    got = sorted(r.id for r in spark.read.parquet(path).collect())
-    assert got == list(range(4100))
-    assert [d for d in os.listdir(tmp_path) if "compact" in d] == []
-
-
 def test_streaming_rollup_maintenance_incremental(spark, tmp_path):
     """Continuous-aggregate semantics across ticks: tick 2's events
     land in windows tick 1 already wrote (the event_id split
@@ -255,6 +179,7 @@ def test_streaming_rollup_maintenance_incremental(spark, tmp_path):
         read_events_stream,
         streaming_rollup_maintenance,
     )
+    from traffic_forecast_etl_spark.tablefmt import snapshot_read
 
     src = tmp_path / "events_src"
     src.mkdir()
@@ -281,7 +206,7 @@ def test_streaming_rollup_maintenance_incremental(spark, tmp_path):
     def rollup_rows():
         return {
             (r.event_type, r.win_start, r.n, r.sum_value)
-            for r in spark.read.parquet(rollup)
+            for r in snapshot_read(spark, rollup)
             .select("event_type", "win_start", "n", "sum_value")
             .collect()
         }
@@ -315,30 +240,52 @@ def test_streaming_rollup_maintenance_incremental(spark, tmp_path):
     assert rollup_rows() == full
 
 
-def test_merge_upsert_empty_batch_is_noop(spark, tmp_path):
-    """An empty batch against an existing partitioned sink must be a
-    clean no-op (a 12-h tick with zero rows), not a crash."""
+def test_streaming_rollup_replayed_epoch_commits_nothing(spark, tmp_path):
+    """The rollup commits each micro-batch under one txn_app named by
+    its checkpoint and the epoch id: after two ticks the manifest
+    holds that one app at the checkpoint's last committed epoch, and
+    a redelivery of that epoch (foreachBatch is at-least-once) adds no
+    table version and changes no row."""
     import os
+    import shutil
 
-    path = str(tmp_path / "empty_batch_sink")
-    seed = spark.createDataFrame([(1, "d1", "a")], "id int, d string, v string")
-    merge_upsert(spark, seed, path, ["id"], partition_by=["d"])
-    empty = spark.createDataFrame([], "id int, d string, v string")
-    merge_upsert(spark, empty, path, ["id"], partition_by=["d"])
-    assert [(r.id, r.v) for r in spark.read.parquet(path).collect()] == [(1, "a")]
+    from traffic_forecast_etl_spark import tablefmt as TF
+    from traffic_forecast_etl_spark.streaming.micro_batch import (
+        read_events_stream,
+        streaming_rollup_maintenance,
+    )
 
+    src = tmp_path / "events_src"
+    src.mkdir()
+    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    rollup, ckpt = str(tmp_path / "rollup"), str(tmp_path / "ck")
+    for i, part in enumerate(["event_id < 500", "event_id >= 500"]):
+        events.filter(part).coalesce(1).write.parquet(str(tmp_path / f"b{i}"))
+        for f in (tmp_path / f"b{i}").glob("*.parquet"):
+            shutil.copy(f, src / f"batch{i}.parquet")
+        streaming_rollup_maintenance(
+            read_events_stream(spark, str(src)),
+            rollup,
+            watermark="3650 days",
+            checkpoint=ckpt,
+        ).awaitTermination()
 
-def test_compact_refuses_partitioned_root(spark, tmp_path):
-    """Compacting the root of a partitioned table would flatten the
-    layout — it must refuse and direct to per-partition compaction."""
-    import pytest as _pytest
+    txns = TF.read_manifest(rollup)["txns"]
+    assert len(txns) == 1
+    (app,) = txns
+    assert os.path.abspath(ckpt) in app
+    last_epoch = max(int(n) for n in os.listdir(f"{ckpt}/commits") if n.isdigit())
+    assert TF.last_txn_version(rollup, app) == last_epoch
 
-    from traffic_forecast_etl_spark.sources.writers import compact_partition
-
-    path = str(tmp_path / "parts")
-    spark.range(10).selectExpr("id", "'a' AS dt").write.partitionBy("dt").parquet(path)
-    with _pytest.raises(ValueError, match="leaf partition"):
-        compact_partition(spark, path)
+    version = TF.current_version(rollup)
+    rows = sorted(tuple(r) for r in TF.snapshot_read(spark, rollup).collect())
+    redelivered = TF.snapshot_read(spark, rollup).withColumn("n", F.lit(-1))
+    assert TF.snapshot_merge(
+        spark, redelivered, rollup, keys=["win_start", "event_type"],
+        txn_app=app, txn_version=last_epoch,
+    ) == version
+    assert TF.current_version(rollup) == version
+    assert sorted(tuple(r) for r in TF.snapshot_read(spark, rollup).collect()) == rows
 
 
 def test_fresh_rows_nonkey_range_key(spark, tmp_path):
@@ -406,166 +353,6 @@ def test_fresh_rows_empty_batch_reads_no_sink(spark, tmp_path):
     assert "parquet" not in explained.lower(), explained
     assert insert_if_absent(spark, batch, path, ["ts"]) == 0
     assert sorted(glob.glob(path + "/*.parquet")) == files
-
-
-def test_merge_upsert_crash_recovery(spark, tmp_path):
-    """Kill the writer at every point of the marker-protected swap and
-    assert a reader still sees a complete table — old or new, never a
-    gap — and that recovery rolls the recorded intent forward."""
-    import os
-
-    from traffic_forecast_etl_spark.sinks import (
-        _marker_path,
-        _write_commit_marker,
-        read_sink,
-        recover_sink,
-    )
-
-    path = str(tmp_path / "crash_sink")
-    v1 = spark.createDataFrame([(1, "a")], "id int, v string")
-    v2 = spark.createDataFrame([(1, "A"), (2, "b")], "id int, v string")
-    token = "deadbeef"
-    staging = f"{path}__staging_{token}"
-    old = f"{path}__old_{token}"
-
-    def fresh_v1():
-        import shutil
-
-        for p in (path, staging, old):
-            shutil.rmtree(p, ignore_errors=True)
-        if os.path.exists(_marker_path(path, token)):
-            os.remove(_marker_path(path, token))
-        merge_upsert(spark, v1, path, ["id"])
-
-    def read(expect):
-        got = {
-            r.id: r.v
-            for r in read_sink(spark, path, swap_grace_seconds=0).collect()
-        }
-        assert got == expect
-
-    # crash A: marker written, no rename yet — path is still the old
-    # complete copy; a reader sees it, recovery rolls forward to v2
-    fresh_v1()
-    v2.write.mode("overwrite").parquet(staging)
-    _write_commit_marker(path, token, existed=True)
-    read({1: "a"})  # complete OLD copy, not a gap
-    assert recover_sink(path) == "rolled_forward"
-    read({1: "A", 2: "b"})
-    assert not os.path.exists(staging) and not os.path.exists(_marker_path(path, token))
-
-    # crash B: between the two renames — path is GONE; the reader
-    # itself resolves the marker and lands on the new copy
-    fresh_v1()
-    v2.write.mode("overwrite").parquet(staging)
-    _write_commit_marker(path, token, existed=True)
-    os.rename(path, old)
-    read({1: "A", 2: "b"})
-    assert not os.path.exists(old) and not os.path.exists(_marker_path(path, token))
-
-    # crash C: swap done, cleanup died — reader sees v2; recovery
-    # drops the old copy and the marker
-    fresh_v1()
-    os.rename(path, old)
-    v2.write.mode("overwrite").parquet(path)
-    _write_commit_marker(path, token, existed=True)
-    read({1: "A", 2: "b"})
-    assert recover_sink(path) == "cleaned"
-    assert not os.path.exists(old) and not os.path.exists(_marker_path(path, token))
-
-    # crash D: staging lost externally (janitor raced a dead writer),
-    # path gone — recovery rolls BACK to the old complete copy
-    fresh_v1()
-    _write_commit_marker(path, token, existed=True)
-    os.rename(path, old)
-    assert recover_sink(path) == "rolled_back"
-    read({1: "a"})
-
-    # and a live writer entering on top of crash state B first
-    # recovers, then merges on the recovered v2
-    fresh_v1()
-    v2.write.mode("overwrite").parquet(staging)
-    _write_commit_marker(path, token, existed=True)
-    os.rename(path, old)
-    merge_upsert(
-        spark, spark.createDataFrame([(3, "c")], "id int, v string"), path, ["id"]
-    )
-    read({1: "A", 2: "b", 3: "c"})
-
-
-def test_recover_sink_age_gate_protects_live_writer(spark, tmp_path):
-    """A fresh marker (an in-flight swap) is skipped by age-gated
-    recovery — the janitor/reader must never hijack a live writer's
-    rename pair."""
-    import os
-
-    from traffic_forecast_etl_spark.sinks import (
-        _marker_path,
-        _write_commit_marker,
-        recover_sink,
-    )
-
-    path = str(tmp_path / "live_sink")
-    merge_upsert(spark, spark.createDataFrame([(1, "a")], "id int, v string"), path, ["id"])
-    token = "feedface"
-    staging = f"{path}__staging_{token}"
-    spark.createDataFrame([(2, "b")], "id int, v string").write.parquet(staging)
-    _write_commit_marker(path, token, existed=True)
-    assert recover_sink(path, min_marker_age_seconds=3600) is None
-    assert os.path.exists(staging) and os.path.exists(_marker_path(path, token))
-    # ungated (the writer's own entry path) resolves it
-    assert recover_sink(path) == "rolled_forward"
-
-
-def test_merge_upsert_concurrent_writer_aborts(spark, tmp_path):
-    """Two interleaved merges: the second aborts cleanly (explicit
-    ConcurrentWriterError, sink untouched) instead of last-rename-wins
-    silently dropping the first writer's merge; after the winner
-    releases, the loser's retry lands normally."""
-    import os
-    import time
-
-    import pytest
-
-    from traffic_forecast_etl_spark.sinks import (
-        ConcurrentWriterError,
-        acquire_writer_lease,
-        merge_upsert,
-        release_writer_lease,
-    )
-
-    path = str(tmp_path / "sink")
-    seed = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
-    merge_upsert(spark, seed, path, ["id"])
-
-    # writer A is mid-merge (holds the lease) when writer B arrives
-    holder_a = acquire_writer_lease(path)
-    batch_b = spark.createDataFrame([(2, "B!"), (3, "c")], "id int, v string")
-    with pytest.raises(ConcurrentWriterError):
-        merge_upsert(spark, batch_b, path, ["id"])
-    got = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a"), (2, "b")}  # B left no trace
-
-    release_writer_lease(path, holder_a)
-    merge_upsert(spark, batch_b, path, ["id"])  # loser retries, lands
-    got = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a"), (2, "B!"), (3, "c")}
-
-    # a dead writer's lease (older than ttl) is broken, not honored
-    holder_dead = acquire_writer_lease(path)
-    lease = path + "__lease"
-    old = time.time() - 3600
-    os.utime(lease, (old, old))
-    merge_upsert(
-        spark,
-        spark.createDataFrame([(4, "d")], "id int, v string"),
-        path,
-        ["id"],
-        lease_ttl_seconds=60,
-    )
-    assert spark.read.parquet(path).count() == 4
-    assert not os.path.exists(lease)  # new holder released its (stolen) lease
-    release_writer_lease(path, holder_dead)  # no-op: not ours anymore
 
 
 # ---------------------------------------------------------------------------

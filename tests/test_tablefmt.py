@@ -206,6 +206,39 @@ def test_writer_lease_serializes_commits(spark, tmp_path):
     assert T.snapshot_write(spark, _mk(spark, range(3)), path) == 0
 
 
+def test_writer_lease_breaks_stale_and_ignores_stolen_release(spark, tmp_path):
+    """A lease older than its TTL (default 600 s) belongs to a dead
+    writer: the next commit breaks it and lands. The dead holder's late
+    release is a no-op, also when a new holder owns the lease."""
+    import time
+
+    path = str(tmp_path / "t")
+    T.snapshot_write(spark, _mk(spark, range(3)), path)
+    lease = path + "__lease"
+
+    def back_date():
+        old = time.time() - 3600
+        os.utime(lease, (old, old))
+
+    holder_dead = acquire_writer_lease(path)
+    back_date()
+    T.snapshot_merge(spark, _mk(spark, [3]), path, keys=["id"])
+    assert T.snapshot_read(spark, path).count() == 4
+    assert not os.path.exists(lease)  # the new holder released its lease
+    release_writer_lease(path, holder_dead)  # no-op: not ours anymore
+
+    holder_dead = acquire_writer_lease(path)
+    back_date()
+    holder_live = acquire_writer_lease(path)  # breaks the stale lease
+    release_writer_lease(path, holder_dead)
+    with open(lease) as f:
+        assert json.load(f)["holder"] == holder_live
+    with pytest.raises(ConcurrentWriterError):
+        T.snapshot_merge(spark, _mk(spark, [4]), path, keys=["id"])
+    release_writer_lease(path, holder_live)
+    assert not os.path.exists(lease)
+
+
 def test_empty_table_read_keeps_schema(spark, tmp_path):
     path = str(tmp_path / "t")
     empty = spark.createDataFrame([], "id long, val string")

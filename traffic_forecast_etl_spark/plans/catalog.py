@@ -4218,16 +4218,16 @@ def st5_stream_static_enrich(spark, sf_dir):
 def st6_rollup_maintenance(spark, sf_dir):
     """Continuous-aggregate (hypertable-rollup) maintenance: an
     update-mode windowed aggregate whose changed windows MERGE per
-    micro-batch into a date-partitioned parquet rollup table
-    (streaming/micro_batch.py streaming_rollup_maintenance). The
-    oracle is the full batch aggregate — after the stream drains, the
-    MAINTAINED TABLE must equal the from-scratch rollup exactly; the
-    incremental two-tick/late-data/replay semantics are pinned in
+    micro-batch into a snapshot-table rollup, one txn-marked commit
+    per epoch (streaming/micro_batch.py streaming_rollup_maintenance).
+    The oracle is the full batch aggregate — after the stream drains,
+    the MAINTAINED TABLE must equal the from-scratch rollup exactly;
+    the incremental two-tick/late-data/replay semantics are pinned in
     test_sources_sinks."""
     import shutil
     import tempfile
 
-    from ..sources.tables import load_table
+    from .. import tablefmt as TF
     from ..streaming.micro_batch import (
         read_events_stream,
         streaming_rollup_maintenance,
@@ -4242,7 +4242,7 @@ def st6_rollup_maintenance(spark, sf_dir):
         )
         q.awaitTermination()
         out = (
-            spark.read.parquet(f"{tmp}/rollup")
+            TF.snapshot_read(spark, f"{tmp}/rollup")
             .select("event_type", "win_start", "n", "sum_value")
             # detach the result from the temp dir before it is removed
             .localCheckpoint(eager=True)

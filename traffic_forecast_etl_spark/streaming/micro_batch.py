@@ -188,8 +188,8 @@ def streaming_rollup_maintenance(
     """CONTINUOUS AGGREGATE maintenance — the hypertable-rollup /
     materialized-view pattern: a watermarked tumbling-window aggregate
     in UPDATE output mode, whose changed windows are MERGEd per
-    micro-batch into a date-partitioned parquet rollup keyed by
-    (event_type, win_start).
+    micro-batch into a :mod:`..tablefmt` snapshot table keyed by
+    (win_start, event_type) — :func:`streaming_snapshot_merge`.
 
     Why this shape at 100 TB:
       - update mode emits only windows whose aggregate CHANGED this
@@ -197,14 +197,13 @@ def streaming_rollup_maintenance(
       - the state store holds open windows only — the watermark closes
         and evicts them, so state is O(windows within watermark), not
         O(stream length);
-      - merge_upsert's partition-scoped rewrite (dt derived from
-        win_start, functionally determined by the key — its documented
-        contract) touches only the dates present in the batch: a
-        late-arriving correction rewrites one day-partition of the
-        rollup, not years of history;
-      - the rollup table is then a plain parquet table any engine
-        scans WITHOUT re-aggregating the raw stream — the read path
-        of every dashboard/downstream join at scale.
+      - ``snapshot_merge`` prunes files by the min/max of the leading
+        key, ``win_start`` (``event_type`` prunes nothing): a
+        late-arriving correction rewrites the few files whose window
+        range it overlaps, not years of history;
+      - the rollup is then a snapshot table any reader scans
+        (``snapshot_read``) WITHOUT re-aggregating the raw stream, and
+        never half-published: each micro-batch is one atomic commit.
 
     Late data inside the watermark folds in automatically (the window
     re-emits with its corrected aggregate and the MERGE replaces that
@@ -213,35 +212,29 @@ def streaming_rollup_maintenance(
 
     Restart-safe: the checkpoint carries watermark + window state, so
     an AvailableNow tick per scheduler run (R2's cadence) resumes
-    exactly; replaying a tick with no new files merges zero rows.
+    exactly; replaying a tick with no new files merges zero rows. Each
+    micro-batch commits under ``(txn_app, epoch_id)`` with ``txn_app``
+    naming the checkpoint, so a redelivered epoch commits nothing.
+    Without a checkpoint Spark's temporary one restarts epoch ids at
+    0, so every such run takes a fresh ``txn_app``.
     """
-    from ..sinks import merge_upsert
+    import os
+    import uuid
 
     agg = (
         events.withWatermark("ts", watermark)
         .groupBy("event_type", F.window("ts", window).alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 6).alias("sum_value"))
-        .select("event_type", F.col("w.start").alias("win_start"), "n", "sum_value")
+        .select(F.col("w.start").alias("win_start"), "event_type", "n", "sum_value")
     )
-
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        b = batch.withColumn("dt", F.col("win_start").cast("date").cast("string"))
-        merge_upsert(
-            b.sparkSession,
-            b,
-            rollup_path,
-            keys=["event_type", "win_start"],
-            partition_by=["dt"],
-        )
-
-    writer = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_merge)
-        .trigger(availableNow=True)
+    lineage = os.path.abspath(checkpoint) if checkpoint else uuid.uuid4().hex
+    return streaming_snapshot_merge(
+        agg,
+        rollup_path,
+        keys=["win_start", "event_type"],
+        txn_app=f"streaming_rollup_maintenance:{lineage}",
+        checkpoint=checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def streaming_snapshot_merge(
@@ -265,11 +258,13 @@ def streaming_snapshot_merge(
     structural NO-OP — the Delta txnAppId/txnVersion pattern on the
     plain-parquet format.
 
-    vs ``streaming_rollup_maintenance``'s merge_upsert sink: same
-    at-scale rewrite discipline (file-level pruning instead of
-    partition-level), plus readers get point-in-time snapshots and
-    time travel while the stream is mid-commit — a reader never sees
-    a half-published micro-batch.
+    Readers get point-in-time snapshots and time travel while the
+    stream is mid-commit — a reader never sees a half-published
+    micro-batch. The stream is written in UPDATE output mode: an
+    upsert sink consumes changed rows, so an aggregating stream (the
+    st6 rollup, :func:`streaming_rollup_maintenance`) emits only the
+    windows a micro-batch touched; a non-aggregating stream emits
+    every new row (Spark treats update mode as append there).
 
     CAVEAT (same as Delta's txnAppId contract): ``txn_app`` names a
     (logical stream, checkpoint lineage) pair. Epoch ids restart at 0
@@ -302,8 +297,10 @@ def streaming_snapshot_merge(
             change_feed=change_feed,
         )
 
-    writer = stream.writeStream.foreachBatch(_merge).trigger(
-        **(trigger if trigger is not None else {"availableNow": True})
+    writer = (
+        stream.writeStream.outputMode("update")
+        .foreachBatch(_merge)
+        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
     )
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)

@@ -7,8 +7,8 @@ missing"), but the ideas are public and small: a table is a list of
 immutable files named by a manifest; a commit writes new files, then
 a new manifest, then atomically swaps the LATEST pointer. Readers
 resolve the pointer once and see a consistent snapshot forever —
-no rename-window race (the failure mode sinks.merge_upsert documents
-for its dir-swap), and every historical version stays readable until
+no rename window in which a directory swap leaves the table missing
+or half-written — and every historical version stays readable until
 expired (time travel).
 
 Layout::
@@ -2033,9 +2033,9 @@ def snapshot_merge(
     table size.
 
     First commit on an empty path degenerates to snapshot_write.
-    Like merge_upsert, last-writer-wins within the batch via
-    dropDuplicates(keys). Key columns must carry manifest stats —
-    they are added automatically on every commit this function makes.
+    Last-writer-wins within the batch via dropDuplicates(keys). Key
+    columns must carry manifest stats — they are added automatically
+    on every commit this function makes.
 
     ``merge_schema`` lets the batch ADD columns (old files null-fill
     them); a batch that OMITS table columns always works — replaced
