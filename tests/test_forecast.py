@@ -157,10 +157,12 @@ def _parquet_files(path):
 
 @pytest.mark.slow
 def test_forecast_cycle_job_budget_and_replay_writes_no_file(spark, tmp_path):
-    """Each sink insert materializes its fresh rows once and counts
-    them in that pass: a fresh cycle against existing sinks runs at
-    most 13 Spark jobs, a replay at most 9, and a replay writes no
-    part file (empty or not) to either sink."""
+    """One pass checkpoints the forecast and observes the datetime
+    range both inserts prune with; each insert then broadcasts the
+    sink rows in that range, and materializes and counts its fresh
+    rows in one pass. A fresh cycle against existing sinks runs at
+    most 7 Spark jobs (one write per sink), a replay at most 5, and a
+    replay writes no part file (empty or not) to either sink."""
     model = _plumbing_model(spark)
     wpath, tpath = str(tmp_path / "weather"), str(tmp_path / "traffic")
     assert run_forecast_plane(spark, PAYLOAD[:1], model, wpath, tpath) == (1, 1)
@@ -177,12 +179,78 @@ def test_forecast_cycle_job_budget_and_replay_writes_no_file(spark, tmp_path):
 
     appended, fresh_jobs = jobs_of("forecast-budget-fresh")
     assert appended == (1, 1)
-    assert fresh_jobs <= 13
+    assert fresh_jobs <= 7
     files = (_parquet_files(wpath), _parquet_files(tpath))
     appended, replay_jobs = jobs_of("forecast-budget-replay")
     assert appended == (0, 0)
-    assert replay_jobs <= 9
+    assert replay_jobs <= 5
     assert (_parquet_files(wpath), _parquet_files(tpath)) == files
+
+
+@pytest.mark.slow
+def test_na_dropped_element_reaches_weather_not_traffic(spark, tmp_path):
+    """An element with a timestamp but no wind speed is a weather row
+    that the feature frame drops: the shared forecast range still
+    covers the smaller traffic batch, so a cycle appends (k, k-1) and
+    its replay (0, 0)."""
+    model = _plumbing_model(spark)
+    wpath, tpath = str(tmp_path / "weather"), str(tmp_path / "traffic")
+    assert run_forecast_plane(spark, PAYLOAD[:1], model, wpath, tpath) == (1, 1)
+    no_wind = {k: v for k, v in PAYLOAD[0].items() if k != "Wind"}
+    payload = PAYLOAD[1:] + [{**no_wind, "DateTime": "2015-06-01T15:00:00+02:00"}]
+    assert run_forecast_plane(spark, payload, model, wpath, tpath) == (2, 1)
+    assert run_forecast_plane(spark, payload, model, wpath, tpath) == (0, 0)
+    assert spark.read.parquet(wpath).count() == 3
+    assert spark.read.parquet(tpath).count() == 2
+
+
+@pytest.mark.slow
+def test_unparsable_payload_appends_nothing_and_scans_no_sink(spark, tmp_path, monkeypatch):
+    """A payload whose every DateTime is unparsable leaves an empty
+    forecast: the cycle appends (0, 0), writes no file and plans no
+    scan of either existing sink."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    model = _plumbing_model(spark)
+    wpath, tpath = str(tmp_path / "weather"), str(tmp_path / "traffic")
+    assert run_forecast_plane(spark, PAYLOAD[:1], model, wpath, tpath) == (1, 1)
+    files = (_parquet_files(wpath), _parquet_files(tpath))
+    read, scanned = DataFrameReader.parquet, []
+
+    def spy(self, *paths, **kw):
+        scanned.extend(paths)
+        return read(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    payload = [{**el, "DateTime": "not-a-date"} for el in PAYLOAD]
+    assert run_forecast_plane(spark, payload, model, wpath, tpath) == (0, 0)
+    assert scanned == []
+    assert (_parquet_files(wpath), _parquet_files(tpath)) == files
+
+
+def test_payload_is_one_jvm_partition(spark):
+    """The payload is a literal over a one-partition range: no Python
+    RDD scan, so no Python-worker task runs in the cycle."""
+    df = read_json_payload(spark, PAYLOAD)
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    for node in ("ExistingRDD", "Python", "LocalTableScan"):
+        assert node not in plan, plan
+    assert df._jdf.rdd().getNumPartitions() == 1  # noqa: SLF001
+
+
+def test_payload_flatten_rows(spark):
+    """One row per element in payload order, a missing nested field
+    as NULL, and an empty array as no rows under the same schema."""
+    partial = {"DateTime": "2015-06-01T15:00:00+02:00", "Temperature": {"Value": 20.0}}
+    df = read_json_payload(spark, PAYLOAD + [partial])
+    assert [tuple(r) for r in df.collect()] == [
+        ("2015-06-01T13:00:00+02:00", 71.0, "F", 12.3, False),
+        ("2015-06-01T14:00:00+02:00", 22.0, "C", 8.0, True),
+        ("2015-06-01T15:00:00+02:00", 20.0, None, None, None),
+    ]
+    empty = read_json_payload(spark, "[]")
+    assert empty.schema == df.schema
+    assert empty.collect() == []
 
 
 LOCATION_PAYLOAD = [

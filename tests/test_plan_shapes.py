@@ -386,6 +386,31 @@ def test_ivf_route_is_one_narrow_projection(spark):
     assert routed.count() == 12
 
 
+def test_forecast_fresh_rows_broadcasts_without_shuffle(spark, tmp_path):
+    """A forecast batch (one-partition payload, checkpointed as the
+    plane does) against an existing sink: the insert's final plan
+    dedups in place, with no hash exchange, and anti-joins against a
+    broadcast of the sink's range-pruned scan."""
+    import re
+
+    from traffic_forecast_etl_spark.plans.forecast import normalize_forecast
+    from traffic_forecast_etl_spark.sinks import fresh_rows, insert_if_absent
+    from traffic_forecast_etl_spark.sources.json_payload import read_json_payload
+
+    payload = [
+        {"DateTime": f"2015-06-01T{h:02d}:00:00+02:00", "Temperature": {"Value": 20.0, "Unit": "C"},
+         "Wind": {"Speed": {"Value": 5.0}}, "HasPrecipitation": False}
+        for h in range(12)
+    ]
+    forecast = normalize_forecast(read_json_payload(spark, payload)).localCheckpoint(eager=True)
+    batch = forecast.select("datetime", "temperature")
+    path = str(tmp_path / "weather")
+    assert insert_if_absent(spark, batch.limit(6), path, keys=["datetime"]) == 6
+    final = final_plan_of(fresh_rows(spark, batch, path, keys=["datetime"]))
+    assert "Exchange hashpartitioning" not in final, final
+    assert re.search(r"BroadcastHashJoin .*LeftAnti", final), final
+
+
 # Keys whose plans legitimately cross into Python — ALL Arrow-batched
 # (pandas_udf / applyInPandas / mapInPandas), each a documented
 # boundary where no native expression exists. Row-at-a-time

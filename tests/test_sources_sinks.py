@@ -334,6 +334,34 @@ def test_fresh_rows_probe_range_covers_dropped_duplicates(spark, tmp_path):
     assert sorted(r.k for r in out.collect()) == [11, 12]
 
 
+def test_fresh_rows_caller_range_matches_probe(spark, tmp_path):
+    """A caller-supplied range covering the batch, here the wider one
+    of a superset frame, returns the rows the probe would, for a key
+    and for a non-key range_key."""
+    from traffic_forecast_etl_spark.sinks import fresh_rows
+
+    path = str(tmp_path / "key_sink")
+    spark.range(0, 1000).selectExpr("id AS ts", "id * 2 AS v").write.parquet(path)
+    batch = spark.createDataFrame([(990, 1), (1005, 0), (990, 0)], "ts long, v long")
+    probed = {tuple(r) for r in fresh_rows(spark, batch, path, ["ts"]).collect()}
+    given = fresh_rows(spark, batch, path, ["ts"], batch_range=(950, 1100, 5))
+    assert probed == {(1005, 0)} == {tuple(r) for r in given.collect()}
+
+    path = str(tmp_path / "hash_sink")
+    spark.range(0, 100).selectExpr(
+        "xxhash64(id) AS date_id", "id AS datetime", "id * 2 AS v"
+    ).write.parquet(path)
+    batch = spark.range(95, 105).selectExpr(
+        "xxhash64(id) AS date_id", "id AS datetime", "id * 2 AS v"
+    )
+    probed = fresh_rows(spark, batch, path, ["date_id"], range_key="datetime")
+    given = fresh_rows(
+        spark, batch, path, ["date_id"], range_key="datetime", batch_range=(90, 110, 20)
+    )
+    assert sorted(r.datetime for r in probed.collect()) == list(range(100, 105))
+    assert sorted(r.datetime for r in given.collect()) == list(range(100, 105))
+
+
 def test_fresh_rows_empty_batch_reads_no_sink(spark, tmp_path):
     """An empty batch (every payload element rejected upstream) has no
     range to push: fresh_rows returns it without planning a scan of

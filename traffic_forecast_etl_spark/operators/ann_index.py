@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tablefmt as TF
-from ..sinks import acquire_writer_lease, release_writer_lease
+from ..sinks import _observed_checkpoint, acquire_writer_lease, release_writer_lease
 from .similarity import (
     _adc_refine_topk,
     _centroids,
@@ -309,16 +309,13 @@ def ann_index_search(
     model = _model_for_version(path, v)
     q = queries.select(F.col(query_id).alias("__qid"), _doubles(vec_col).alias("__qv"))
     # the probed set (<= n_centroids ints) is observed by the pass
-    # that checkpoints the routes, read off that query as
-    # sinks.insert_if_absent does; partition pruning then plans ONLY
+    # that checkpoints the routes; partition pruning then plans ONLY
     # these lists' files. A lost executor fails the search (read-only:
     # re-running it is safe)
-    observed = _route(q, model["centroids"], nprobe).observe(
-        _PROBED, F.collect_set("centroid_id").alias("ids")
+    probes, metrics = _observed_checkpoint(
+        _route(q, model["centroids"], nprobe), _PROBED, F.collect_set("centroid_id").alias("ids")
     )
-    probes = observed.localCheckpoint(eager=True)
-    metrics = observed._jdf.queryExecution().observedMetrics()  # noqa: SLF001
-    probed = sorted(int(c) for c in metrics.apply(_PROBED).getList(0))
+    probed = sorted(int(c) for c in metrics.getList(0))
     m_codes, entries = TF.snapshot_lookup_files(cpath, "centroid_id", probed, version=v)
     lists = TF._visible_read(spark, cpath, m_codes, entries)
     return _adc_refine_topk(probes, lists, model["codebooks"], k, int(k * refine), query_id)

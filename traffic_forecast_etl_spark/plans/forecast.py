@@ -7,12 +7,13 @@ INSERT into Weather → re-fetch (!) → pickle-load model → per-row
 INSERT into Traffic with a correlated scalar-subquery FK lookup.
 
 Engine shape: the payload is ingested ONCE (S4-S5) → cleaned/
-unit-normalized forecast frame (cached) → branch 1: idempotent
-insert into the weather sink; branch 2: model inference → FK as the
-weather key expression ``xxhash64(datetime)`` (J2 needs no join
-here, see run_forecast_plane) → idempotent insert into the traffic
-sink. Writes are set-based; re-running the whole plane is a no-op on
-both sinks (the ON CONFLICT contract, tested in
+unit-normalized forecast frame, checkpointed by one pass that also
+observes the datetime range both inserts prune with → branch 1:
+idempotent insert into the weather sink; branch 2: model inference
+→ FK as the weather key expression ``xxhash64(datetime)`` (J2 needs
+no join here, see run_forecast_plane) → idempotent insert into the
+traffic sink. Writes are set-based; re-running the whole plane is a
+no-op on both sinks (the ON CONFLICT contract, tested in
 tests/test_forecast.py).
 """
 
@@ -22,11 +23,12 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from ..functions.dates import calendar_features
 from ..functions.holidays_nl import is_nl_holiday
 from ..functions.units import fahrenheit_to_celsius, rescale_intensity
-from ..sinks import insert_if_absent
+from ..sinks import _observed_checkpoint, insert_if_absent
 from ..sources.json_payload import read_json_payload
 
 
@@ -51,22 +53,15 @@ def forecast_features(forecast: DataFrame) -> DataFrame:
     """The 8-feature frame the model expects, from a forecast frame —
     mirrors training-side feature engineering exactly (train/serve
     skew is the reference's documented risk, SURVEY §2.11)."""
-    df = forecast.withColumn("Date", F.col("datetime").cast("date"))
-    cal = calendar_features("Date")
-    df = (
-        df.withColumn("Month", cal["Month"])
-        .withColumn("Day", cal["Day"])
-        .withColumn("Hour", F.hour("datetime"))
-        .withColumn("DayofWeek", cal["DayofWeek"])
-        .withColumn("isHoliday", is_nl_holiday("Date"))
-    )
-    out = df.select(
+    date = F.col("datetime").cast("date")
+    cal = calendar_features(date)
+    out = forecast.select(
         "datetime",
-        "Month",
-        "Day",
-        "Hour",
-        "DayofWeek",
-        F.col("isHoliday").cast("double").alias("isHoliday"),
+        cal["Month"].alias("Month"),
+        cal["Day"].alias("Day"),
+        F.hour("datetime").alias("Hour"),
+        cal["DayofWeek"].alias("DayofWeek"),
+        is_nl_holiday(date).cast("double").alias("isHoliday"),
         F.col("wind_speed").cast("double").alias("Wind Speed"),
         F.col("temperature").cast("double").alias("Temperature"),
         F.col("precipitation").cast("double").alias("Precipitation"),
@@ -86,7 +81,14 @@ def run_forecast_plane(
 ) -> tuple[int, int]:
     """One micro-batch of the operational plane. Returns rows appended
     to (weather, traffic) — 0s on a re-run with the same payload."""
-    forecast = normalize_forecast(read_json_payload(spark, payload)).cache()
+    # traffic rows are a subset of the forecast rows, so one range
+    # covers both batches; fromInternal is what .first() returns
+    forecast, m = _observed_checkpoint(
+        normalize_forecast(read_json_payload(spark, payload)), "plans.forecast.range",
+        F.min(F.unix_micros("datetime")), F.max(F.unix_micros("datetime")), F.count(F.lit(1)),
+    )
+    ts = TimestampType().fromInternal
+    rng = (ts(m.get(0)), ts(m.get(1)), m.getLong(2))
 
     n_weather = insert_if_absent(
         spark,
@@ -98,6 +100,7 @@ def run_forecast_plane(
         ),
         weather_path,
         keys=["datetime"],
+        batch_range=rng,
     )
 
     pred = model.transform(forecast_features(forecast))
@@ -122,7 +125,6 @@ def run_forecast_plane(
     # nothing; datetime is sound as the pruning column because
     # date_id = xxhash64(datetime) is a function of it
     n_traffic = insert_if_absent(
-        spark, traffic, traffic_path, keys=["date_id"], range_key="datetime"
+        spark, traffic, traffic_path, keys=["date_id"], range_key="datetime", batch_range=rng
     )
-    forecast.unpersist()
     return n_weather, n_traffic

@@ -123,13 +123,14 @@ def fresh_rows(
     path: str,
     keys: Sequence[str],
     range_key: str | None = None,
+    batch_range: tuple | None = None,
 ) -> DataFrame:
     """The rows of ``batch`` (key-deduped) whose ``keys`` are absent
     from the sink at ``path`` — the plan ``insert_if_absent`` appends.
     Exposed so the pruning contract is testable: the existing-side
     scan must carry a pushed/partition filter on the batch's
     ``range_key`` range (see insert_if_absent docstring for why that
-    restriction is sound)."""
+    restriction is sound, and for a caller's ``batch_range``)."""
     deduped = batch.dropDuplicates(list(keys))
     if not _sink_exists(spark, path):
         return deduped
@@ -137,7 +138,7 @@ def fresh_rows(
     # the raw batch's range: dedup can only narrow it, and the probe
     # skips the dedup exchange. An empty batch has nothing to look up;
     # a batch of only null range values keeps the unfiltered scan
-    lo, hi, n = batch.agg(F.min(rk), F.max(rk), F.count(F.lit(1))).first()
+    lo, hi, n = batch_range or batch.agg(F.min(rk), F.max(rk), F.count(F.lit(1))).first()
     if not n:
         return deduped
     # project the range key too when it is not a key column (e.g. a
@@ -151,6 +152,17 @@ def fresh_rows(
     return deduped.join(existing, on=list(keys), how="left_anti")
 
 
+def _observed_checkpoint(df: DataFrame, name: str, *metrics) -> tuple:
+    """Eagerly local-checkpoint ``df``; return it and the JVM row of
+    ``metrics`` observed as ``name`` in that pass, read off its own
+    query: an ``Observation`` object registers with the session, which
+    (Spark 4.1) then fails to serialize once a model holds it (a
+    logistic regression's training summary): "Task not serializable"."""
+    observed = df.observe(name, *metrics)
+    out = observed.localCheckpoint(eager=True)
+    return out, observed._jdf.queryExecution().observedMetrics().apply(name)  # noqa: SLF001
+
+
 _FRESH_ROWS = "sinks.insert_if_absent.fresh_rows"
 
 
@@ -161,6 +173,7 @@ def insert_if_absent(
     keys: Sequence[str],
     partition_by: Sequence[str] | None = None,
     range_key: str | None = None,
+    batch_range: tuple | None = None,
 ) -> int:
     """Append rows of ``batch`` whose ``keys`` are not yet in the sink
     (exactly `INSERT ... ON CONFLICT DO NOTHING`). Returns the number
@@ -178,36 +191,30 @@ def insert_if_absent(
     dags/traffic_dag.py cadence) therefore scans O(batch window), not
     O(sink lifetime).
 
-    Soundness: when ``range_key`` is a key column, a sink row equal
-    to a batch row on ALL keys necessarily falls inside the batch's
-    range of it. A non-key ``range_key`` (e.g. the timestamp a
-    surrogate hash key derives from — the traffic sink's shape, where
-    a range on the hash itself prunes nothing) is sound iff its value
-    is functionally determined by the keys; that contract is the
-    caller's to uphold and is documented at the call site.
+    Soundness: any range covering the batch's ``range_key`` values is
+    sound; a wider one only admits more sink rows to the anti-join. A
+    sink row equal to a batch row on ALL keys falls inside the batch's
+    range of a key column. A non-key ``range_key`` (e.g. the timestamp
+    a surrogate hash key derives from — the traffic sink's shape,
+    where a range on the hash prunes nothing) is sound iff the keys
+    determine its value, as the call site documents. ``batch_range``,
+    a caller-observed ``(lo, hi, n)`` (e.g. of a superset frame),
+    replaces the probe job; ``n == 0`` returns 0 and scans no sink.
 
     The fresh rows are materialized and counted in one observed pass
     and appended only when there are any: a replay writes no file,
-    and a forecast-sized batch appends one.
+    and a forecast-sized batch appends one. A lost executor fails the
+    call; re-running it is a no-op for the rows already written.
     """
-    # the count is a named observation read off the checkpoint's own
-    # query: an ``Observation`` object would register with the
-    # session's observation manager, which (Spark 4.1) leaves the
-    # session unserializable, and a later model holding a session
-    # reference (a logistic regression's training summary) then fails
-    # with "Task not serializable". The checkpoint lives only between
-    # the count and the write: a lost executor fails this call, and
-    # re-running it is a no-op for the rows already written
-    observed = fresh_rows(spark, batch, path, keys, range_key).observe(
-        _FRESH_ROWS, F.count(F.lit(1)).alias("n")
+    if batch_range is not None and not batch_range[2]:
+        return 0
+    fresh, metrics = _observed_checkpoint(
+        fresh_rows(spark, batch, path, keys, range_key, batch_range), _FRESH_ROWS, F.count(F.lit(1))
     )
-    fresh = observed.localCheckpoint(eager=True)
-    metrics = observed._jdf.queryExecution().observedMetrics()  # noqa: SLF001
-    n = metrics.apply(_FRESH_ROWS).getLong(0)
+    n = metrics.getLong(0)
     if n:  # writing no rows would still leave an empty part file
         writer = fresh.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
     return n
-

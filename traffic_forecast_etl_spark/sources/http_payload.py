@@ -6,9 +6,9 @@ scheduler host (reference: dags/utils.py:153-178 — location lookup,
 then hourly forecast for the resolved location key). That is a
 DRIVER-side concern by design: the payload is a handful of KB, so it
 is fetched once on the driver and handed to
-:func:`..sources.json_payload.read_json_payload`, which parallelizes
-and flattens it JVM-side. Nothing here touches executors — at 100 TB
-the forecast payload is still a handful of KB.
+:func:`..sources.json_payload.read_json_payload`, which plans it as a
+string literal and flattens it JVM-side. Nothing here touches
+executors — at 100 TB the forecast payload is still a handful of KB.
 
 Transport is injectable: ``fetch_json(..., transport=...)`` takes any
 ``(url, params) -> bytes | str`` callable, so tests (and air-gapped

@@ -3,10 +3,11 @@
 The reference fetches an AccuWeather 12-hour hourly forecast and
 walks the JSON list element-by-element in Python
 (reference: dags/utils.py:174-194). Spark-first: the (tiny) payload
-is fetched once on the driver, parallelized, and flattened with
-``from_json`` + ``explode`` under an explicit nested StructType — the
-flattening runs JVM-side under codegen, and the same schema works for
-a streaming source (Kafka value column) unchanged.
+is fetched once on the driver, planned as a string literal over a
+one-row, one-partition range, and flattened with ``from_json`` +
+``explode`` under an explicit nested StructType — no Python worker
+runs, the flattening runs JVM-side under codegen, and the same schema
+works for a streaming source (Kafka value column) unchanged.
 """
 
 from __future__ import annotations
@@ -62,9 +63,9 @@ def read_json_payload(
     if not isinstance(payload, str):
         payload = json.dumps(payload)
     schema = schema or forecast_schema()
-    raw = spark.createDataFrame([(payload,)], "payload string")
     return (
-        raw.select(F.explode(F.from_json("payload", schema)).alias("e"))
+        spark.range(0, 1, 1, 1)
+        .select(F.explode(F.from_json(F.lit(payload), schema)).alias("e"))
         .select(
             F.col("e.DateTime").alias("datetime_raw"),
             F.col("e.Temperature.Value").alias("temperature_value"),
